@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.functions.JsonImpls.{quote => jstr}
 object Bench {
   def main(args: Array[String]): Unit = {
     // scale probes run each query in its OWN JVM: one OOM costs one row,
@@ -22,16 +22,11 @@ object Bench {
     */
   def summaryLine(total: Double, fastTotal: Double, nQueries: Int,
       nErrors: Int, cpus: Int, sfDir: String, isolate: Boolean): String = {
-    val sf = sfDir.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
     s"""{"metric":"total","value":$total,"unit":"sec","summary":true,""" +
       s""""value_fast_tier":$fastTotal,"value_oracle_tier":${total - fastTotal},""" +
       s""""n_queries":$nQueries,"n_errors":$nErrors,"cpus":$cpus,""" +
-      s""""isolate":$isolate,"sf":"$sf"}"""
+      s""""isolate":$isolate,"sf":${jstr(sfDir)}}"""
   }
-
-  private def envCpus(): Int =
-    sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toIntOption.getOrElse(-1)
 
   // deliberate-slow oracle fixtures (DECIMAL-routed sums, DF twins kept
   // for their exact unrolled-CTE oracles): split out of the fast-tier
@@ -46,25 +41,8 @@ object Bench {
 
   private def inProcess(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // SQL shuffles use UnsafeRow regardless; this speeds the RDD family
-      // (GraphX ctx, BFS point queries)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // compress RDD blocks when they serialize (disk spill of the
-      // MEMORY_AND_DISK graph/ctx caches): the round-14 sf10 probe
-      // measured a child spilling tens of GB of uncompressed boxed-long
-      // blocks into an 80 GB /tmp — lz4 shrinks exactly those 3-6×, and
-      // at cluster scale the same flag bounds per-executor spill dirs
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // pre-materialize the shared graph cache: the reference's benchmarks
     // also run against loaded storage (BASELINE.md measures query ops/s,
@@ -140,11 +118,6 @@ object Bench {
             (name, ts.head, ts(ts.size / 2), None)
         }
       }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     val ok = results.collect { case (k, v, _, None) => s"\"" + k + "\":" + v }
     val qs = ok.mkString("{", ",", "}")
     val med = results.collect { case (k, _, m, None) => s"\"" + k + "\":" + m }
@@ -157,10 +130,10 @@ object Bench {
     val fastTotal = results.collect { case (k, v, _, None) if !oracleTier(k) => v }.sum
     val json = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"warmup":$warmup,""" +
       s""""value_fast_tier":$fastTotal,"value_oracle_tier":${total - fastTotal},""" +
-      s""""queries":$qs,"queries_median":$med,"tier":$tiers$errJson,"sf":"$sfDir"}"""
+      s""""queries":$qs,"queries_median":$med,"tier":$tiers$errJson,"sf":${jstr(sfDir)}}"""
     println(json)
     println(summaryLine(total, fastTotal, results.size, errs.size,
-      envCpus(), sfDir, isolate = false))
+      cpus, sfDir, isolate = false))
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json)
     }
@@ -200,6 +173,7 @@ object Bench {
     * error for ITS query; every other row still gets timed.
     */
   private def isolated(): Unit = {
+    val cpus = GraftSession.cpus() // fail before forking on a bad SPARK_GRAFT_CPUS
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
@@ -213,11 +187,6 @@ object Bench {
     // item #7 calibration needs, recorded in the JSON so the evidence is
     // self-contained instead of parsed out of stderr
     val walls = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     names.foreach { name =>
       val out = java.nio.file.Files.createTempFile(s"bench_$name", ".json")
       // per-child spark.local.dir, deleted by THIS parent after the child
@@ -293,12 +262,12 @@ object Bench {
       else s""","errors":${errors.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")}"""
     val wj = walls.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val json = s"""{"metric":"total","value":$total,"unit":"sec","isolate":true,""" +
-      s""""queries":$qs,"queries_median":$md,"child_wall":$wj$errJson,"sf":"$sfDir"}"""
+      s""""queries":$qs,"queries_median":$md,"child_wall":$wj$errJson,"sf":${jstr(sfDir)}}"""
     println(json)
     val fastTotal = timings.collect {
       case (k, v) if !oracleTier(k) => v.toDouble }.sum
     println(summaryLine(total, fastTotal, timings.size, errors.size,
-      envCpus(), sfDir, isolate = true))
+      cpus, sfDir, isolate = true))
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json)
     }

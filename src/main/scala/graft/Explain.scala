@@ -25,7 +25,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outPath) = args.take(2)
     val all = args.contains("--all")
-    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
+    val spark = GraftSession.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (all) {
       // full-corpus plan audit (optimization rounds): one file per query so

@@ -2,15 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard config.
+/** The one session factory: the server, Bench, Verify, the dev profilers,
+  * the tests and perfbench all build their SparkSession here, so the
+  * oracle and the benchmarks check the config the server serves.
   *
-  * Tuned for the driver's local[32] harness but cluster-safe: AQE on (runtime
-  * shuffle-partition coalescing + skew-join splitting), broadcast threshold
-  * raised so every TESTDATA dimension table broadcasts, shuffle partitions
-  * sized for the local core count rather than the 200 default.
+  * Cluster-safe: AQE on (runtime shuffle-partition coalescing + skew-join
+  * splitting), broadcast threshold raised so every TESTDATA dimension
+  * table broadcasts, shuffle partitions sized for the local core count
+  * rather than the 200 default.
   */
 object GraftSession {
-  def builder(master: String = "local[*]", cpus: Int = 32): SparkSession.Builder =
+  def builder(master: String, cpus: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -22,7 +24,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Cypher/APOC map semantics: duplicate keys resolve to the LAST
-      // value (Go map overwrite), not an ANSI error
+      // value (Go map overwrite), not an ANSI error. The planner's
+      // map_concat / map_from_entries compilations rely on it.
       .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
       // compress serialized RDD blocks (disk spill of the MEMORY_AND_DISK
       // graph/ctx caches): boxed-long graph RDDs shrink 3-6× under lz4,
@@ -30,8 +33,24 @@ object GraftSession {
       .config("spark.rdd.compress", "true")
       .config("spark.ui.enabled", "false")
 
+  /** Local core count from `SPARK_GRAFT_CPUS`, defaulting to the
+    * machine's available processors. */
+  def cpus(env: collection.Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS") match {
+      case None => Runtime.getRuntime.availableProcessors()
+      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
+  /** `local[n]` session sized by [[cpus]]. */
+  def local(): SparkSession.Builder = {
+    val n = cpus()
+    builder(s"local[$n]", n)
+  }
+
   def get(): SparkSession = {
-    val s = builder().getOrCreate()
+    val s = local().getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -1080,11 +1080,16 @@ object Planner {
     case Lit(null) => lit(null)
     case Lit(v) => lit(v)
     case Param(n) =>
-      params.get(n) match {
-        case Some(v: Seq[_]) => array(v.map(x => lit(x)): _*)
-        case Some(v) => lit(v)
-        case None => throw new IllegalArgumentException(s"missing parameter $$n")
+      // lists → array, maps → struct with key-sorted fields (so the maps of
+      // a list share one struct type whatever their key order), else lit
+      def bind(v: Any): Column = v match {
+        case xs: Seq[_] => array(xs.map(bind): _*)
+        case m: Map[_, _] =>
+          struct(m.toSeq.map { case (k, x) => (k.toString, x) }.sortBy(_._1)
+            .map { case (k, x) => bind(x).as(k) }: _*)
+        case x => lit(x)
       }
+      bind(params.getOrElse(n, throw new IllegalArgumentException(s"missing parameter $$n")))
     case Variable(v) if lambdaEnv.value.contains(v) => lambdaEnv.value(v)
     case Variable(v) => f.kinds.get(v) match {
       case Some(NodeK) => struct(nodeFields.map(fld => col(s"${v}_$fld").as(fld)): _*)
@@ -2323,9 +2328,7 @@ object Planner {
           // time by field name (right wins), true maps via map_concat
           (f.df.select(a(0)).schema.head.dataType,
             f.df.select(a(1)).schema.head.dataType) match {
-            case (_: org.apache.spark.sql.types.MapType, _) =>
-              f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-              map_concat(a(0), a(1))
+            case (_: org.apache.spark.sql.types.MapType, _) => map_concat(a(0), a(1))
             case (_: org.apache.spark.sql.types.ArrayType, _) => concat(a(0), a(1))
             case (s1: org.apache.spark.sql.types.StructType,
                   s2: org.apache.spark.sql.types.StructType) =>
@@ -2368,18 +2371,14 @@ object Planner {
         case "apoc.map.keys" => map_keys(a(0))
         case "apoc.map.dropnullvalues" => map_filter(a(0), (_, v) => v.isNotNull)
         case "apoc.map.mergelist" => // later maps win (map.go:81)
-          f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
           map_from_entries(flatten(transform(a(0), m => map_entries(m))))
         case "apoc.map.setlists" => // zip keys/values onto m (map.go:137)
-          f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
           map_concat(a(0), map_from_arrays(
             transform(a(1), k => k.cast("string")), a(2)))
         case "apoc.map.setpairs" => // [[k,v]…] onto m (map.go:117)
-          f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
           map_concat(a(0), map_from_entries(transform(a(1),
             p => struct(element_at(p, 1).cast("string"), element_at(p, 2)))))
         case "apoc.map.setvalues" => // alternating [k1,v1,k2,v2…] (map.go:160)
-          f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
           map_concat(a(0), map_from_entries(
             transform(sequence(lit(1), (size(a(1)) / 2).cast("int")), i =>
               struct(element_at(a(1), i * 2 - 1).cast("string"),
@@ -2482,7 +2481,6 @@ object Planner {
               col(s"${v}_properties")
             case other => compile(other, f, params).getField("properties")
           }
-          f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
           map_concat(props, map(a(1).cast("string"), to_json(parse_json(a(2).cast("string")))))
         case "apoc.convert.totree" => throw new IllegalArgumentException(
           "apoc.convert.toTree is procedure-shaped (row set → nested tree); " +
@@ -2507,7 +2505,6 @@ object Planner {
           map_values(from_json(a(0),
             org.apache.spark.sql.types.DataType.fromDDL("map<string,variant>")))
         case "apoc.json.merge" => // later objects win; sorted-key render
-          f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
           val vm = org.apache.spark.sql.types.DataType.fromDDL("map<string,variant>")
           to_json(parse_json(to_json(args.map(x =>
             from_json(compile(x, f, params), vm)).reduce((x, y) => map_concat(x, y)))))
@@ -2637,7 +2634,6 @@ object Planner {
         case "apoc.diff.merge" => // strategy ∈ prefer_new|prefer_old|combine
           val strategy = args.lift(2).collect { case Lit(s: String) => s }
             .getOrElse("prefer_new")
-          f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
           strategy match {
             case "prefer_old" => map_concat(a(1), a(0))
             case "combine" => // numbers add, strings concat, lists concat
@@ -2776,7 +2772,6 @@ object Planner {
           // of our path struct — disclosed vs paths.go interleaving)
           a(0).getField("path")
         case "apoc.merge.conditional" => // merge only when cond (merge.go:260)
-          f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
           when(a(1), map_concat(a(0), a(2))).otherwise(a(0))
         case "apoc.merge.validate" => // conflicting keys (merge.go:312)
           val ks = array_intersect(map_keys(a(0)), map_keys(a(1)))
@@ -2785,7 +2780,6 @@ object Planner {
               !(element_at(a(0), k) <=> element_at(a(1), k)))).as("conflicts"),
             size(map_keys(a(1))).as("incoming"))
         case "apoc.merge.preview" => // merged result WITHOUT applying
-          f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
           map_concat(a(0), a(1))
         case "apoc.merge.snapshot" => a(0) // immutable copy (merge.go:376)
         case "apoc.merge.rollback" => a(1) // restore the snapshot (merge.go:361)
@@ -3287,11 +3281,9 @@ object Planner {
                 sort_array(filter(array_intersect(k1, k2),
                   k => element_at(m1, k) <=> element_at(m2, k))).as("unchanged"))
             case "apoc.node.setproperty" =>
-              f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
               updatedNode(args.head, identity,
                 p => map_concat(p, map(a(1).cast("string"), a(2).cast("string"))))
             case "apoc.node.setproperties" =>
-              f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
               updatedNode(args.head, identity,
                 p => map_concat(p, a(1).cast("map<string,string>")))
             case "apoc.node.removeproperty" =>
@@ -3309,11 +3301,9 @@ object Planner {
             case "apoc.node.removelabels" =>
               updatedNode(args.head, l => array_except(l, a(1)), identity)
             case "apoc.rel.setproperty" =>
-              f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
               relStruct(args.head, fieldOf(args.head, "src"), fieldOf(args.head, "dst"),
                 map_concat(props0(args.head), map(a(1).cast("string"), a(2).cast("string"))))
             case "apoc.rel.setproperties" =>
-              f.df.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
               relStruct(args.head, fieldOf(args.head, "src"), fieldOf(args.head, "dst"),
                 map_concat(props0(args.head), a(1).cast("map<string,string>")))
             case "apoc.rel.removeproperty" =>

@@ -56,13 +56,6 @@ object HttpEmbedder {
   // one client per JVM (driver and each executor)
   @transient private lazy val http = HttpClient.newHttpClient()
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
   private def post(cfg: HttpEmbedderConfig, body: String): String = {
     val b = HttpRequest.newBuilder(URI.create(cfg.apiUrl + cfg.apiPath))
       .header("Content-Type", "application/json")
@@ -87,14 +80,14 @@ object HttpEmbedder {
       dim: Int): Seq[Seq[Double]] = cfg.provider match {
     case "ollama" => // one request per text (embed.go:446-457)
       texts.map { t =>
-        val body = s"""{"model":${jstr(cfg.model)},"prompt":${jstr(t)}}"""
+        val body = s"""{"model":${J.quote(cfg.model)},"prompt":${J.quote(t)}}"""
         val n = J.parse(post(cfg, body)).getOrElse(
           throw new IllegalStateException("ollama: unparseable response"))
         vecOf(n.get("embedding"), dim, "ollama")
       }
     case "openai" => // one true batch request (embed.go:724-800)
-      val body = s"""{"model":${jstr(cfg.model)},"input":[${
-        texts.map(jstr).mkString(",")}]}"""
+      val body = s"""{"model":${J.quote(cfg.model)},"input":[${
+        texts.map(J.quote).mkString(",")}]}"""
       val n = J.parse(post(cfg, body)).getOrElse(
         throw new IllegalStateException("openai: unparseable response"))
       val data = n.get("data")
@@ -114,7 +107,7 @@ object HttpEmbedder {
       // `{"embedding":[...]}` or the list form
       // `[{"embedding":[[...]]}]` (newer servers batch by rows)
       texts.map { t =>
-        val body = s"""{"content":${jstr(t)}}"""
+        val body = s"""{"content":${J.quote(t)}}"""
         val n = J.parse(post(cfg, body)).getOrElse(
           throw new IllegalStateException("llamacpp: unparseable response"))
         val node =

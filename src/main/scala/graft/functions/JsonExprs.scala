@@ -69,7 +69,9 @@ object JsonImpls {
     case _ => sb.append("null")
   }
 
-  private def quote(s: String): String = {
+  /** JSON string literal for `s`: quote, backslash and every control
+    * character escaped. The one JSON string escaper of the engine. */
+  def quote(s: String): String = {
     val sb = new StringBuilder("\"")
     s.foreach {
       case '"' => sb.append("\\\"")

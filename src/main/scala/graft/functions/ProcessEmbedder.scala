@@ -69,7 +69,7 @@ object ProcessEmbedder {
     val proc = procFor(command)
     // serialize per process: one in-flight request per pipe
     proc.synchronized {
-      proc.in.write(jsonString(text))
+      proc.in.write(JsonImpls.quote(text))
       proc.in.newLine()
       proc.in.flush()
       val line = proc.out.readLine()
@@ -80,13 +80,6 @@ object ProcessEmbedder {
       vec
     }
   }
-
-  private def jsonString(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
 
   private def parseArray(line: String): Seq[Double] = {
     val t = line.trim

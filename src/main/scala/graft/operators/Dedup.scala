@@ -207,15 +207,15 @@ object Dedup {
     *
     * Returns (doc_id, cluster_id, canonical) for every doc in a cluster.
     */
-  def dedupClusters(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
+  def dedupClusters(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("a").as("x"), col("b").as("y"))
       .union(pairs.select(col("b").as("x"), col("a").as("y"))).cache()
     var labels = edges.select(col("x").as("doc_id")).distinct()
       .withColumn("lbl", col("doc_id")).localCheckpoint(true)
+    // no round cap: a component needs as many rounds as its diameter, and
+    // stopping earlier returns it split in two
     var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
-      it += 1
+    while (changed > 0) {
       val neighborMin = edges
         .join(labels.select(col("doc_id").as("y"), col("lbl").as("nlbl")), "y")
         .groupBy(col("x").as("doc_id")).agg(min(col("nlbl")).as("nmin"))

@@ -35,21 +35,14 @@ final case class HttpRerankerConfig(apiUrl: String, model: String = "",
 
 final class HttpReranker(config: HttpRerankerConfig) {
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
   /** One batched scoring call: documents in candidate order → one score
     * per document (rerank.go:206). Throws on any HTTP/parse failure; the
     * encoder catches and falls back.
     */
   def score(query: String, documents: Seq[String]): Seq[Double] = {
     val body =
-      s"""{"query":${jstr(query)},"documents":[${documents.map(jstr).mkString(",")}],""" +
-        s""""model":${jstr(config.model)},"top_n":${documents.size}}"""
+      s"""{"query":${J.quote(query)},"documents":[${documents.map(J.quote).mkString(",")}],""" +
+        s""""model":${J.quote(config.model)},"top_n":${documents.size}}"""
     val b = HttpRequest.newBuilder(URI.create(config.apiUrl))
       .header("Content-Type", "application/json")
       .timeout(java.time.Duration.ofMillis(config.timeoutMs))

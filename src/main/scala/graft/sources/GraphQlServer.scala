@@ -9,6 +9,7 @@ import org.apache.spark.sql.Row
 
 import graft.cypher.{Cypher, CypherWrite}
 import graft.graph.GraphStore
+import graft.functions.JsonImpls.quote
 
 /** GraphQL endpoint over the engine — the reference schema's Query core
   * plus the node/relationship mutation families
@@ -1119,11 +1120,7 @@ final class GraphQlServer(store: GraphStore, port: Int = 0,
 
   // ======================================================= helpers =======
 
-  private def jstr(s: String): String =
-    "\"" + Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
+  private def jstr(s: String): String = quote(Option(s).getOrElse(""))
 
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)

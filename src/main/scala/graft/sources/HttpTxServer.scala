@@ -7,6 +7,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.cypher.{Cypher, CypherWrite}
 import graft.graph.GraphStore
+import graft.functions.JsonImpls.{quote => jstr}
 
 /** Thin Neo4j HTTP transaction-API endpoint — the implicit-transaction
   * route a stock HTTP client uses (behavioral spec
@@ -426,12 +427,6 @@ final class HttpTxServer(store: GraphStore, port: Int = 0,
         respond(ex, 405, """{"error":"GET, POST, PUT, or DELETE required"}""")
     }
   }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
 
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)

@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.Embedder
 import graft.graph.GraphStore
+import graft.functions.JsonImpls.{quote => jstr}
 
 /** Thin MCP (Model Context Protocol) endpoint — the memory-graph tool
   * surface (behavioral spec `/root/reference/pkg/mcp/server.go:41-42,
@@ -430,12 +431,6 @@ final class McpServer(store: GraphStore, port: Int = 0,
     if (s == "done") "completed" else s
 
   // ================================================== tiny JSON lite =====
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
 
   private def strField(body: String, key: String): Option[String] =
     ServerAuth.strField(body, key)

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.HttpExchange
+import graft.functions.JsonImpls.{quote => jstr}
 
 /** Request-validation middleware shared by every HTTP surface —
   * behavioral spec `/root/reference/pkg/security/validation.go` +
@@ -178,13 +179,6 @@ object RequestValidation {
       }
     None
   }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
 
   /** Wrap a handler: refuse invalid requests before it runs. */
   def guard(allowedTypes: Seq[String] = Nil, isDevelopment: Boolean = true,

@@ -12,6 +12,7 @@ import graft.cypher.SearchCallProcs
 import graft.functions.{Embedder, VectorFns}
 import graft.graph.GraphStore
 import graft.operators.Privacy
+import graft.functions.JsonImpls.quote
 
 /** The reference server's plain-REST surface, served beside the
   * transaction API on the same JDK HttpServer (route table:
@@ -132,11 +133,7 @@ final class RestApi(store: GraphStore,
     sb.toString
   }
 
-  private def jstr(s: String): String =
-    "\"" + Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
+  private def jstr(s: String): String = quote(Option(s).getOrElse(""))
 
   /** Property values round-trip as their JSON form when they parse as a
     * scalar (the reference's map[string]interface{} properties).

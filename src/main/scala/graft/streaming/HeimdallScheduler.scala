@@ -9,6 +9,7 @@ import scala.collection.concurrent.TrieMap
 import com.sun.net.httpserver.HttpExchange
 
 import graft.graph.GraphStore
+import graft.functions.JsonImpls.{quote => jstr}
 
 /** Heimdall — the scheduled cognitive-guardian subsystem
   * (`/root/reference/pkg/heimdall/`): periodic analysis tasks over the
@@ -82,10 +83,6 @@ final class HeimdallScheduler(store: GraphStore,
 
   def connectionCount: Int = clients.size
   def isConnected: Boolean = clients.nonEmpty
-
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t") + "\""
 
   private def sseWrite(out: OutputStream, json: String): Boolean =
     try {

@@ -41,9 +41,9 @@ final class HttpAnalyst(config: HttpAnalystConfig)
   def analyze(task: String, context: String): String =
     try {
       val body =
-        s"""{"model":${HttpAnalyst.jstr(config.model)},"messages":[{"role":"system","content":${
-          HttpAnalyst.jstr(config.systemPrompt)}},{"role":"user","content":${
-          HttpAnalyst.jstr(s"[$task] $context")}}],"temperature":${
+        s"""{"model":${J.quote(config.model)},"messages":[{"role":"system","content":${
+          J.quote(config.systemPrompt)}},{"role":"user","content":${
+          J.quote(s"[$task] $context")}}],"temperature":${
           config.temperature},"max_tokens":${config.maxTokens}}"""
       val b = HttpRequest.newBuilder(URI.create(config.apiUrl + config.apiPath))
         .header("Content-Type", "application/json")
@@ -74,11 +74,4 @@ final class HttpAnalyst(config: HttpAnalystConfig)
 object HttpAnalyst {
   // one client per JVM — the analyst runs on the driver only
   private lazy val http = HttpClient.newHttpClient()
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
 }

@@ -132,4 +132,22 @@ class ApocGraphSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("zero-egress"))
   }
+
+  // last: building its own store makes it GraphStore.currentStore, the
+  // store the label procedures above write to
+  test("component procedures converge on a chain longer than 10 hops") {
+    val g = GraphQueries.graph(spark, sf)
+    val chain = new GraphStore(PropertyGraph(
+      g.nodes.filter("false").localCheckpoint(true),
+      g.edges.filter("false").localCheckpoint(true)))
+    CypherWrite.execute(chain, "UNWIND range(1, 15) AS i CREATE (:Step {key: i})")
+    CypherWrite.execute(chain,
+      "MATCH (a:Step), (b:Step) WHERE b.key = a.key + 1 CREATE (a)-[:NEXT]->(b)")
+    def q(c: String) = Cypher.run(chain.snapshot, c).collect().map(_.toSeq.toSeq).toSeq
+    assert(q("CALL apoc.community.numComponents('NEXT') YIELD value RETURN value")
+      == Seq(Seq(1L)))
+    assert(q("""CALL apoc.community.weaklyConnectedComponents('NEXT')
+                YIELD id, component RETURN component, count(*) AS n""").map(_(1))
+      == Seq(15L))
+  }
 }

@@ -47,5 +47,8 @@ class BenchSummarySpec extends AnyFunSuite {
   test("sf path with quotes/backslashes is escaped") {
     val line = Bench.summaryLine(1.0, 1.0, 1, 0, 4, "a\"b\\c", isolate = false)
     assert(line.contains(""""sf":"a\"b\\c""""))
+    val ctl = Bench.summaryLine(1.0, 1.0, 1, 0, 4, "x\ny\tz", isolate = false)
+    assert(!ctl.exists(_ < ' '), ctl)
+    assert(ctl.contains(""""sf":"x\ny\tz""""))
   }
 }

@@ -26,6 +26,22 @@ class CypherWriteSpec extends AnyFunSuite {
     assert(back.toSeq == Seq((9001L, "9001"), (9002L, "9002"), (9003L, "9003")))
   }
 
+  test("UNWIND over a list-of-maps parameter binds each map as a row") {
+    val store = freshStore()
+    val rows = Seq(
+      Map("key" -> 9101L, "text" -> "alpha"),
+      Map("text" -> "beta", "key" -> 9102L), // other key order, same row type
+      Map("key" -> 9103L, "text" -> "gamma"))
+    val r = CypherWrite.execute(store,
+      "UNWIND $rows AS r CREATE (m:Memory {key: r.key, text: r.text})",
+      Map("rows" -> rows))
+    assert(r.nodesCreated == 3)
+    val back = Cypher.run(store.snapshot,
+      "MATCH (m:Memory) RETURN m.key AS k, m.text AS t ORDER BY k")
+      .collect().map(row => (row.getLong(0), row.getString(1)))
+    assert(back.toSeq == Seq((9101L, "alpha"), (9102L, "beta"), (9103L, "gamma")))
+  }
+
   test("MERGE is create-if-missing with ON CREATE SET / ON MATCH SET") {
     val store = freshStore()
     CypherWrite.execute(store, "CREATE (p:Person {key: 1, name: 'alice'})")
