@@ -219,8 +219,14 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
         .foreach(r => fanOut(GraphStore.GraphChange(kind, r.getString(0),
           Nil, Option(r.getString(1)))))
 
+  /** Commit `g` as the next version. Writers serialize per store: every
+    * public mutation holds the store monitor for its whole body (probe,
+    * bucket rewrite, this swap), so no commit is built on a frame another
+    * writer has since replaced. Readers never lock — they read the
+    * volatile `current`.
+    */
   private def swap(g: PropertyGraph,
-      parts: Map[String, DataFrame] = Map.empty): Unit = synchronized {
+      parts: Map[String, DataFrame] = Map.empty): Unit = {
     versionCounter += 1
     wal.foreach { w =>
       if (parts.nonEmpty) w.commitDelta(versionCounter, parts)
@@ -238,9 +244,9 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     current =
       if (versionCounter % 6 == 0)
         PropertyGraph(
-          if (nodeBuckets.isDefined || (g.nodes eq old.nodes)) g.nodes
+          if (nodeSide.buckets.isDefined || (g.nodes eq old.nodes)) g.nodes
           else g.nodes.transform(GraphStore.pin),
-          if (edgeBuckets.isDefined || (g.edges eq old.edges)) g.edges
+          if (edgeSide.buckets.isDefined || (g.edges eq old.edges)) g.edges
           else g.edges.transform(GraphStore.pin))
       else g
   }
@@ -253,7 +259,8 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
   // store. Id-equality reads on the write path (duplicate-id checks, WAL
   // delta rows, change events) prune to the same touched buckets. The WAL
   // below is untouched: deltas stay row-keyed (`wal_engine.go:28-45`
-  // recovery shape preserved). Read-only stores never bucketize.
+  // recovery shape preserved). Read-only stores never bucketize. One
+  // committer ([[Side]]) serves both the node and the edge frame.
 
   /** Target rows per bucket: bucket count adapts to store size (4..64 in
     * local mode; a cluster deployment sizes this to its file-granularity
@@ -263,32 +270,15 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     */
   private val bucketTargetRows = 200000L
 
-  /** A store splits into real buckets only after this many committed
-    * mutations — one-shot and short write bursts (most analytics queries
-    * that build + mutate a store once) stay on the whole-frame path and
-    * never pay the bucket materialization; long-lived stores (the server,
-    * ingest jobs) cross it immediately and amortize. WAL-replayed stores
-    * resume with their full version count, so a reopened server
-    * bucketizes on its first write.
+  /** A side splits into real buckets only after this many committed keyed
+    * mutations on it — one-shot and short write bursts (most analytics
+    * queries that build + mutate a store once) stay on the whole-frame
+    * path and never pay the bucket materialization; long-lived stores (the
+    * server, ingest jobs) cross it after a few writes and amortize. The
+    * counters start at 0 on every store, a WAL-replayed one included, so
+    * a reopened server defers its first writes like a fresh store.
     */
-  private val bucketizeAfter =
-    sys.props.get("graft.store.bucketizeAfter").map(_.toLong).getOrElse(3L)
-
-  /** First-touch materialization policy for still-pure buckets (see the
-    * comment in [[rewriteNodeBuckets]]); `graft.store.firstTouchLazy=true`
-    * switches a first touch to a plain +1 depth layer — an A/B flag for
-    * the round-15 write-family measurements.
-    */
-  private val firstTouchEager =
-    !sys.props.get("graft.store.firstTouchLazy").contains("true")
-  private var bucketizeNodesAt: Long = bucketizeAfter
-  private var bucketizeEdgesAt: Long = bucketizeAfter
-  // committed keyed mutations per side (a delete that touches only nodes
-  // must not push the edge side toward bucketization)
-  private var nodeCommits = 0L
-  private var edgeCommits = 0L
-  private def nodesDeferred: Boolean = nodeCommits < bucketizeNodesAt
-  private def edgesDeferred: Boolean = edgeCommits < bucketizeEdgesAt
+  private val bucketizeAfter = 3L
 
   /** Bucket vector: the per-bucket frames plus — after a LAZY conversion —
     * the frozen pre-conversion parent and the set of buckets still
@@ -296,10 +286,10 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * lets (a) every read compose all still-pure buckets as ONE filtered
     * scan of the parent instead of nBuckets per-bucket scans, and (b) the
     * conversion skip materializing any bucket up front — a bucket only
-    * materializes once mutations actually stack layers on it. Crossing
-    * the deferral bound therefore costs at most one checkpoint of the
-    * frame the store already holds, never a full-frame × nBuckets
-    * rewrite — at 100 TB the conversion is a metadata event, not a scan.
+    * materializes when a mutation first touches it. Crossing the deferral
+    * bound therefore costs at most one checkpoint of the frame the store
+    * already holds, never a full-frame × nBuckets rewrite — at 100 TB the
+    * conversion is a metadata event, not a scan.
     */
   private final case class BucketVec(parent: Option[DataFrame],
       pure: Set[Int], bs: IndexedSeq[DataFrame]) {
@@ -311,13 +301,6 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
       BucketVec(None, Set.empty, IndexedSeq(df))
   }
 
-  @volatile private var nodeBuckets: Option[BucketVec] = None
-  @volatile private var edgeBuckets: Option[BucketVec] = None
-  // un-materialized mutation layers stacked per bucket; a bucket
-  // re-checkpoints when its depth reaches the bound, so lineage stays flat
-  // without ever rewriting untouched buckets
-  private var nodeDepth: Array[Int] = Array.empty
-  private var edgeDepth: Array[Int] = Array.empty
   private val maxDepth = 4
 
   private def bucketColFor(n: Int)(c: Column): Column =
@@ -358,43 +341,92 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     BucketVec(Some(parent), (0 until n).toSet, views)
   }
 
-  private def ensureNodeBuckets(): BucketVec = synchronized {
-    nodeBuckets match {
+  /** One side (the node or the edge frame) of the bucketed copy-on-write
+    * committer: its bucket vector, per-bucket layer depths and deferral
+    * clock. Every method runs with the store monitor held — each public
+    * mutation holds it for its whole body.
+    */
+  private final class Side(frame: PropertyGraph => DataFrame) {
+    var buckets: Option[BucketVec] = None
+    // un-materialized mutation layers stacked per bucket; a bucket
+    // re-checkpoints when its depth reaches the bound, so lineage stays flat
+    // without ever rewriting untouched buckets
+    private var depth: Array[Int] = Array.empty
+    // committed keyed mutations on this side (a delete that touches only
+    // nodes must not push the edge side toward bucketization)
+    private var commits = 0L
+    private var bucketizeAt = bucketizeAfter
+    private def deferred: Boolean = commits < bucketizeAt
+
+    def ensure(): BucketVec = buckets match {
       // still under the deferral bound (single whole-frame "bucket"), or
       // already split — keep as is
-      case Some(v) if v.size > 1 || nodesDeferred => v
-      case Some(v) => // crossed the bound: split the whole-frame bucket
-        val nv = bucketize(v.bs.head)
-        nodeDepth = Array.fill(nv.size)(0)
-        nodeBuckets = Some(nv)
-        nv
-      case None =>
-        val v =
-          if (nodesDeferred) BucketVec.whole(current.nodes)
-          else bucketize(current.nodes)
-        nodeDepth = Array.fill(v.size)(0)
-        nodeBuckets = Some(v)
+      case Some(v) if v.size > 1 || deferred => v
+      // first keyed write (from the current frame), or crossed the bound
+      // (split the whole-frame bucket)
+      case old =>
+        val whole = old.fold(frame(current))(_.bs.head)
+        val v = if (deferred) BucketVec.whole(whole) else bucketize(whole)
+        depth = Array.fill(v.size)(0)
+        buckets = Some(v)
         v
+    }
+
+    def conformInsert(rows: DataFrame): DataFrame = {
+      val (v, r) = widenSchemas(ensure(), rows)
+      buckets = Some(v); r
+    }
+
+    /** Rewrite exactly the touched buckets through `f(bucketId, frame)`,
+      * re-materializing a bucket only when its stacked-layer depth hits
+      * the bound. Returns the new bucket vector (also installed).
+      */
+    def rewrite(touched: Set[Int])(f: (Int, DataFrame) => DataFrame): BucketVec = {
+      val v = ensure()
+      val nb = v.bs.zipWithIndex.map { case (df, b) =>
+        if (!touched(b)) df
+        else {
+          val nf = f(b, df)
+          // a still-pure bucket materializes on its FIRST touch: its view
+          // lineage re-scans the whole parent on every later read, so one
+          // O(bucket) checkpoint now buys O(bucket) reads from here on —
+          // while buckets never touched stay views and never pay anything
+          // (measured across the write family at sf0.1: this beats both
+          // the defer-to-depth-bound and the materialize-on-second-touch
+          // variants on total wall-clock)
+          depth(b) = if (v.pure(b) && v.size > 1) maxDepth else depth(b) + 1
+          if (depth(b) >= maxDepth) {
+            depth(b) = 0
+            // coalesce BEFORE materializing: layers accumulate partitions
+            // (union appends, broadcast joins preserve) and localCheckpoint
+            // would freeze the growth unbounded
+            nf.coalesce(bucketParts(nf, v.size)).transform(GraphStore.pin)
+          } else nf
+        }
+      }
+      // a touched bucket is no longer the parent view; once nothing is
+      // pure the parent drops out of the read path entirely
+      val pure2 = v.pure -- touched
+      val nv = BucketVec(if (pure2.isEmpty) None else v.parent, pure2, nb)
+      buckets = Some(nv)
+      commits += 1
+      nv
+    }
+
+    /** Wholesale rewrites and transaction commits replace the frame
+      * outside the committer — drop back to unbucketed mode (the next
+      * keyed mutation re-buckets).
+      */
+    def invalidate(): Unit = {
+      buckets = None
+      // restart the deferral clock: a store that keeps doing wholesale
+      // rewrites (refactor-heavy sessions) must not thrash re-bucketization
+      bucketizeAt = commits + bucketizeAfter
     }
   }
 
-  private def ensureEdgeBuckets(): BucketVec = synchronized {
-    edgeBuckets match {
-      case Some(v) if v.size > 1 || edgesDeferred => v
-      case Some(v) =>
-        val nv = bucketize(v.bs.head)
-        edgeDepth = Array.fill(nv.size)(0)
-        edgeBuckets = Some(nv)
-        nv
-      case None =>
-        val v =
-          if (edgesDeferred) BucketVec.whole(current.edges)
-          else bucketize(current.edges)
-        edgeDepth = Array.fill(v.size)(0)
-        edgeBuckets = Some(v)
-        v
-    }
-  }
+  private val nodeSide = new Side(_.nodes)
+  private val edgeSide = new Side(_.edges)
 
   /** Full frame of a bucket vector: all still-pure buckets come back as
     * ONE filtered scan of the parent (an unfiltered scan when every
@@ -469,91 +501,6 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     (widened, aligned)
   }
 
-  private def conformNodeInsert(rows: DataFrame): DataFrame = synchronized {
-    val (nbs, r) = widenSchemas(ensureNodeBuckets(), rows)
-    nodeBuckets = Some(nbs); r
-  }
-
-  private def conformEdgeInsert(rows: DataFrame): DataFrame = synchronized {
-    val (ebs, r) = widenSchemas(ensureEdgeBuckets(), rows)
-    edgeBuckets = Some(ebs); r
-  }
-
-  /** Rewrite exactly the touched buckets through `f(bucketId, frame)`,
-    * re-materializing a bucket only when its stacked-layer depth hits the
-    * bound. Returns the new bucket vector (also installed).
-    */
-  private def rewriteNodeBuckets(touched: Set[Int])(
-      f: (Int, DataFrame) => DataFrame): BucketVec = synchronized {
-    val v = ensureNodeBuckets()
-    val nb = v.bs.zipWithIndex.map { case (df, b) =>
-      if (!touched(b)) df
-      else {
-        val nf = f(b, df)
-        // a still-pure bucket materializes on its FIRST touch: its view
-        // lineage re-scans the whole parent on every later read, so one
-        // O(bucket) checkpoint now buys O(bucket) reads from here on —
-        // while buckets never touched stay views and never pay anything
-        // (measured across the write family at sf0.1: this beats both
-        // the defer-to-depth-bound and the materialize-on-second-touch
-        // variants on total wall-clock)
-        if (v.pure(b) && v.size > 1 && firstTouchEager) nodeDepth(b) = maxDepth
-        else nodeDepth(b) += 1
-        if (nodeDepth(b) >= maxDepth) {
-          nodeDepth(b) = 0
-          // coalesce BEFORE materializing: layers accumulate partitions
-          // (union appends, broadcast joins preserve) and localCheckpoint
-          // would freeze the growth unbounded
-          nf.coalesce(bucketParts(nf, v.size)).transform(GraphStore.pin)
-        } else nf
-      }
-    }
-    // a touched bucket is no longer the parent view; once nothing is
-    // pure the parent drops out of the read path entirely
-    val pure2 = v.pure -- touched
-    val nv = BucketVec(if (pure2.isEmpty) None else v.parent, pure2, nb)
-    nodeBuckets = Some(nv)
-    nodeCommits += 1
-    nv
-  }
-
-  private def rewriteEdgeBuckets(touched: Set[Int])(
-      f: (Int, DataFrame) => DataFrame): BucketVec = synchronized {
-    val v = ensureEdgeBuckets()
-    val nb = v.bs.zipWithIndex.map { case (df, b) =>
-      if (!touched(b)) df
-      else {
-        val nf = f(b, df)
-        if (v.pure(b) && v.size > 1 && firstTouchEager) edgeDepth(b) = maxDepth
-        else edgeDepth(b) += 1
-        if (edgeDepth(b) >= maxDepth) {
-          edgeDepth(b) = 0
-          nf.coalesce(bucketParts(nf, v.size)).transform(GraphStore.pin)
-        } else nf
-      }
-    }
-    val pure2 = v.pure -- touched
-    val nv = BucketVec(if (pure2.isEmpty) None else v.parent, pure2, nb)
-    edgeBuckets = Some(nv)
-    edgeCommits += 1
-    nv
-  }
-
-  /** Wholesale rewrites and transaction commits replace a side's frame
-    * outside the bucket committer — drop that side back to unbucketed
-    * mode (the next keyed mutation re-buckets).
-    */
-  private def invalidateNodeBuckets(): Unit = synchronized {
-    nodeBuckets = None
-    // restart the deferral clock: a store that keeps doing wholesale
-    // rewrites (refactor-heavy sessions) must not thrash re-bucketization
-    bucketizeNodesAt = nodeCommits + bucketizeAfter
-  }
-  private def invalidateEdgeBuckets(): Unit = synchronized {
-    edgeBuckets = None
-    bucketizeEdgesAt = edgeCommits + bucketizeAfter
-  }
-
   /** Optimistic explicit transaction (§2.9 `transaction.go`): `f` runs
     * against a PRIVATE store seeded from the current snapshot; its writes
     * become visible in ONE atomic swap at commit, and only if no other
@@ -561,8 +508,10 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * `f` rolls back by simply discarding the private store.
     */
   def transaction[T](f: GraphStore => T): T = {
-    val baseVersion = version
-    val tx = new GraphStore(current, registerGlobal = false)
+    // version and frame read together: a swap bumps the counter before
+    // it installs the frame
+    val (baseVersion, base) = synchronized((versionCounter, current))
+    val tx = new GraphStore(base, registerGlobal = false)
     GraphStore.inTx.set(tx)
     val out =
       try f(tx) // throw → nothing swapped (rollback)
@@ -572,8 +521,8 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
         "transaction conflict: the store changed underneath; rolled back")
       // the committed frames were built by the PRIVATE store's bucket
       // committer — this store's bucket vectors no longer describe them
-      invalidateNodeBuckets()
-      invalidateEdgeBuckets()
+      nodeSide.invalidate()
+      edgeSide.invalidate()
       current = tx.snapshot
       versionCounter += 1
       // a committed transaction's net effect isn't tracked statement-wise
@@ -628,12 +577,12 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * joins only the buckets the new ids hash into, and the insert routes
     * each new row to its bucket — untouched buckets stay materialized.
     */
-  def createNodes(newNodes: DataFrame): QueryStats = {
+  def createNodes(newNodes: DataFrame): QueryStats = synchronized {
     val g = current
     // pin the rows once: the frame may carry nondeterministic exprs
     // (generated ids) and is read by the check, the router, and the WAL
     val nn = newNodes.transform(GraphStore.pin)
-    val bs = ensureNodeBuckets()
+    val bs = nodeSide.ensure()
     val touched = touchedBuckets(nn, bs.size)
     // one pass computes both the batch size and the duplicate-id count
     // (two separate jobs cost a driver round-trip each on every CREATE)
@@ -646,8 +595,8 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     require(conflicts == 0, s"unique-id constraint violated for $conflicts node(s)")
     enforceUnique(g, nn)
     checkNodeLimit(g, n)
-    val nnA = conformNodeInsert(nn)
-    val nb = rewriteNodeBuckets(touched)((b, df) =>
+    val nnA = nodeSide.conformInsert(nn)
+    val nb = nodeSide.rewrite(touched)((b, df) =>
       df.unionByName(nnA.filter(bucketColFor(bs.size)(col("id")) === b)))
     swap(PropertyGraph(unionAll(nb), g.edges), Map("nodes_upserts" -> nnA))
     emitNodes("node_created", nnA)
@@ -660,10 +609,10 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * bucket rewrite, where delete-then-create pays two probes and two
     * commits for the same net effect.
     */
-  def upsertNodes(rows: DataFrame): QueryStats = {
+  def upsertNodes(rows: DataFrame): QueryStats = synchronized {
     val g = current
     val nn = rows.transform(GraphStore.pin)
-    val bs = ensureNodeBuckets()
+    val bs = nodeSide.ensure()
     val touched = touchedBuckets(nn, bs.size)
     // One pruned probe sizes the batch AND splits it into replaces vs
     // inserts: replaced rows are excluded from the unique-constraint
@@ -685,9 +634,9 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
         checkNodeLimit(g, counts.getLong(0) - counts.getLong(1))
         counts.getLong(0)
       }
-    val nnA = conformNodeInsert(nn)
+    val nnA = nodeSide.conformInsert(nn)
     val keys = nnA.select("id")
-    val nb = rewriteNodeBuckets(touched)((b, df) =>
+    val nb = nodeSide.rewrite(touched)((b, df) =>
       df.join(keys, Seq("id"), "left_anti")
         .unionByName(nnA.filter(bucketColFor(bs.size)(col("id")) === b)))
     swap(PropertyGraph(unionAll(nb), g.edges), Map("nodes_upserts" -> nnA))
@@ -699,10 +648,10 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * existing ones are left untouched (no ON MATCH SET here). The
     * existence anti-join reads only the candidate ids' buckets.
     */
-  def mergeNodes(candidates: DataFrame): QueryStats = {
+  def mergeNodes(candidates: DataFrame): QueryStats = synchronized {
     val g = current
     val cand = candidates.transform(GraphStore.pin)
-    val bs = ensureNodeBuckets()
+    val bs = nodeSide.ensure()
     val candBuckets = touchedBuckets(cand, bs.size)
     val missing = cand.join(prunedUnion(bs, candBuckets).select("id"),
       Seq("id"), "left_anti").transform(GraphStore.pin)
@@ -716,8 +665,8 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
       if (n == 0) Set.empty[Int]
       else if (bs.size == 1) Set(0)
       else stat.getSeq[Int](1).toSet
-    val missA = if (n > 0) conformNodeInsert(missing) else missing
-    val nb = rewriteNodeBuckets(touched)((b, df) =>
+    val missA = if (n > 0) nodeSide.conformInsert(missing) else missing
+    val nb = nodeSide.rewrite(touched)((b, df) =>
       df.unionByName(missA.filter(bucketColFor(bs.size)(col("id")) === b)))
     swap(PropertyGraph(unionAll(nb), g.edges),
       if (n > 0) Map("nodes_upserts" -> missA) else Map.empty)
@@ -731,11 +680,11 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * schema-free, so a SET on a never-hoisted key lands in the map alone
     * (a null newval removes the key, REMOVE semantics).
     */
-  def setNodeProperties(updates: DataFrame, property: String): QueryStats = {
+  def setNodeProperties(updates: DataFrame, property: String): QueryStats = synchronized {
     val g = current
     val u = updates.select(col("id"), col("newval")).withColumn("_upd", lit(true))
       .transform(GraphStore.pin)
-    val bs = ensureNodeBuckets()
+    val bs = nodeSide.ensure()
     val touched = touchedBuckets(u, bs.size)
     def transform(bucket: DataFrame): DataFrame = {
       val joined = bucket.join(u, Seq("id"), "left_outer")
@@ -755,7 +704,7 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
           .otherwise(col("properties")))
         .drop("newval", "_upd")
     }
-    val nb = rewriteNodeBuckets(touched)((_, df) => transform(df))
+    val nb = nodeSide.rewrite(touched)((_, df) => transform(df))
     // WAL delta + change feed = only the touched rows, read from only the
     // touched buckets
     val touchedRows = prunedUnion(nb, touched)
@@ -770,48 +719,18 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
   /** SET a property to ONE value for matching node ids (same hoisted-or-
     * map contract as [[setNodeProperties]]).
     */
-  def setNodeProperty(ids: DataFrame, property: String, value: Column): QueryStats = {
-    val g = current
-    val keys = ids.select(col("id")).transform(GraphStore.pin)
-    val marked = keys.withColumn("_hit", lit(true))
-    val bs = ensureNodeBuckets()
-    val touched = touchedBuckets(keys, bs.size)
-    def transform(bucket: DataFrame): DataFrame = {
-      val joined = bucket.join(marked, Seq("id"), "left_outer")
-      val withCol =
-        if (bucket.columns.contains(property))
-          joined.withColumn(property,
-            when(col("_hit"), value.cast(bucket.schema(property).dataType))
-              .otherwise(col(property)))
-        else joined
-      withCol.withColumn("properties",
-        when(col("_hit") && value.isNotNull,
-          map_concat(
-            map_filter(col("properties"), (k, _) => k =!= property),
-            map(lit(property), value.cast("string"))))
-          .when(col("_hit"),
-            map_filter(col("properties"), (k, _) => k =!= property))
-          .otherwise(col("properties")))
-        .drop("_hit")
-    }
-    val nb = rewriteNodeBuckets(touched)((_, df) => transform(df))
-    val touchedRows = prunedUnion(nb, touched).join(keys, Seq("id"), "left_semi")
-    val n = keys.count()
-    swap(PropertyGraph(unionAll(nb), g.edges),
-      Map("nodes_upserts" -> touchedRows))
-    emitNodes("node_updated", touchedRows)
-    QueryStats(propertiesSet = n)
-  }
+  def setNodeProperty(ids: DataFrame, property: String, value: Column): QueryStats =
+    setNodeProperties(ids.select(col("id"), value.as("newval")), property)
 
   /** DELETE nodes; `detach` also removes incident edges, otherwise edges
     * referencing the victims must not exist (Neo4j semantics).
     */
-  def deleteNodes(ids: DataFrame, detach: Boolean): QueryStats = {
+  def deleteNodes(ids: DataFrame, detach: Boolean): QueryStats = synchronized {
     val g = current
     val victims = ids.select("id").transform(GraphStore.pin)
     val v = victims.withColumnRenamed("id", "vid")
     val incidentCond = col("src") === col("vid") || col("dst") === col("vid")
-    val bs = ensureNodeBuckets()
+    val bs = nodeSide.ensure()
     val touched = touchedBuckets(victims, bs.size)
     val nDel = prunedUnion(bs, touched).join(victims, Seq("id"), "left_semi").count()
     // nothing matches: no incident validation, no rewrite, no commit —
@@ -823,7 +742,7 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
       val incident = g.edges.join(v, incidentCond, "left_semi").count()
       require(incident == 0, s"cannot delete nodes with $incident incident edge(s); use DETACH DELETE")
     }
-    val nb = rewriteNodeBuckets(touched)((_, df) =>
+    val nb = nodeSide.rewrite(touched)((_, df) =>
       df.join(victims, Seq("id"), "left_anti"))
     // detach: the incident scan is one pass on src/dst (no id-pruning
     // possible there), but the edge REWRITE keys on the found edge ids —
@@ -836,9 +755,9 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     val eDel = edgeVictims.map(_.count()).getOrElse(0L)
     val newEdgesFrame = edgeVictims match {
       case Some(ev) if eDel > 0 =>
-        val ebs = ensureEdgeBuckets()
+        val ebs = edgeSide.ensure()
         val tE = touchedBuckets(ev, ebs.size)
-        unionAll(rewriteEdgeBuckets(tE)((_, df) =>
+        unionAll(edgeSide.rewrite(tE)((_, df) =>
           df.join(ev, Seq("id"), "left_anti")))
       case _ => g.edges
     }
@@ -859,12 +778,12 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * untouched. The anonymize-class operation (db_admin.go:1390-1439)
     * rides this instead of a wholesale frame replace.
     */
-  def updateNodes(ids: DataFrame)(transform: DataFrame => DataFrame): QueryStats = {
+  def updateNodes(ids: DataFrame)(transform: DataFrame => DataFrame): QueryStats = synchronized {
     val g = current
     val keys = ids.select("id").transform(GraphStore.pin)
-    val bs = ensureNodeBuckets()
+    val bs = nodeSide.ensure()
     val touched = touchedBuckets(keys, bs.size)
-    val nb = rewriteNodeBuckets(touched)((_, df) =>
+    val nb = nodeSide.rewrite(touched)((_, df) =>
       transform(df.join(keys, Seq("id"), "left_semi"))
         .unionByName(df.join(keys, Seq("id"), "left_anti")))
     val touchedRows = prunedUnion(nb, touched).join(keys, Seq("id"), "left_semi")
@@ -879,17 +798,16 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * GraphQL deleteRelationship mutation and friends), rewriting only the
     * buckets holding the victims.
     */
-  def deleteEdges(ids: DataFrame): QueryStats = {
+  def deleteEdges(ids: DataFrame): QueryStats = synchronized {
     val g = current
     val victims = ids.select("id").transform(GraphStore.pin)
-    val ebs = ensureEdgeBuckets()
+    val ebs = edgeSide.ensure()
     val touched = touchedBuckets(victims, ebs.size)
     val eDel = prunedUnion(ebs, touched).join(victims, Seq("id"), "left_semi").count()
     if (eDel == 0) return QueryStats() // nothing matched: no rewrite, no commit
-    val nb = rewriteEdgeBuckets(touched)((_, df) =>
+    val nb = edgeSide.rewrite(touched)((_, df) =>
       df.join(victims, Seq("id"), "left_anti"))
-    swap(PropertyGraph(g.nodes, unionAll(nb)),
-      if (eDel > 0) Map("edges_deletes" -> victims) else Map.empty)
+    swap(PropertyGraph(g.nodes, unionAll(nb)), Map("edges_deletes" -> victims))
     emitIds("rel_deleted", victims)
     QueryStats(relationshipsDeleted = eDel)
   }
@@ -897,11 +815,11 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
   /** SET a relationship property for matching edge ids: `weight` is a
     * hoisted column, everything else lives in the string property map.
     */
-  def setEdgeProperty(ids: DataFrame, key: String, value: Column): QueryStats = {
+  def setEdgeProperty(ids: DataFrame, key: String, value: Column): QueryStats = synchronized {
     val g = current
     val keys = ids.select(col("id")).transform(GraphStore.pin)
     val marked = keys.withColumn("_hit", lit(true))
-    val ebs = ensureEdgeBuckets()
+    val ebs = edgeSide.ensure()
     val touched = touchedBuckets(keys, ebs.size)
     def transform(bucket: DataFrame): DataFrame = {
       val joined = bucket.join(marked, Seq("id"), "left_outer")
@@ -916,7 +834,7 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
               map(lit(key), value.cast("string"))))
             .otherwise(col("properties"))).drop("_hit")
     }
-    val nb = rewriteEdgeBuckets(touched)((_, df) => transform(df))
+    val nb = edgeSide.rewrite(touched)((_, df) => transform(df))
     val touchedRows = prunedUnion(nb, touched).join(keys, Seq("id"), "left_semi")
     val n = keys.count()
     swap(PropertyGraph(g.nodes, unionAll(nb)),
@@ -928,39 +846,39 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
   /** Replace the node set wholesale (label rewrites — apoc.label.add/
     * remove/replace mutate the labels array per node).
     */
-  def replaceNodes(nodes: DataFrame): Unit = {
+  def replaceNodes(nodes: DataFrame): Unit = synchronized {
     // refactor ops rewrite the frame wholesale by design → rewrite commit
-    invalidateNodeBuckets()
+    nodeSide.invalidate()
     swap(PropertyGraph(nodes, current.edges), Map("nodes_rewrite" -> nodes))
   }
 
   /** Replace the edge set wholesale (apoc.refactor rel rewrites: rename
     * type, invert, redirect).
     */
-  def replaceEdges(edges: DataFrame): Unit = {
-    invalidateEdgeBuckets()
+  def replaceEdges(edges: DataFrame): Unit = synchronized {
+    edgeSide.invalidate()
     swap(PropertyGraph(current.nodes, edges), Map("edges_rewrite" -> edges))
   }
 
   /** Replace both sides in one version (refactor operations that rewrite
     * nodes and their incident edges together).
     */
-  def replaceGraph(g: PropertyGraph): Unit = {
-    invalidateNodeBuckets()
-    invalidateEdgeBuckets()
+  def replaceGraph(g: PropertyGraph): Unit = synchronized {
+    nodeSide.invalidate()
+    edgeSide.invalidate()
     swap(g, Map("nodes_rewrite" -> g.nodes, "edges_rewrite" -> g.edges))
   }
 
   /** CREATE relationships — routed to their id-hash buckets. */
-  def createEdges(newEdges: DataFrame): QueryStats = {
+  def createEdges(newEdges: DataFrame): QueryStats = synchronized {
     val g = current
     val ne = newEdges.transform(GraphStore.pin)
     val n = ne.count()
     checkEdgeLimit(g, n)
-    val ebs = ensureEdgeBuckets()
+    val ebs = edgeSide.ensure()
     val touched = touchedBuckets(ne, ebs.size)
-    val neA = conformEdgeInsert(ne)
-    val nb = rewriteEdgeBuckets(touched)((b, df) =>
+    val neA = edgeSide.conformInsert(ne)
+    val nb = edgeSide.rewrite(touched)((b, df) =>
       df.unionByName(neA.filter(bucketColFor(ebs.size)(col("id")) === b)))
     swap(PropertyGraph(g.nodes, unionAll(nb)),
       Map("edges_upserts" -> neA))
