@@ -156,17 +156,17 @@ object Algorithms {
     * peel nodes with degree < k until stable. Each round is one grouped
     * degree count + two semi-joins over the surviving edge set — the
     * standard distributed peeling shape; rounds ≤ the peeling depth, not
-    * the node count. Returns the surviving node ids.
+    * the node count. No round cap: each round either shrinks the edge set
+    * or stops, and stopping earlier returns nodes outside the core.
+    * Returns the surviving node ids.
     */
-  def kCore(pairs: DataFrame, k: Int, maxIter: Int = 30): DataFrame = {
+  def kCore(pairs: DataFrame, k: Int): DataFrame = {
     var und = pairs.select(col("a"), col("b"))
       .union(pairs.select(col("b").as("a"), col("a").as("b")))
       .distinct().localCheckpoint(true)
     var n = und.count()
     var stable = false
-    var it = 0
-    while (!stable && it < maxIter && n > 0) {
-      it += 1
+    while (!stable && n > 0) {
       val keep = und.groupBy("a").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("a").as("kid"))
       val next = und
@@ -211,49 +211,6 @@ object Algorithms {
         .otherwise(col("external").cast("double") /
           (lit(2L) * col("internal") + col("external")))
         .as("conductance"))
-  }
-
-  def wcc(g: PropertyGraph, relType: Option[String] = None, maxIter: Int = 20): DataFrame = {
-    val es = relType.map(g.edgesByType).getOrElse(g.edges)
-    val und = es.select(col("src").as("a"), col("dst").as("b"))
-      .union(es.select(col("dst").as("a"), col("src").as("b")))
-      .distinct().cache()
-    val nodeIds = und.select(col("a").as("id")).distinct()
-
-    var comp = nodeIds.withColumn("component", col("id")).cache()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      iter += 1
-      val neighborMin = und
-        .join(comp.withColumnRenamed("id", "b").withColumnRenamed("component", "nc"), "b")
-        .groupBy(col("a").as("id"))
-        .agg(min("nc").as("nmin"))
-      val afterNeighbor = comp.join(neighborMin, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nmin"), col("component"))).as("component"))
-        .localCheckpoint(true) // self-joined below — avoid recomputing
-      // pointer jumping: component ← component(component). Collapses chains
-      // exponentially, so convergence is O(log diameter) rounds instead of
-      // O(diameter) — the difference between 6 and 30+ shuffles at sf0.1.
-      val next = afterNeighbor
-        .join(afterNeighbor.select(col("id").as("component"), col("component").as("cc")),
-          Seq("component"), "left_outer")
-        .select(col("id"),
-          least(col("component"), coalesce(col("cc"), col("component"))).as("component"))
-        .localCheckpoint(true)
-      // the convergence probe is a join+count action ≈ ⅓ of a round; with
-      // pointer jumping convergence is ~log(diameter) rounds, so probing
-      // every 3rd round trades ≤2 extra cheap rounds for 3× fewer probes
-      if (iter % 3 == 0 || iter >= maxIter) {
-        changed = next.join(comp.withColumnRenamed("component", "old"), "id")
-          .filter(col("component") =!= col("old")).count()
-      }
-      comp.unpersist()
-      comp = next
-    }
-    und.unpersist()
-    comp
   }
 
   /** Synchronous label propagation: each round a node adopts the label with

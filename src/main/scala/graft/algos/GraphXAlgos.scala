@@ -115,16 +115,6 @@ object GraphXAlgos {
         rdd
       })
 
-    /** Per-partition CSR index of the pair adjacency (one [[CsrAdj]] per
-      * partition, self-loops dropped) — the iterative loops (WCC min-label,
-      * SCC trim) `zipPartitions` their per-round delta against this instead
-      * of RDD-joining the pair RDD: a co-partitioned RDD join is a COGROUP
-      * that re-materializes the full adjacency partition into a hash map
-      * EVERY round (~2.6 s/round fixed cost at sf1, the round-12 profile's
-      * dominant term), while the CSR lookup costs only the delta's edges.
-      * Same idea as GraphX's indexed vertex/edge partitions, kept to
-      * exactly the two primitives these loops need.
-      */
     /** Materialized component labelings, keyed by algorithm — the same
       * derived-index pattern as [[csrByDir]] and the search tier's HNSW
       * partition-graph cache: a ctx belongs to ONE immutable graph
@@ -160,6 +150,16 @@ object GraphXAlgos {
         rdd
       })
 
+    /** Per-partition CSR index of the pair adjacency (one [[CsrAdj]] per
+      * partition, self-loops dropped) — the iterative loops (WCC min-label,
+      * SCC trim) `zipPartitions` their per-round delta against this instead
+      * of RDD-joining the pair RDD: a co-partitioned RDD join is a COGROUP
+      * that re-materializes the full adjacency partition into a hash map
+      * EVERY round (~2.6 s/round fixed cost at sf1, the round-12 profile's
+      * dominant term), while the CSR lookup costs only the delta's edges.
+      * Same idea as GraphX's indexed vertex/edge partitions, kept to
+      * exactly the two primitives these loops need.
+      */
     private val csrCache = new ConcurrentHashMap[String, RDD[CsrAdj]]()
     def csrByDir(dir: String): RDD[CsrAdj] =
       csrCache.computeIfAbsent(dir, { d =>
@@ -439,9 +439,7 @@ object GraphXAlgos {
     * per-partition state OOM'd the sf3 probe (BENCH_r11_sf3). Cores are
     * the wrong ceiling — Spark schedules any width over any core count;
     * only per-partition size must stay bounded. Small projections still
-    * collapse toward 1 partition (no fixed-width tiny-task tax), and the
-    * Pregel launch-overhead concern is handled by routing big graphs off
-    * Pregel entirely ([[pregelMaxEdges]]), not by capping width.
+    * collapse toward 1 partition (no fixed-width tiny-task tax).
     */
   private[graft] def widthFor(nEdges: Long, defaultPar: Int,
       target: Long = EdgesPerPartition): Int =
@@ -452,8 +450,8 @@ object GraphXAlgos {
       .groupBy("src", "dst")
       .agg(count(lit(1)).cast("double").as("cnt"), sum("weight").as("wsum"))
     // full-graph contexts take the node table as the endpoint superset —
-    // skips a 2×|E| union+distinct shuffle; Graph.fromEdges only
-    // materializes endpoint vertices anyway
+    // skips a 2×|E| union+distinct shuffle, and is what makes wcc/scc
+    // label isolated nodes (both loops label every dictionary vertex)
     val endpoints = relTypes match {
       case Seq() => g.nodes.select("id")
       case _ => es.select(col("src").as("id"))
@@ -499,123 +497,41 @@ object GraphXAlgos {
     contains.voteCsr(false); contains.voteCsr(true)
   }
 
-  /** Connected components as min-rank propagation over the cached
-    * undirected adjacency. Returns (id, component) where component = min
-    * string id of the component (same contract as [[Algorithms.wcc]]).
+  /** Weakly connected components: (id, component), where component is
+    * the min string id of the node's component. The full graph labels
+    * every node (apoc_community.go:332), an isolated one as its own
+    * singleton, because the full-graph ctx dictionary is the node table;
+    * a typed projection labels the endpoints of its edges. Memoized per
+    * ctx: a ctx belongs to one immutable snapshot, so repeat calls on a
+    * loaded store pay the loop once.
     *
-    * This deliberately does NOT use GraphX `connectedComponents()`: its
-    * Pregel loop keeps every superstep's full graph replica cached
-    * MEMORY_ONLY, which goes super-linear the moment the (graph × rounds)
-    * working set outgrows the executors — the round-10 sf1 bench measured
-    * 12.7× at 10× data from exactly that residency model. Here each round
-    * is one co-partitioned join (adjacency never reshuffles) + a min
-    * reduce, labels are primitive Long RANKS of the string ids (so Long
-    * min agrees with String min exactly, like [[labelPropagation]]), state
-    * is MEMORY_AND_DISK, and every superseded round is unpersisted — the
-    * resident set is O(|V| + |E|) regardless of round count. Convergence =
-    * accumulator-counted label changes hitting zero, checked every round
-    * for free on the materializing count. Rounds ≤ graph diameter, same as
-    * Pregel CC (reference behavior: apoc_community.go:332).
+    * maxIter is a ROUND BUDGET, not a result knob: past it the delta loop
+    * forces the union-find endgame (edge contraction over the current
+    * label regions — exact components from any intermediate state), so
+    * the labeling is identical for every maxIter ≥ 1 and one "wcc" memo
+    * entry serves all callers.
     */
-  /** Contracted-edge count above which full-graph WCC leaves GraphX
-    * Pregel for the pointer-jumping DataFrame loop. Below it Pregel's
-    * VertexRDD index-joins win on constant factors (1.4 s vs 4.7 s at
-    * sf0.1, ~1.3M pairs); above it Pregel's per-superstep graph replicas
-    * are what measured 12.7-25.4× at 10× data under heap pressure.
-    * 5M sits BELOW the measured degradation point (sf1 ≈ 13M pairs
-    * degraded; sf0.1 ≈ 1.3M was healthy) so the scale route actually
-    * engages at the scale where Pregel was measured degrading — the
-    * round-11 value (20M) sat above it and the routing never fired.
-    */
-  private[graft] val PregelMaxEdgesDefault = 5000000L
-
-  /** Deployment-tunable: size this to what comfortably fits the
-    * executors' aggregate memory (Pregel is the fastest plan whenever
-    * its superstep replicas fit; the DF path is the spill-safe fallback
-    * past that).
-    */
-  private[graft] def pregelMaxEdges(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.wcc.pregelMaxEdges")
-      .orElse(sys.env.get("GRAFT_WCC_PREGEL_MAX_EDGES"))
-      .map(_.toLong).getOrElse(PregelMaxEdgesDefault)
-
   def wcc(g: PropertyGraph, relType: Option[String] = None,
       maxIter: Int = 50): DataFrame = {
     val c = ctx(g, relType)
-    // the delta loop labels every ctx-dict vertex already (the full-graph
-    // dict is the whole node table), so only the Pregel route — whose
-    // Graph.fromEdges materializes endpoint vertices only — needs the
-    // singleton union.
-    // maxIter is a ROUND BUDGET, not a result knob: past it the delta loop
-    // forces the union-find endgame (edge contraction over the current
-    // label regions — exact components from any intermediate state), so
-    // the labeling is identical for every maxIter ≥ 1 and one "wcc" memo
-    // entry serves all callers (round-12 ADVICE: the budget used to be
-    // silently ignored AND a budget exhaustion returned unconverged
-    // labels; both fixed).
-    if (c.edges.count() <= pregelMaxEdges(g.nodes.sparkSession))
-      withSingletons(g, relType, wccPregel(g, c), "component")
-    else c.cachedResult("wcc")(wccDeltaLoop(g, c, maxIter))
+    c.cachedResult("wcc")(wccDeltaLoop(g, c, maxIter))
   }
 
-  /** Every-node contract (apoc_community.go:332 labels every node): both
-    * component algorithms label edge ENDPOINTS; for full-graph runs the
-    * isolated nodes — present in g.nodes but touching no edge — come back
-    * as their own singleton components. Applied identically on every
-    * route so results never depend on which size tier served the query
-    * (round-11 ADVICE: the Pregel route used to skip this). Typed
-    * projections stay endpoint-only (the typed ctx dictionary is
-    * endpoint-only too — a node outside the projection isn't in scope).
+  /** The WCC loop itself, unmemoized: DELTA HashMin over the ctx's CSR
+    * adjacency — min(label) over neighbors, but each round only the
+    * vertices whose label changed last round re-send, so total message
+    * volume is O(|E| · avg label-improvements per edge) ≈ a small
+    * constant × |E|, not rounds × |E|. Every shuffle is keyed by VERTEX,
+    * never by label: a label-keyed join serializes the giant component
+    * into one task the moment HashMin converges toward few labels (the
+    * round-12 profile measured exactly that). Labels are dense idx
+    * representatives; the min-string contract is settled at decode, so
+    * the [[Ctx.idxToRank]]/[[Ctx.rankToId]] sort-builds stay off this
+    * path. The resident set is O(|V| + |E|) whatever the round count —
+    * the property GraphX's Pregel connected components lacks: its
+    * supersteps keep a graph replica per round, which measured 12.7× at
+    * 10× data (round-10 sf1).
     */
-  private def withSingletons(g: PropertyGraph, relType: Option[String],
-      base: DataFrame, labelCol: String): DataFrame = relType match {
-    case Some(_) => base
-    case None =>
-      val singles = g.nodes.select(col("id"))
-        .join(base.select("id"), Seq("id"), "left_anti")
-        .withColumn(labelCol, col("id"))
-      base.unionByName(singles)
-  }
-
-  /** Scale path (kept callable for specs): DELTA HashMin over the cached
-    * ctx adjacency, iterated in idx space with the STRING id as the
-    * label — min(label) over neighbors, but each round only the vertices
-    * whose label changed last round re-send, so total message volume is
-    * O(|E| · avg label-improvements per edge) ≈ a small constant × |E|,
-    * not rounds × |E|. Every shuffle is keyed by VERTEX (reduceByKey min
-    * with map-side combiners — hub-degree and giant-component skew both
-    * collapse in the combiner), never by label: a label-keyed join
-    * (pointer jumping's lookup, or a decode join on the component id)
-    * serializes the giant component into one task the moment HashMin
-    * converges toward few labels — the round-12 profile measured exactly
-    * that. Resident set O(|V|+|E|) with per-round unpersist (the property
-    * Pregel's superstep replicas lack — 12.7-25.4× at 10× data under
-    * heap pressure). String labels need no rank dictionaries, so the
-    * one-time [[Ctx.idxToRank]]/[[Ctx.rankToId]] sort-builds (~28 s at
-    * sf1) stay off this path entirely; [[Ctx.rev]] decodes vertices by a
-    * co-partitioned idx-keyed join.
-    */
-  private[graft] def wccScale(g: PropertyGraph,
-      relType: Option[String]): DataFrame = {
-    val c = ctx(g, relType)
-    c.cachedResult("wcc")(wccDeltaLoop(g, c))
-  }
-
-  /** Honest-loop twins for the bench/oracle rows: ALWAYS run the
-    * bounded-residency scale loops — no small-graph GraphX route, no
-    * per-ctx result memo — so (a) sf0.01 oracle rows pin the scale
-    * machinery's contract (the routed rows never reach it below the
-    * routing thresholds), and (b) scale sweeps track the real algorithmic
-    * cost alongside the legitimate memoized number (round-12 verdict #3:
-    * "the bench needs an honest-loop twin row").
-    */
-  def wccLoopFresh(g: PropertyGraph, relType: Option[String] = None): DataFrame =
-    wccDeltaLoop(g, ctx(g, relType))
-
-  /** See [[wccLoopFresh]] — the SCC trim+FW-BW coloring loop, unrouted. */
-  def sccLoopFresh(g: PropertyGraph, relType: Option[String] = None): DataFrame =
-    sccScale(g, ctx(g, relType))
-
   private[graft] def wccDeltaLoop(g: PropertyGraph, c: Ctx,
       maxIter: Int = 50): DataFrame = {
     val sc = c.edges.sparkContext
@@ -631,7 +547,6 @@ object GraphXAlgos {
       p.localCheckpoint()
       p.count(); p
     }
-    val debug = sys.env.get("GRAFT_ALGO_DEBUG").exists(v => v == "1" || v == "true")
     // labels are the vertex's own dense idx — a deterministic component
     // REPRESENTATIVE only; the min-STRING contract is settled at decode.
     // The (label, changed) flag rides in one pinned RDD per round; the
@@ -651,7 +566,6 @@ object GraphXAlgos {
     // (it is edge contraction over the current label regions). `force`
     // ignores EndgamePairCap — the convergence path of last resort.
     def endgame(force: Boolean): Unit = {
-      val t1 = System.nanoTime()
       val lbls = state.mapValues(_._1)
       // same source-side prune as the round messages: for a true
       // boundary pair at least one direction has lbl(from) < to (both
@@ -702,9 +616,7 @@ object GraphXAlgos {
           .map { case (x, m) => (x, math.min(x, m)) }
           .persist(StorageLevel.MEMORY_AND_DISK)
         var movedRows = 1L
-        var pjRound = 0
         while (movedRows > 0) {
-          pjRound += 1
           val viaNbr = bothDir.join(parent, pairW)
             .map { case (_, (nbr, p)) => (nbr, p) }
           val prop = parent.union(viaNbr).reduceByKey(pairW, (a: Long, b: Long) => math.min(a, b))
@@ -719,8 +631,6 @@ object GraphXAlgos {
           movedRows = accPj.value
           parent.unpersist(false)
           parent = jumped
-          if (debug) System.err.println(
-            f"[wccDelta] endgame-dist round $pjRound: moved=$movedRows")
         }
         val roots = parent.filter { case (x, p) => p != x }
         val finalState = pin(state
@@ -733,9 +643,6 @@ object GraphXAlgos {
         state.unpersist(false)
         state = finalState
         changed = 0
-        if (debug) System.err.println(
-          f"[wccDelta] endgame (distributed): $nPairs boundary pairs, " +
-            f"$pjRound rounds, ${(System.nanoTime() - t1) / 1e9}%.1f s")
       } else if (nPairs <= EndgamePairCap || force) {
         val parentMap = new java.util.HashMap[java.lang.Long, java.lang.Long]()
         def find(x: Long): Long = {
@@ -770,15 +677,11 @@ object GraphXAlgos {
         state.unpersist(false)
         state = finalState
         changed = 0
-        if (debug) System.err.println(
-          f"[wccDelta] endgame: $nPairs boundary pairs, ${(System.nanoTime() - t1) / 1e9}%.1f s")
-      } else if (debug) System.err.println(
-        f"[wccDelta] endgame skipped: $nPairs pairs > cap, ${(System.nanoTime() - t1) / 1e9}%.1f s")
+      }
       boundary.unpersist(false)
     }
     while (changed > 0 && iter < maxIter) {
       iter += 1
-      val t0 = System.nanoTime()
       val delta = state.filter(_._2._2).mapValues(_._1) // narrow, cached parent
       // CSR lookup instead of an RDD join: per-round cost ∝ delta's edges,
       // not the full adjacency; reduceByKey's map-side combiners absorb
@@ -820,8 +723,6 @@ object GraphXAlgos {
       })
       loopGc(iter, nEdges)
       changed = acc.value
-      if (debug) System.err.println(
-        f"[wccDelta] round $iter: changed=$changed ${(System.nanoTime() - t0) / 1e9}%.1f s")
       if (prev != null) prev.unpersist(false)
       prev = state
       state = next
@@ -902,22 +803,6 @@ object GraphXAlgos {
     pinned
   }
 
-  /** Small/medium graphs: GraphX Pregel CC (index-joined supersteps). */
-  private def wccPregel(g: PropertyGraph, c: Ctx): DataFrame = {
-    val graph = Graph.fromEdges(c.edges, (), StorageLevel.MEMORY_AND_DISK,
-      StorageLevel.MEMORY_AND_DISK)
-    val cc = graph.connectedComponents()
-    val assigned = cc.vertices // (vertexIdx, componentRootIdx)
-      .join(c.rev)
-      .map { case (_, (rootIdx, id)) => (rootIdx, id) }
-    // component label = min string id within the component
-    val rootToMin = assigned.reduceByKey((a, b) => if (a <= b) a else b)
-    val rows = assigned.join(rootToMin)
-      .map { case (_, (id, minId)) => Row(id, minId) }
-    toDf(g, rows, StructType(Seq(
-      StructField("id", StringType), StructField("component", StringType))))
-  }
-
   /** Per-node triangle counts over a long-keyed undirected pair-edge
     * DataFrame (`a`, `b`) — e.g. the part co-occurrence graph. GraphX
     * `triangleCount` on the canonicalized simple graph (reference
@@ -954,47 +839,13 @@ object GraphXAlgos {
           .as("coefficient"))
   }
 
-  /** Contracted-edge count above which SCC leaves GraphX
-    * `stronglyConnectedComponents` for the trim+coloring RDD loop
-    * ([[sccScale]]). GraphX SCC has the same unbounded superstep
-    * residency profile as pre-fix WCC (round-11 sf1: 30.9× at 10× data)
-    * and no internal checkpointing hook, so past this bound the
-    * checkpoint-disciplined loop takes over. Same deployment knob shape
-    * as [[pregelMaxEdges]].
-    */
-  private[graft] def sccMaxEdges(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.scc.graphxMaxEdges")
-      .orElse(sys.env.get("GRAFT_SCC_GRAPHX_MAX_EDGES"))
-      .map(_.toLong).getOrElse(PregelMaxEdgesDefault)
-
   /** Strongly connected components (Tarjan semantics, `community.go:517`).
     * Returns (id, component) with the component labeled by its minimum
-    * string id, like [[wcc]]. Small/medium graphs run GraphX's iterative
-    * SCC (index-join constant factors win); past [[sccMaxEdges]] the
-    * bounded-residency [[sccScale]] loop serves.
+    * string id, like [[wcc]]; the full graph labels every node (isolated
+    * nodes die in the first trim round as their own SCCs).
     */
-  def scc(g: PropertyGraph, relType: Option[String] = None,
-      numIter: Int = 8): DataFrame = {
-    val c = ctx(g, relType)
-    // sccScale's trim covers every ctx-dict vertex (isolated nodes die in
-    // round 1 as their own SCCs), so only the GraphX route needs the
-    // singleton union
-    if (c.edges.count() <= sccMaxEdges(g.nodes.sparkSession))
-      withSingletons(g, relType, sccGraphX(g, c, numIter), "component")
-    else sccScale(g, c)
-  }
-
-  private def sccGraphX(g: PropertyGraph, c: Ctx, numIter: Int): DataFrame = {
-    val graph = Graph.fromEdges(c.edges, (), StorageLevel.MEMORY_AND_DISK,
-      StorageLevel.MEMORY_AND_DISK)
-    val comp = graph.stronglyConnectedComponents(numIter)
-    val assigned = comp.vertices.join(c.rev)
-      .map { case (_, (rootIdx, id)) => (rootIdx, id) }
-    val rootToMin = assigned.reduceByKey((a, b) => if (a <= b) a else b)
-    val rows = assigned.join(rootToMin).map { case (_, (id, minId)) => Row(id, minId) }
-    toDf(g, rows, StructType(Seq(
-      StructField("id", StringType), StructField("component", StringType))))
-  }
+  def scc(g: PropertyGraph, relType: Option[String] = None): DataFrame =
+    sccScale(g, ctx(g, relType))
 
   /** Scale SCC: trim + forward-coloring + backward sweep (the FW-BW/
     * coloring family — Orzan's coloring as in the distributed-SCC
@@ -1007,7 +858,7 @@ object GraphXAlgos {
     * Vertices iterate on the ctx's dense idx directly — idx mins serve
     * only as deterministic PIVOTS (color roots), never as the output
     * label, so no order-preserving rank dictionary is needed: the final
-    * min-string-id label (same contract as [[sccGraphX]], spec-asserted
+    * min-string-id label (spec-asserted
     * on the cycle fixture) is computed at decode by a combiner-safe
     * per-root string min.
     *
@@ -1029,10 +880,11 @@ object GraphXAlgos {
     *    reached by r through min-color paths). Peel, repeat.
     *
     * Each outer round peels ≥1 SCC per color class, and trim collapses
-    * the acyclic residue between rounds, so rounds ≤ SCC-DAG depth.
+    * the acyclic residue between rounds, so rounds ≤ SCC-DAG depth. No
+    * round cap: the loop ends when every vertex is peeled, and a cap
+    * returns the unpeeled ones as wrong singleton SCCs.
     */
-  private[graft] def sccScale(g: PropertyGraph, c: Ctx,
-      maxOuter: Int = 64): DataFrame = {
+  private[graft] def sccScale(g: PropertyGraph, c: Ctx): DataFrame = {
     val sc = c.edges.sparkContext
     // per-partition CSR adjacency in both orientations, built once per ctx
     // (self-loops dropped there — a self-loop never merges components and
@@ -1055,7 +907,6 @@ object GraphXAlgos {
       p.localCheckpoint()
       p.count(); p
     }
-    val debug = sys.env.get("GRAFT_ALGO_DEBUG").exists(v => v == "1" || v == "true")
     val done = scala.collection.mutable.Buffer.empty[RDD[(Long, Long)]]
     // ---- delta trim to fixpoint (phase 1, O(|E|) total edge work) ----
     // live (out, in) degree per vertex via CSR lookups; a vertex leaves
@@ -1075,7 +926,6 @@ object GraphXAlgos {
     var trimming = true
     while (trimming) {
       trimRound += 1
-      val t0 = System.nanoTime()
       val dead = pin(deg.filter { case (_, (o, i)) => o == 0L || i == 0L }
         .mapValues(_ => ()))
       if (dead.isEmpty()) { dead.unpersist(false); trimming = false }
@@ -1116,8 +966,6 @@ object GraphXAlgos {
                   i - (if (iD != null) iD.longValue() else 0L)))
             }
         })
-        if (debug) System.err.println(
-          f"[sccTrim] round $trimRound ${(System.nanoTime() - t0) / 1e9}%.1f s")
         loopGc(trimRound, nEdges)
         dead.unpersist(false); deg.unpersist(false)
         deg = next
@@ -1137,9 +985,7 @@ object GraphXAlgos {
       .map { case (v, (u, _)) => (u, v) }
       .partitionBy(part))
     var remaining = pin(liveKeys.partitionBy(part))
-    var outer = 0
-    while (outer < maxOuter && !remaining.isEmpty()) {
-      outer += 1
+    while (!remaining.isEmpty()) {
       // ---- re-trim the (small) core to fixpoint ----
       var coreTrim = true
       while (coreTrim && !remaining.isEmpty()) {
@@ -1223,10 +1069,7 @@ object GraphXAlgos {
         if (engaged) System.gc() // reap the outer round's dead shuffles
       }
     }
-    // residue past maxOuter (adversarial depth only): own-id singletons —
-    // same bounded-iteration semantics as GraphX SCC's numIter cutoff
-    val all = (done.toSeq :+ remaining.map { case (v, _) => (v, v) })
-      .reduce(_ union _)
+    val all = sc.union(done.toSeq)
     // decode (memberIdx, rootIdx) → (id, min string id of the SCC): one
     // uniform idx-keyed join for the member strings, then a combiner-safe
     // min per root (trim singletons have root == self, so these keys are
@@ -1291,7 +1134,6 @@ object GraphXAlgos {
     // undirected contraction: both orientations of every directed pair,
     // votes = weight-sum or multiplicity (matches the DataFrame und build)
     val csr = c.voteCsr(weighted)
-    val debug = sys.env.get("GRAFT_ALGO_DEBUG").exists(v => v == "1" || v == "true")
 
     // Round structure (round-13 rework — the sf3 probe measured the old
     // adjByB.join(labels) + two reduceByKeys at 35.7×/34.6× of sf0.1):
@@ -1317,7 +1159,6 @@ object GraphXAlgos {
       .persist(StorageLevel.MEMORY_AND_DISK) // initial label = own rank
     var labels: RDD[(Long, Long)] = init
     for (round <- 1 to iters) {
-      val t0 = System.nanoTime()
       val votes: RDD[(Long, (Long, Double))] =
         csr.zipPartitions(labels, preservesPartitioning = false) { (cit, lit) =>
           if (!cit.hasNext) Iterator.empty
@@ -1405,8 +1246,6 @@ object GraphXAlgos {
       next.localCheckpoint() // lineage hygiene: see [[LoopCkptEvery]]
       next.count()
       loopGc(round, nVoteEdges)
-      if (debug) System.err.println(
-        f"[lpa] round $round: ${(System.nanoTime() - t0) / 1e9}%.1f s")
       if (labels ne init) labels.unpersist()
       labels = next
     }

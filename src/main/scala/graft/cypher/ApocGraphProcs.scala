@@ -13,7 +13,7 @@ import graft.operators.Dedup
   * `apoc/scoring/scoring.go`).
   *
   * Community members ride the SAME distributed implementations the
-  * q_algo_* rows oracle-check (GraphX Pregel / iterative joins); the
+  * q_algo_* rows oracle-check (GraphX-ctx loops / iterative joins); the
   * reference's in-memory modularity heuristics (fastGreedy, infomap,
   * spinglass, walktrap) are served by the distributed Louvain — a method
   * substitution, surfaced in the `method` column.
@@ -60,7 +60,7 @@ object ApocGraphProcs {
     * share one build instead of re-shuffling the edge distinct per CALL
     * (weak-keyed so dropped graphs release their cache).
     */
-  private def pairs(g: PropertyGraph, relType: Option[String]): DataFrame = {
+  private[graft] def pairs(g: PropertyGraph, relType: Option[String]): DataFrame = {
     val inner = pairsCache.synchronized {
       var m = pairsCache.get(g)
       if (m == null) {
@@ -149,7 +149,8 @@ object ApocGraphProcs {
     "apoc.community.kcore" -> ((g, args) =>
       Algorithms.kCore(pairs(g, arg(args, 1)), argInt(args, 0, 3))),
     "apoc.community.corenumber" -> ((g, args) => {
-      // max k with node in the k-core: peel at increasing k (community.go:664)
+      // max k with node in the k-core: peel at increasing k until the
+      // k-core is empty (community.go:664)
       val p = pairs(g, arg(args, 0))
       val spark = g.nodes.sparkSession
       import spark.implicits._
@@ -158,7 +159,7 @@ object ApocGraphProcs {
         .withColumn("core", lit(0))
       var k = 1
       var go = true
-      while (go && k <= 20) {
+      while (go) {
         val inCore = Algorithms.kCore(p, k)
         if (inCore.isEmpty) go = false
         else {

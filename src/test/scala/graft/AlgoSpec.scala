@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.algos.Algorithms
+import graft.algos.{Algorithms, GraphXAlgos}
 
 class AlgoSpec extends AnyFunSuite {
   import TestSpark._
@@ -10,7 +10,7 @@ class AlgoSpec extends AnyFunSuite {
   lazy val g = GraphQueries.graph(spark, sf)
 
   test("wcc: an order shares a component with every part it contains") {
-    val comp = Algorithms.wcc(g, Some("CONTAINS")).cache()
+    val comp = GraphXAlgos.wcc(g, Some("CONTAINS"))
     val edges = g.edgesByType("CONTAINS").select("src", "dst").limit(50)
     val withComps = edges
       .join(comp.toDF("src", "c_src"), "src")
@@ -19,34 +19,24 @@ class AlgoSpec extends AnyFunSuite {
   }
 
   test("GraphX wcc agrees exactly with DataFrame wcc") {
-    import graft.algos.GraphXAlgos
-    val a = Algorithms.wcc(g, Some("SUPPLIES")).collect()
+    // the DataFrame WCC is Dedup.dedupClusters over the undirected pairs,
+    // what CALL apoc.community.weaklyconnectedcomponents runs
+    val a = graft.operators.Dedup.dedupClusters(
+        graft.cypher.ApocGraphProcs.pairs(g, Some("SUPPLIES"))).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     val b = GraphXAlgos.wcc(g, Some("SUPPLIES")).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(a == b)
   }
 
-  test("scale-path wcc (the above-threshold route) agrees exactly with " +
-      "the Pregel path, including full-graph singleton handling") {
-    import graft.algos.GraphXAlgos
-    // below the routing threshold wcc() takes Pregel — drive the scale
-    // path directly on the same graphs and demand identical components
-    val viaRouter = GraphXAlgos.wcc(g, Some("CONTAINS")).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val viaScale = GraphXAlgos.wccScale(g, Some("CONTAINS")).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(viaScale == viaRouter)
-    // full graph: every node labeled on both paths (isolated → singleton)
-    val full = GraphXAlgos.wcc(g, None)
-    val fullScale = GraphXAlgos.wccScale(g, None)
-    assert(full.count() == fullScale.count())
-    assert(fullScale.count() == g.nodes.count())
-  }
-
   test("wcc on the full graph converges to one giant component") {
-    val comp = Algorithms.wcc(g, None)
-    assert(comp.select("component").distinct().count() == 1)
+    val comp = GraphXAlgos.wcc(g, None)
+    // every node is labeled (an isolated one as its own singleton) ...
+    assert(comp.count() == g.nodes.count())
+    // ... and every edge endpoint lands in the one giant component
+    val endpoints = g.edges.select(explode(array(col("src"), col("dst"))).as("id"))
+      .distinct()
+    assert(comp.join(endpoints, "id").select("component").distinct().count() == 1)
   }
 
   test("pagerank: ranks positive; high-in-degree parts outrank leaf orders") {

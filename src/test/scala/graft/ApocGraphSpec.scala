@@ -38,7 +38,7 @@ class ApocGraphSpec extends AnyFunSuite {
       .forall(_(1) == 1.0))
     assert(rows("CALL apoc.community.numComponents('KNOWS') YIELD value RETURN value")
       .head == Seq(2L))
-    val comp = rows("""CALL apoc.community.connectedComponents('KNOWS')
+    val comp = rows("""CALL apoc.community.connectedcomponents('KNOWS')
                        YIELD id, component RETURN component, count(*) AS n ORDER BY n""")
     assert(comp.map(_(1)) == Seq(2L, 3L))
     assert(rows("CALL apoc.community.density('KNOWS') YIELD density RETURN density")

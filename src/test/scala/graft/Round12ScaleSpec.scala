@@ -4,11 +4,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.PropertyGraph
 
-/** Round-12 scale work: the SCC trim+coloring scale route must agree with
-  * GraphX SCC exactly, both component algorithms must label every node on
-  * every route (round-11 ADVICE: the Pregel WCC route skipped isolated
-  * nodes), and the data-derived partition widths must keep growing past
-  * the old 2·cores cap (the sf3 OOM mechanism).
+/** Round-12 scale work: the SCC trim+coloring loop must match the closed
+  * form exactly, both component algorithms must label every node,
+  * isolated ones included, and the data-derived partition widths must
+  * keep growing past the old 2·cores cap (the sf3 OOM mechanism).
   */
 class Round12ScaleSpec extends AnyFunSuite {
   import TestSpark._
@@ -40,14 +39,8 @@ class Round12ScaleSpec extends AnyFunSuite {
     "C" -> "C", "D" -> "C", "E" -> "C", "F" -> "C", "G" -> "C", // merged big cycle
     "Z" -> "Z") // isolated: singleton via the every-node contract
 
-  test("scc GraphX route matches the closed form, isolated node included") {
+  test("scc matches the closed form, isolated node included") {
     assert(comps(graft.algos.GraphXAlgos.scc(fixture)) == expectedScc)
-  }
-
-  test("scc scale route (forced via conf) agrees with the GraphX route exactly") {
-    spark.conf.set("spark.graft.scc.graphxMaxEdges", "0")
-    try assert(comps(graft.algos.GraphXAlgos.scc(fixture)) == expectedScc)
-    finally spark.conf.unset("spark.graft.scc.graphxMaxEdges")
   }
 
   test("scc scale route handles a pure DAG entirely in trim (every node its own SCC)") {
@@ -65,23 +58,21 @@ class Round12ScaleSpec extends AnyFunSuite {
       .withColumn("properties", map_from_arrays(array(), array()))
       .withColumn("weight", lit(1.0))
     val g = PropertyGraph(nodes, edges)
-    spark.conf.set("spark.graft.scc.graphxMaxEdges", "0")
-    try {
-      val m = comps(graft.algos.GraphXAlgos.scc(g))
-      assert(m == (1 to 12).map(i => s"n$i" -> s"n$i").toMap)
-    } finally spark.conf.unset("spark.graft.scc.graphxMaxEdges")
+    val m = comps(graft.algos.GraphXAlgos.scc(g))
+    assert(m == (1 to 12).map(i => s"n$i" -> s"n$i").toMap)
   }
 
-  test("wcc labels every node on BOTH routes (Pregel route used to skip isolates)") {
+  test("wcc labels every node, isolates included, and agrees with dedupClusters") {
     val g = fixture
-    val pregel = comps(graft.algos.GraphXAlgos.wcc(g)) // tiny → Pregel route
-    assert(pregel("Z") == "Z")
-    assert(pregel.keySet == expectedScc.keySet)
+    val wcc = comps(graft.algos.GraphXAlgos.wcc(g))
+    assert(wcc("Z") == "Z")
+    assert(wcc.keySet == expectedScc.keySet)
     // all non-isolated nodes are one weak component rooted at min id "A"
-    assert((expectedScc.keySet - "Z").forall(pregel(_) == "A"))
-    spark.conf.set("spark.graft.wcc.pregelMaxEdges", "0")
-    try assert(comps(graft.algos.GraphXAlgos.wcc(g)) == pregel)
-    finally spark.conf.unset("spark.graft.wcc.pregelMaxEdges")
+    assert((expectedScc.keySet - "Z").forall(wcc(_) == "A"))
+    // the pair-input WCC labels the same nodes minus the isolate
+    val dedup = comps(graft.operators.Dedup.dedupClusters(
+      graft.cypher.ApocGraphProcs.pairs(g, None)))
+    assert(dedup == wcc - "Z")
   }
 
   test("wcc scale loop is exact across MULTIPLE ctx partitions (chain + endgame)") {
@@ -104,13 +95,10 @@ class Round12ScaleSpec extends AnyFunSuite {
       .withColumn("properties", map_from_arrays(array(), array()))
       .withColumn("weight", lit(1.0))
     val g = PropertyGraph(nodes, edges)
-    spark.conf.set("spark.graft.wcc.pregelMaxEdges", "0") // force the scale loop
-    try {
-      val res = graft.algos.GraphXAlgos.wcc(g)
-      val comps = res.select("component").distinct().collect().map(_.getString(0))
-      assert(comps.toSeq == Seq("n0000000"), s"one chain component, got ${comps.length}")
-      assert(res.count() == n)
-    } finally spark.conf.unset("spark.graft.wcc.pregelMaxEdges")
+    val res = graft.algos.GraphXAlgos.wcc(g)
+    val comps = res.select("component").distinct().collect().map(_.getString(0))
+    assert(comps.toSeq == Seq("n0000000"), s"one chain component, got ${comps.length}")
+    assert(res.count() == n)
   }
 
   test("widthFor grows past 2x cores so per-partition size stays constant") {

@@ -46,13 +46,10 @@ class Round13AdviceSpec extends AnyFunSuite {
 
   test("public wcc() threads maxIter and still converges (budget = performance knob)") {
     val g = chainGraph(300)
-    spark.conf.set("spark.graft.wcc.pregelMaxEdges", "0") // force the scale loop
-    try {
-      val res = graft.algos.GraphXAlgos.wcc(g, None, maxIter = 2)
-      val comps = res.select("component").distinct().collect().map(_.getString(0))
-      assert(comps.toSeq == Seq("n0000000"))
-      assert(res.count() == 300)
-    } finally spark.conf.unset("spark.graft.wcc.pregelMaxEdges")
+    val res = graft.algos.GraphXAlgos.wcc(g, None, maxIter = 2)
+    val comps = res.select("component").distinct().collect().map(_.getString(0))
+    assert(comps.toSeq == Seq("n0000000"))
+    assert(res.count() == 300)
   }
 
   test("CSR-vote LPA is exact across MULTIPLE adjacency partitions") {
@@ -84,12 +81,14 @@ class Round13AdviceSpec extends AnyFunSuite {
       .withColumn("properties", map_from_arrays(array(), array()))
       .withColumn("weight", lit(1.0))
     val g = PropertyGraph(nodes, edges)
-    val wccFresh = graft.algos.GraphXAlgos.wccLoopFresh(g)
+    // q_algo_wcc_loop runs the unmemoized loop, q_algo_wcc the memo
+    val wccFresh = graft.algos.GraphXAlgos.wccDeltaLoop(
+        g, graft.algos.GraphXAlgos.ctxFor(g, Nil))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val wccRouted = graft.algos.GraphXAlgos.wcc(g)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(wccFresh == wccRouted)
-    val sccFresh = graft.algos.GraphXAlgos.sccLoopFresh(g)
+    val sccFresh = graft.algos.GraphXAlgos.scc(g)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val expectedScc = Map(
       "A" -> "A", "B" -> "A",

@@ -60,8 +60,8 @@ class Round14HygieneSpec extends AnyFunSuite {
     val g = ringGraph(40, 3)
     def ringRoot(r: Int) = f"n${r * 40}%07d" // min id of ring r
     val plain = (
-      GraphXAlgos.wccLoopFresh(g).collect().map(_.toSeq).toSet,
-      GraphXAlgos.sccLoopFresh(g).collect().map(_.toSeq).toSet,
+      GraphXAlgos.wccDeltaLoop(g, GraphXAlgos.ctxFor(g, Nil)).collect().map(_.toSeq).toSet,
+      GraphXAlgos.scc(g).collect().map(_.toSeq).toSet,
       GraphXAlgos.labelPropagation(g, 4, None, weighted = true)
         .collect().map(_.toSeq).toSet)
     // ground truth: each ring is one weak component AND one SCC, labeled
@@ -73,8 +73,8 @@ class Round14HygieneSpec extends AnyFunSuite {
     System.setProperty("graft.test.loopCkptMinEdges", "1")
     try {
       val engaged = (
-        GraphXAlgos.wccLoopFresh(g).collect().map(_.toSeq).toSet,
-        GraphXAlgos.sccLoopFresh(g).collect().map(_.toSeq).toSet,
+        GraphXAlgos.wccDeltaLoop(g, GraphXAlgos.ctxFor(g, Nil)).collect().map(_.toSeq).toSet,
+        GraphXAlgos.scc(g).collect().map(_.toSeq).toSet,
         GraphXAlgos.labelPropagation(g, 4, None, weighted = true)
           .collect().map(_.toSeq).toSet)
       assert(engaged._1 == plain._1) // WCC identical under forced nudges
