@@ -179,16 +179,16 @@ object AlgoQueries {
     1000L, 3L * 32768L, 126L * 32768L, 128L * 32768L, 1280L * 32768L,
     165L * 4194304L, 7800000000L)
 
-  /** [[lpaUnrolledSql]] (weighted) extended with the vote-adjacency
-    * partition count — fine-regime width over the `und` edge count, which
-    * is exactly 2× the contracted pair count the Scala side feeds to
-    * adjWidthFor.
+  /** [[lpaUnrolledSql]] (weighted) extended with the kernel CSR's
+    * partition count — fine-regime width over both orientations of every
+    * CONTAINS edge (one per lineitem row), the oriented edge count the
+    * kernel build feeds to adjWidthFor before its one shuffle.
     */
   private def lpaWeightedCsrSql(rounds: Int): String =
     lpaUnrolledSql(rounds, weighted = true).replace(
       s"\nSELECT lb AS label, COUNT(*) AS n_nodes FROM l$rounds GROUP BY lb",
       s""",
-       parts AS (SELECT CAST(2 * COUNT(*) // 32768 + 1 AS BIGINT) AS n_adj_partitions FROM e)
+       parts AS (SELECT CAST(2 * COUNT(*) // 32768 + 1 AS BIGINT) AS n_adj_partitions FROM lineitem)
        SELECT lb AS label, COUNT(*) AS n_nodes,
               (SELECT n_adj_partitions FROM parts) AS n_adj_partitions
        FROM l$rounds GROUP BY lb""")
@@ -219,7 +219,7 @@ object AlgoQueries {
 
   val queries: Map[String, GQuery] = Map(
     "q_algo_pagerank" -> GQuery(
-      (s, d) => Algorithms.pageRank(GraphQueries.graph(s, d), 2, exact = true),
+      (s, d) => Algorithms.pageRank(GraphQueries.graph(s, d), 2),
       Some(Algorithms.pageRankOracleSql(2)), "2.11"),
 
     // per-node triangle counts (community.go:324) on the co-occurrence
@@ -393,9 +393,9 @@ object AlgoQueries {
               FROM orders JOIN customer ON o_custkey = c_custkey
               GROUP BY c_custkey"""), "2.11"),
 
-    // GraphX variants (same semantics as the DataFrame versions, asserted
-    // in AlgoSpec): iterations run as in-memory RDD joins on the cached id
-    // dictionary instead of per-round Catalyst plans
+    // CsrKernel label propagation and Louvain (same semantics as the
+    // DataFrame reference in src/test, asserted in AlgoSpec): rounds run as
+    // in-memory RDD passes instead of per-round Catalyst plans
     "q_algo_label_prop" -> GQuery(
       (s, d) => graft.algos.GraphXAlgos.labelPropagation(
         GraphQueries.graph(s, d), 3, Some("CONTAINS"))
@@ -410,25 +410,24 @@ object AlgoQueries {
       },
       Some(lpaUnrolledSql(3, weighted = true)), "2.11"),
 
-    // weighted CSR-vote LPA with the vote-adjacency PARTITION COUNT under
+    // weighted kernel LPA with the kernel CSR's PARTITION COUNT under
     // the hash check (round-13 verdict item #8): the per-partition tally +
     // one-shuffle combine must be exact across ≥2 partitions with real
     // weights, and the row goes red if a width-constant drift ever
     // collapses the sf0.01 adjacency to one partition (the multi-partition
     // path would then silently stop being oracle-covered). The DuckDB side
     // recomputes the width independently: at sf0.01 the fine regime binds
-    // (2|E| ≈ 110k edges → fine = 2|E|/32768+1 = 4; the 4·par coarse cap
+    // (2|E| ≈ 120k edges → fine = 2|E|/32768+1 = 4; the 4·par coarse cap
     // ≥ 4 for any par ≥ 1 and the 4M bytes floor = 1 never bind), so the
     // oracle formula needs no parallelism input.
     "q_algo_lpa_weighted_csr" -> GQuery(
       (s, d) => {
-        val g = GraphQueries.graph(s, d)
-        val comms = graft.algos.GraphXAlgos.labelPropagation(
-          g, 2, Some("CONTAINS"), weighted = true)
-          .groupBy("label").agg(count(lit(1)).as("n_nodes"))
-        val nParts = graft.algos.GraphXAlgos.ctxFor(g, Seq("CONTAINS"))
-          .voteCsr(true).getNumPartitions
-        comms.withColumn("n_adj_partitions", lit(nParts.toLong))
+        val labels = graft.algos.GraphXAlgos.labelPropagation(
+          GraphQueries.graph(s, d), 2, Some("CONTAINS"), weighted = true)
+        // the pinned result keeps the kernel CSR's partitioning
+        val nParts = labels.rdd.getNumPartitions
+        labels.groupBy("label").agg(count(lit(1)).as("n_nodes"))
+          .withColumn("n_adj_partitions", lit(nParts.toLong))
       },
       Some(lpaWeightedCsrSql(2)), "2.11"),
 
@@ -469,11 +468,11 @@ object AlgoQueries {
               FROM orders WHERE o_custkey <= 1000"""),
       "2.11"),
 
-    // hash-checked oracle twins of the GraphX LPA/Louvain rows on the
+    // hash-checked oracle twins of the kernel LPA/Louvain rows on the
     // star fixture: synchronous LPA on a star oscillates with known
     // phase, so after 3 (odd) rounds the closed form is exact — the center
     // holds the string-max order label, each order holds its customer
-    // (tie-break = max label, GraphXAlgos.labelPropagation reduce)
+    // (tie-break = max label, GraphXAlgos.labelPropagation)
     "q_algo_label_prop_star" -> GQuery(
       (s, d) => graft.algos.GraphXAlgos.labelPropagation(
         starFixture(s, d), 3, Some("PLACED")),
@@ -487,13 +486,13 @@ object AlgoQueries {
         starFixture(s, d), 3, Some("PLACED"))._1,
       Some(starLpaOracle), "2.11"),
 
-    // GraphX PageRank, hash-checked on the star fixture (the technique
+    // kernel PageRank, hash-checked on the star fixture (the technique
     // that converted WCC/LPA/Louvain): each order has EXACTLY one in-edge,
     // so no unordered float summation exists on any row, and 3 iterations
     // reach the closed form — customer r = 0.15 (no in-edges), order
     // r = 0.15 + 0.85·(0.15·1/outdeg(customer)), replayed in the same
     // left-to-right double order. Full-graph pagerank coverage stays on
-    // q_algo_pagerank (DataFrame twin; GraphX/DF agreement spec-asserted).
+    // q_algo_pagerank (the DECIMAL oracle path; agreement spec-asserted).
     "q_algo_pagerank_graphx" -> GQuery(
       (s, d) => graft.algos.GraphXAlgos.pageRank(starFixture(s, d), 3,
         Some("PLACED")),

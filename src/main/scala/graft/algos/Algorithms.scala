@@ -21,17 +21,15 @@ object Algorithms {
   // PageRank
   // =====================================================================
 
-  /** Neo4j/GDS-flavored PageRank: r₀=1, rᵢ₊₁ = 0.15 + 0.85·Σ rᵢ(src)/outdeg.
-    * `exact=true` routes the per-node contribution sum through DECIMAL so
-    * ranks hash-match a SQL oracle; `exact=false` is the fast double path.
+  /** Neo4j/GDS-flavored PageRank: r₀=1, rᵢ₊₁ = 0.15 + 0.85·Σ rᵢ(src)/outdeg,
+    * the per-node contribution sum routed through DECIMAL so ranks
+    * hash-match a SQL oracle ([[pageRankOracleSql]]). The oracle path
+    * only: the CALL surface runs [[GraphXAlgos.pageRank]].
     */
-  def pageRank(g: PropertyGraph, iters: Int, exact: Boolean = false): DataFrame = {
+  def pageRank(g: PropertyGraph, iters: Int): DataFrame = {
     val edges = g.edges.select("src", "dst").cache()
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg")).cache()
     val nodes = g.nodes.select("id").cache()
-
-    def contribSum(c: Column): Column =
-      if (exact) sum(c.cast("decimal(28,12)")).cast("double") else sum(c)
 
     var ranks = nodes.withColumn("r", lit(1.0))
     for (i <- 1 to iters) {
@@ -39,7 +37,7 @@ object Algorithms {
         .join(outdeg, "src")
         .join(ranks.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
-        .agg(contribSum(col("r") / col("outdeg")).as("s"))
+        .agg(sum((col("r") / col("outdeg")).cast("decimal(28,12)")).cast("double").as("s"))
       val next = nodes.join(contribs, Seq("id"), "left_outer")
         .select(col("id"), (lit(0.15) + lit(0.85) * coalesce(col("s"), lit(0.0))).as("r"))
         .localCheckpoint(true) // truncate lineage: plans grow per iteration
@@ -54,10 +52,10 @@ object Algorithms {
     // cross-engine double→DECIMAL conversions drift in the last bits; a
     // 6-decimal rank is far beyond PageRank's meaningful precision and
     // makes the result hash-stable
-    if (exact) ranks.select(col("id"), round(col("r"), 6).as("r")) else ranks
+    ranks.select(col("id"), round(col("r"), 6).as("r"))
   }
 
-  /** SQL oracle for `pageRank(exact = true)` over the TPC-H graph
+  /** SQL oracle for [[pageRank]] over the TPC-H graph
     * projection — reconstructs the same node/edge union in DuckDB.
     */
   def pageRankOracleSql(iters: Int): String = {
@@ -98,10 +96,6 @@ object Algorithms {
   // Connected components / communities
   // =====================================================================
 
-  /** Weakly connected components by iterative min-id propagation. Returns
-    * (id, component). Converges in O(diameter) rounds; each round is one
-    * join+agg. `relType` restricts the edge set.
-    */
   /** Modularity of a node partition over an undirected simple pair graph
     * (reference `apoc/community/community.go:288`):
     * Q = intra/m − Σ_c d_c² / (4m²). All accumulation is exact-integer
@@ -211,54 +205,6 @@ object Algorithms {
         .otherwise(col("external").cast("double") /
           (lit(2L) * col("internal") + col("external")))
         .as("conductance"))
-  }
-
-  /** Synchronous label propagation: each round a node adopts the label with
-    * the highest (weight-summed) frequency among neighbors, ties broken by
-    * smallest label — deterministic, no RNG.
-    */
-  def labelPropagation(g: PropertyGraph, iters: Int,
-      relType: Option[String] = None, weighted: Boolean = false): DataFrame = {
-    val es = relType.map(g.edgesByType).getOrElse(g.edges)
-    // pre-aggregate parallel edges once: every iteration then tallies over
-    // the contracted multigraph (same votes: weight-sum / multiplicity)
-    val und = es.select(col("src").as("a"), col("dst").as("b"), col("weight"))
-      .union(es.select(col("dst").as("a"), col("src").as("b"), col("weight")))
-      .groupBy("a", "b")
-      .agg((if (weighted) sum("weight") else count(lit(1)).cast("double")).as("ew"))
-      .cache()
-    val nodeIds = und.select(col("a").as("id")).distinct()
-
-    var labels = nodeIds.withColumn("label", col("id")).cache()
-    for (_ <- 1 to iters) {
-      val tally = und
-        .join(labels.select(col("id").as("b"), col("label").as("nl")), "b")
-        .groupBy(col("a"), col("nl"))
-        .agg(sum("ew").as("w"))
-      // argmax by (w desc, label asc): deterministic
-      val best = tally
-        .groupBy(col("a").as("id"))
-        .agg(max(struct(col("w"), col("nl"))).as("m")) // struct max: w first, but ties need asc label
-        .select(col("id"), col("m.nl").as("label"))
-      val next = labels.select("id").join(best, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-        .localCheckpoint(true)
-      labels.unpersist()
-      labels = next
-    }
-    und.unpersist()
-    labels
-  }
-
-  /** One-level Louvain-style community detection: local moves where a node
-    * joins the neighboring community with maximal modularity gain,
-    * approximated by weighted-majority label adoption (synchronous rounds,
-    * deterministic tie-break) followed by a modularity score of the final
-    * partition: Q = Σ_c (in_c/m − (tot_c/2m)²).
-    */
-  def louvain(g: PropertyGraph, iters: Int, relType: Option[String] = None): (DataFrame, DataFrame) = {
-    val communities = labelPropagation(g, iters, relType, weighted = true)
-    (communities, modularity(g, communities, relType))
   }
 
   /** Modularity of a partition: Q = Σ_c (in_c/m − (tot_c/2m)²). The total
@@ -513,7 +459,7 @@ object Algorithms {
           val c = element_at(col("wvec"), i + 1)
           // exact: DECIMAL-routed neighbor sums are order-independent, so a
           // SQL oracle can replay the unordered task-order float summation
-          // (the pageRank(exact=true) technique above)
+          // (the DECIMAL technique of pageRank above)
           if (exact) sum(c.cast("decimal(38,18)")).cast("double") else sum(c)
         }: _*).as("sumvec"))
       val next = g.nodes.select("id").join(agg0, Seq("id"), "left_outer")

@@ -10,80 +10,29 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import graft.graph.PropertyGraph
 
-/** GraphX-backed algorithm variants (SURVEY §7: "GraphX handles graph
-  * traversal analytics"). The property graph's string node ids are mapped
-  * to dense Longs with a `zipWithIndex` dictionary (collision-free by
-  * construction, unlike hashing — SURVEY §7 "hard parts"), the algorithm
-  * runs as an in-memory loop (no per-round query planning/shuffle setup,
-  * which dominates the DataFrame variants' wall-clock), and results join
-  * back to string ids.
+/** RDD-backed graph algorithms (SURVEY §7: "GraphX handles graph
+  * traversal analytics"), iterated as in-memory loops with no per-round
+  * query planning.
   *
-  * Two scale decisions, both from round-1/2 bench profiling:
-  *  - the dictionary + translated edges are CACHED per (graph, relType) —
-  *    one build serves PageRank, WCC, LPA, and Louvain;
-  *  - parallel edges are CONTRACTED to (multiplicity, weight-sum) BEFORE
-  *    id translation, so the two translation RDD joins run on distinct
-  *    pairs, not the raw edge multiset (≈2× fewer rows on CONTAINS).
+  * PageRank, label propagation and Louvain run on [[CsrKernel]], which
+  * builds its own CSR per call and keeps nothing. WCC, SCC and the
+  * [[BfsRdd]] paths run on a [[Ctx]]: the property graph's string node ids
+  * mapped to dense Longs with a `zipWithIndex` dictionary (collision-free
+  * by construction, unlike hashing — SURVEY §7 "hard parts"), cached per
+  * (graph, relType), with parallel edges CONTRACTED to distinct pairs
+  * BEFORE id translation, so the two translation RDD joins run on distinct
+  * pairs, not the raw edge multiset.
   */
 object GraphXAlgos {
 
-  /** Cached id dictionary + translated contracted edges for one
-    * (graph, relType). Edge attr = (multiplicity, weightSum) of the
-    * directed pair. The undirected adjacency used by LPA/Louvain is
-    * derived lazily once per weighted/unweighted flavor and cached too
-    * (louvain + label_prop share it).
+  /** Cached id dictionary + translated distinct directed (src, dst) idx
+    * pairs for one (graph, relType). The WCC/SCC loops and [[BfsRdd]]
+    * derive their adjacency views from it.
     */
   final case class Ctx(
       dict: RDD[(String, Long)], // string id → dense idx
       rev: RDD[(Long, String)], // dense idx → string id
-      edges: RDD[Edge[(Double, Double)]]) {
-    private val adjCache = new ConcurrentHashMap[Boolean, RDD[(Long, (Long, Double))]]()
-    def adjByB(weighted: Boolean): RDD[(Long, (Long, Double))] =
-      adjCache.computeIfAbsent(weighted, { w =>
-        // hash-partitioned BEFORE persisting: the LPA iteration joins this
-        // against an identically-partitioned label RDD every round, so the
-        // (large) adjacency never reshuffles — only the (small) per-round
-        // vote messages do. Width is derived SEPARATELY from the ctx edge
-        // width: the per-round vote join+tally does real work per row, so
-        // it wants all cores busy (finer target), while Pregel supersteps
-        // want few fat partitions (launch overhead × ~20 rounds).
-        val part = new org.apache.spark.HashPartitioner(
-          GraphXAlgos.adjWidthFor(2L * edges.count(), // both orientations
-            edges.sparkContext.defaultParallelism))
-        val rdd = edges
-          .flatMap { e =>
-            val ew = if (w) e.attr._2 else e.attr._1
-            Seq(((e.srcId, e.dstId), ew), ((e.dstId, e.srcId), ew))
-          }
-          .reduceByKey(_ + _)
-          .map { case ((a, b), ew) => (b, (a, ew)) }
-          .partitionBy(part)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.count()
-        rdd
-      })
-
-    /** Order-preserving label codes: rank of the string id in sorted
-      * order, so Long comparisons agree with String comparisons (LPA's
-      * max-label tie-break, WCC's min-id labeling). Iterating with Long
-      * labels keeps the per-round shuffles primitive-typed; [[rankToId]]
-      * decodes at the end. Built lazily once per ctx.
-      */
-    lazy val idxToRank: RDD[(Long, Long)] = {
-      val r = dict.sortBy(_._1).zipWithIndex()
-        .map { case ((_, idx), rank) => (idx, rank) }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      r
-    }
-    lazy val rankToId: RDD[(Long, String)] = {
-      val r = idxToRank.join(rev)
-        .map { case (_, (rank, id)) => (rank, id) }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      r
-    }
-
+      edges: RDD[(Long, Long)]) {
     /** Distinct (from, to) pair adjacency per direction ("out"|"in"|"both"),
       * hash-partitioned and cached — the BFS loops in [[BfsRdd]] join their
       * frontier against this without reshuffling the adjacency per level.
@@ -91,7 +40,7 @@ object GraphXAlgos {
     private val pairCache = new ConcurrentHashMap[String, RDD[(Long, Long)]]()
     def pairsByDir(dir: String): RDD[(Long, Long)] =
       pairCache.computeIfAbsent(dir, { d =>
-        val base = edges.map(e => (e.srcId, e.dstId))
+        val base = edges
         val oriented = d match {
           case "out" => base // contracted: already distinct
           case "in"  => base.map(_.swap)
@@ -127,29 +76,6 @@ object GraphXAlgos {
     private[algos] def cachedResult(key: String)(f: => DataFrame): DataFrame =
       resultCache.computeIfAbsent(key, _ => f)
 
-    /** Per-partition WEIGHTED CSR of the undirected vote adjacency (one
-      * [[CsrWAdj]] per [[adjByB]] partition, same partitioner) — the LPA
-      * vote loop `zipPartitions` labels against this instead of RDD-joining
-      * [[adjByB]]: the join is a COGROUP that re-materializes the full
-      * adjacency partition into a hash map EVERY round, and its output
-      * shuffles ONE RECORD PER (edge, label) — the term that put
-      * q_algo_louvain/label_prop at 35.7×/34.6× of sf0.1 in the round-12
-      * sf3 probe. The CSR pass tallies votes into a per-partition map
-      * first, so the shuffle carries one record per DISTINCT (dst, label)
-      * per partition (round-13 verdict item #2's "emit votes through the
-      * CSR substrate" option).
-      */
-    private val voteCsrCache = new ConcurrentHashMap[Boolean, RDD[CsrWAdj]]()
-    def voteCsr(weighted: Boolean): RDD[CsrWAdj] =
-      voteCsrCache.computeIfAbsent(weighted, { w =>
-        val rdd = adjByB(w)
-          .mapPartitions(it => Iterator.single(CsrWAdj.build(it)),
-            preservesPartitioning = true)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.count()
-        rdd
-      })
-
     /** Per-partition CSR index of the pair adjacency (one [[CsrAdj]] per
       * partition, self-loops dropped) — the iterative loops (WCC min-label,
       * SCC trim) `zipPartitions` their per-round delta against this instead
@@ -163,7 +89,7 @@ object GraphXAlgos {
     private val csrCache = new ConcurrentHashMap[String, RDD[CsrAdj]]()
     def csrByDir(dir: String): RDD[CsrAdj] =
       csrCache.computeIfAbsent(dir, { d =>
-        val base = edges.map(e => (e.srcId, e.dstId))
+        val base = edges
           .filter { case (a, b) => a != b }
         val oriented = d match {
           case "out" => base
@@ -234,37 +160,6 @@ object GraphXAlgos {
     }
   }
 
-  /** [[CsrAdj]] with a parallel edge-weight array — the LPA/Louvain vote
-    * substrate. keys = voters (the `b` side of [[Ctx.adjByB]]), nbrs =
-    * the vote receivers, wts = the contracted edge weight (multiplicity
-    * or weight-sum per the `weighted` flavor).
-    */
-  private[graft] final class CsrWAdj(
-      val keys: Array[Long], val offs: Array[Int],
-      val nbrs: Array[Long], val wts: Array[Double]) extends Serializable {
-    def indexOf(v: Long): Int = java.util.Arrays.binarySearch(keys, v)
-  }
-
-  private[graft] object CsrWAdj {
-    def build(it: Iterator[(Long, (Long, Double))]): CsrWAdj = {
-      val arr = it.toArray.sortBy(_._1)
-      val nbrs = new Array[Long](arr.length)
-      val wts = new Array[Double](arr.length)
-      val keysBuf = new scala.collection.mutable.ArrayBuffer[Long]()
-      val offsBuf = new scala.collection.mutable.ArrayBuffer[Int]()
-      var i = 0
-      while (i < arr.length) {
-        val k = arr(i)._1
-        if (keysBuf.isEmpty || keysBuf.last != k) { keysBuf += k; offsBuf += i }
-        nbrs(i) = arr(i)._2._1
-        wts(i) = arr(i)._2._2
-        i += 1
-      }
-      offsBuf += arr.length
-      new CsrWAdj(keysBuf.toArray, offsBuf.toArray, nbrs, wts)
-    }
-  }
-
   private val cache =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[PropertyGraph, ConcurrentHashMap[String, Ctx]]())
@@ -297,8 +192,8 @@ object GraphXAlgos {
     */
   private[graft] val EdgesPerPartition = 131072L
 
-  /** Finer width target for the LPA/Louvain undirected adjacency: its
-    * per-round vote pass is compute-bound per row (not launch-bound like
+  /** Finer width target for the [[CsrKernel]] adjacency: its
+    * per-round message pass is compute-bound per row (not launch-bound like
     * Pregel supersteps), so ~32k rows per partition keeps every core busy
     * on the sf0.1 CONTAINS graph while fixtures still collapse to 1.
     * This is the FLOOR target only — see [[adjWidthFor]]: applied
@@ -317,10 +212,10 @@ object GraphXAlgos {
     */
   private[graft] val AdjMaxEdgesPerPartition = 1L << 22
 
-  /** Per-task entry cap for the LPA vote tally map — ~512k boxed
+  /** Per-task entry cap for the [[CsrKernel]] message tally — ~512k boxed
     * (dst,label)→weight entries ≈ 60-100 MB of heap, flushed to the
-    * shuffle and restarted when exceeded (the downstream combineByKey
-    * merges partials, so chunking is exact). Bounds vote-pass heap
+    * shuffle and restarted when exceeded (the receiver adds partial
+    * tallies up, so chunking is exact). Bounds message-pass heap
     * independently of [[AdjMaxEdgesPerPartition]], whose ~24 bytes/edge
     * sizing is right for the CSR arrays but 5× low for the tally map
     * (round-13 ADVICE item 2).
@@ -332,7 +227,7 @@ object GraphXAlgos {
     sys.props.get("graft.test.tallyFlushEntries").map(_.toInt)
       .getOrElse(1 << 19)
 
-  /** Scale-aware width for the LPA vote adjacency: fine-grained
+  /** Scale-aware width for the [[CsrKernel]] adjacency: fine-grained
     * (32k/partition) while that stays under ~4 waves per core — small
     * graphs keep every core busy — but capped at 4·parallelism once the
     * graph is large enough that per-round real work saturates the cores
@@ -446,9 +341,7 @@ object GraphXAlgos {
     math.max(1L, math.min(MaxWidth.toLong, nEdges / target + 1)).toInt
 
   private def build(g: PropertyGraph, relTypes: Seq[String]): Ctx = {
-    val es = g.edgesByTypes(relTypes)
-      .groupBy("src", "dst")
-      .agg(count(lit(1)).cast("double").as("cnt"), sum("weight").as("wsum"))
+    val es = g.edgesByTypes(relTypes).select("src", "dst").distinct()
     // full-graph contexts take the node table as the endpoint superset —
     // skips a 2×|E| union+distinct shuffle, and is what makes wcc/scc
     // label isolated nodes (both loops label every dictionary vertex)
@@ -467,11 +360,11 @@ object GraphXAlgos {
       .persist(StorageLevel.MEMORY_AND_DISK)
     dict.count() // pin before reuse: zipWithIndex must evaluate exactly once
     val edgeRdd = es.rdd
-      .map(r => (r.getString(0), (r.getString(1), r.getDouble(2), r.getDouble(3))))
+      .map(r => (r.getString(0), r.getString(1)))
       .join(dict, hp)
-      .map { case (_, ((dst, c, w), srcIdx)) => (dst, (srcIdx, c, w)) }
+      .map { case (_, (dst, srcIdx)) => (dst, srcIdx) }
       .join(dict, hp)
-      .map { case (_, ((srcIdx, c, w), dstIdx)) => Edge(srcIdx, dstIdx, (c, w)) }
+      .map { case (_, (srcIdx, dstIdx)) => (srcIdx, dstIdx) }
       .persist(StorageLevel.MEMORY_AND_DISK)
     edgeRdd.count()
     // rev carries the ctx partitioner so result-decode joins
@@ -488,13 +381,12 @@ object GraphXAlgos {
     * benchmarks measure the algorithms rather than the one-time dictionary
     * build (the reference's benchmarks likewise run against loaded storage).
     * Warms: full-graph ctx (+ out/both pair adjacency for the BFS family)
-    * and the CONTAINS ctx (+ both LPA vote flavors).
+    * and the CONTAINS ctx.
     */
   def warm(g: PropertyGraph): Unit = {
     val full = ctxFor(g, Nil)
     full.pairsByDir("out"); full.pairsByDir("both")
-    val contains = ctxFor(g, Seq("CONTAINS"))
-    contains.voteCsr(false); contains.voteCsr(true)
+    ctxFor(g, Seq("CONTAINS"))
   }
 
   /** Weakly connected components: (id, component), where component is
@@ -526,9 +418,9 @@ object GraphXAlgos {
     * into one task the moment HashMin converges toward few labels (the
     * round-12 profile measured exactly that). Labels are dense idx
     * representatives; the min-string contract is settled at decode, so
-    * the [[Ctx.idxToRank]]/[[Ctx.rankToId]] sort-builds stay off this
-    * path. The resident set is O(|V| + |E|) whatever the round count —
-    * the property GraphX's Pregel connected components lacks: its
+    * no order-preserving rank dictionary is built. The resident set is
+    * O(|V| + |E|) whatever the round count — the property GraphX's Pregel
+    * connected components lacks: its
     * supersteps keep a graph replica per round, which measured 12.7× at
     * 10× data (round-10 sf1).
     */
@@ -850,7 +742,7 @@ object GraphXAlgos {
   /** Scale SCC: trim + forward-coloring + backward sweep (the FW-BW/
     * coloring family — Orzan's coloring as in the distributed-SCC
     * literature), iterated as co-partitioned RDD joins with the same
-    * residency discipline as [[labelPropagation]]: every superseded round
+    * residency discipline as [[wccDeltaLoop]]: every superseded round
     * is unpersisted, resident state stays O(|V|+|E|) no matter how many
     * rounds run — the property GraphX SCC lacks (round-11 sf1 measured it
     * 30.9× at 10× data).
@@ -883,6 +775,12 @@ object GraphXAlgos {
     * the acyclic residue between rounds, so rounds ≤ SCC-DAG depth. No
     * round cap: the loop ends when every vertex is peeled, and a cap
     * returns the unpeeled ones as wrong singleton SCCs.
+    *
+    *  - ENDGAME: once the residual vertices and arcs each fit under
+    *    [[EndgamePairCap]] (as WCC's boundary pairs must), they are
+    *    collected and an iterative Tarjan on the driver finishes them in
+    *    one pass. A deep SCC DAG whose levels share one color class would
+    *    otherwise take one outer round per level.
     */
   private[graft] def sccScale(g: PropertyGraph, c: Ctx): DataFrame = {
     val sc = c.edges.sparkContext
@@ -890,8 +788,7 @@ object GraphXAlgos {
     // (self-loops dropped there — a self-loop never merges components and
     // every vertex is in its own SCC anyway). NO id translation: the loop
     // iterates on the ctx's dense idx directly (trim singletons label
-    // themselves; sweep SCCs get their min-string label at decode), so
-    // the one-time idxToRank/rankToId sort-builds stay off this path.
+    // themselves; sweep SCCs get their min-string label at decode).
     val outCsr = c.csrByDir("out")
     val inCsr = c.csrByDir("in")
     val part = new org.apache.spark.HashPartitioner(outCsr.getNumPartitions)
@@ -985,7 +882,9 @@ object GraphXAlgos {
       .map { case (v, (u, _)) => (u, v) }
       .partitionBy(part))
     var remaining = pin(liveKeys.partitionBy(part))
-    while (!remaining.isEmpty()) {
+    def residualFits(): Boolean =
+      edges.count() <= EndgamePairCap && remaining.count() <= EndgamePairCap
+    while (!remaining.isEmpty() && !residualFits()) {
       // ---- re-trim the (small) core to fixpoint ----
       var coreTrim = true
       while (coreTrim && !remaining.isEmpty()) {
@@ -1069,6 +968,10 @@ object GraphXAlgos {
         if (engaged) System.gc() // reap the outer round's dead shuffles
       }
     }
+    // ---- driver endgame (empty when the rounds peeled everything) ----
+    val rest = remaining.keys.collect()
+    if (rest.nonEmpty)
+      done += sc.parallelize(tarjan(rest, edges.collect()).toSeq, part.numPartitions)
     val all = sc.union(done.toSeq)
     // decode (memberIdx, rootIdx) → (id, min string id of the SCC): one
     // uniform idx-keyed join for the member strings, then a combiner-safe
@@ -1088,190 +991,114 @@ object GraphXAlgos {
     pinned
   }
 
-  /** Static PageRank (same update rule as [[Algorithms.pageRank]]:
-    * r ← 0.15 + 0.85·Σ r(src)·mult/outdeg, where outdeg counts parallel
-    * edges) as aggregateMessages rounds on the contracted graph.
-    * Returns (id, r).
+  /** Tarjan's SCC over `vs` and the arcs among them, iterative (no
+    * recursion depth limit). Returns (vertex, representative) with one
+    * representative per SCC.
+    */
+  private def tarjan(vs: Array[Long], arcs: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val n = vs.length
+    val at = new java.util.HashMap[java.lang.Long, Integer]()
+    vs.indices.foreach(i => at.put(vs(i), i))
+    val offs = new Array[Int](n + 1)
+    arcs.foreach { case (u, _) => offs(at.get(u) + 1) += 1 }
+    for (i <- 0 until n) offs(i + 1) += offs(i)
+    val nbr = new Array[Int](arcs.length)
+    val fill = offs.clone()
+    arcs.foreach { case (u, v) =>
+      val i = at.get(u).intValue(); nbr(fill(i)) = at.get(v); fill(i) += 1
+    }
+    val index = Array.fill(n)(-1); val low = new Array[Int](n)
+    val onStack = new Array[Boolean](n); val rep = new Array[Long](n)
+    val stack = new Array[Int](n); var sp = 0
+    val work = new Array[Int](n); val next = new Array[Int](n); var wp = 0
+    var counter = 0
+    for (s0 <- 0 until n if index(s0) < 0) {
+      index(s0) = counter; low(s0) = counter; counter += 1
+      stack(sp) = s0; sp += 1; onStack(s0) = true
+      work(wp) = s0; next(s0) = offs(s0); wp += 1
+      while (wp > 0) {
+        val v = work(wp - 1)
+        if (next(v) < offs(v + 1)) {
+          val w = nbr(next(v)); next(v) += 1
+          if (index(w) < 0) {
+            index(w) = counter; low(w) = counter; counter += 1
+            stack(sp) = w; sp += 1; onStack(w) = true
+            work(wp) = w; next(w) = offs(w); wp += 1
+          } else if (onStack(w)) low(v) = math.min(low(v), index(w))
+        } else {
+          wp -= 1
+          if (low(v) == index(v)) {
+            var w = -1
+            while (w != v) { sp -= 1; w = stack(sp); onStack(w) = false; rep(w) = vs(v) }
+          }
+          if (wp > 0) { val u = work(wp - 1); low(u) = math.min(low(u), low(v)) }
+        }
+      }
+    }
+    vs.indices.map(i => (vs(i), rep(i))).toArray
+  }
+
+  /** PageRank with the update rule of the DECIMAL oracle
+    * [[Algorithms.pageRank]] — r₀ = 1, r ← 0.15 + 0.85·Σ r(src)·mult/outdeg,
+    * where outdeg counts parallel edges — on [[CsrKernel]]. Returns (id, r).
     */
   def pageRank(g: PropertyGraph, iters: Int,
-      relType: Option[String] = None): DataFrame = {
-    val c = ctx(g, relType)
-    val base = Graph.fromEdges(c.edges.map(e => Edge(e.srcId, e.dstId, e.attr._1)), 0.0,
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-    val outW = base.aggregateMessages[Double](t => t.sendToSrc(t.attr), _ + _)
-    var graph = base.outerJoinVertices(outW) { (_, _, ow) => (1.0, ow.getOrElse(0.0)) }
-    // per-round vertex pinning, same residency discipline as [[wcc]]:
-    // without it every aggregateMessages recomputes the full join chain
-    // back to the base (O(iters²) work), and Pregel-style MEMORY_ONLY
-    // accumulation is what degraded under memory pressure at sf1
-    graph.vertices.persist(StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 1 to iters) {
-      val msgs = graph.aggregateMessages[Double](
-        t => if (t.srcAttr._2 > 0) t.sendToDst(t.srcAttr._1 * t.attr / t.srcAttr._2),
-        _ + _)
-      val next = graph.outerJoinVertices(msgs) { case (_, (_, ow), m) =>
-        (0.15 + 0.85 * m.getOrElse(0.0), ow)
-      }
-      next.vertices.persist(StorageLevel.MEMORY_AND_DISK)
-      next.vertices.count()
-      graph.vertices.unpersist(false)
-      graph = next
-    }
-    val rows = graph.vertices.join(c.rev).map { case (_, ((r, _), id)) => Row(id, r) }
-    toDf(g, rows, StructType(Seq(
-      StructField("id", StringType), StructField("r", DoubleType))))
-  }
+      relType: Option[String] = None): DataFrame =
+    CsrKernel.run[Double, String](g, relType.toSeq, undirected = false,
+      weighted = false, iters, StructType(Seq(
+        StructField("id", StringType), StructField("r", DoubleType))))(
+      init = c => Array.fill(c.keys.length)(1.0),
+      dst = m => m,
+      send = { (c, r, i, t) =>
+        val (from, to) = (c.offs(i), c.offs(i + 1))
+        var outdeg = 0.0; var j = from
+        while (j < to) { outdeg += c.wts(j); j += 1 }
+        j = from
+        while (j < to) { t.add(c.nbrs(j), r(i) * c.wts(j) / outdeg); j += 1 }
+      },
+      update = (c, _, in) => Array.tabulate(c.keys.length) { i =>
+        val s = in.sums.get(c.keys(i))
+        0.15 + 0.85 * (if (s == null) 0.0 else s(0))
+      })
 
-  /** Label propagation with EXACTLY the [[Algorithms.labelPropagation]]
-    * semantics (parallel-edge contraction, weight-sum votes, argmax by
-    * (weight, label) with the same tie-break), but iterated as in-memory
-    * RDD joins over the cached dictionary — no per-round Catalyst planning.
-    * Returns (id, label).
+  /** Synchronous label propagation on [[CsrKernel]] over the undirected
+    * graph, parallel edges contracted: each round every node adopts the
+    * label with the largest vote, a vote being the edge multiplicity or,
+    * `weighted`, the weight sum. Ties go to the LARGEST label (string
+    * order); a node without neighbours keeps its label, which starts as its
+    * own id. Returns (id, label).
     */
   def labelPropagation(g: PropertyGraph, iters: Int,
-      relType: Option[String] = None, weighted: Boolean = false): DataFrame = {
-    val c = ctx(g, relType)
-    // undirected contraction: both orientations of every directed pair,
-    // votes = weight-sum or multiplicity (matches the DataFrame und build)
-    val csr = c.voteCsr(weighted)
-
-    // Round structure (round-13 rework — the sf3 probe measured the old
-    // adjByB.join(labels) + two reduceByKeys at 35.7×/34.6× of sf0.1):
-    //  (1) labels are co-partitioned with the pinned CSR adjacency, so
-    //      the vote pass is a zipPartitions — no per-round cogroup
-    //      re-materialization of the adjacency, no shuffle of edge data;
-    //  (2) votes are tallied into a per-partition (dst, label) → weight
-    //      map BEFORE the shuffle, so the one shuffle per round carries
-    //      per-partition-distinct aggregates, not one record per edge —
-    //      and its volume COLLAPSES as labels converge;
-    //  (3) the receiver merges partial tallies per dst and takes the
-    //      argmax by (weight, label) — labels are order-preserving Long
-    //      RANKS of the string ids (c.idxToRank), so the Long tie-break
-    //      agrees with the String tie-break exactly;
-    //  (4) the label update is a zipPartitions against the (small) tally,
-    //      not a cogroup over the full label set.
-    val part = new org.apache.spark.HashPartitioner(
-      math.max(1, csr.getNumPartitions))
-    // lineage-hygiene gate: both orientations of the contracted edge set
-    // (edges is pinned, so the count is a cached-RDD count)
-    val nVoteEdges = 2L * c.edges.count()
-    val init = c.idxToRank.partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK) // initial label = own rank
-    var labels: RDD[(Long, Long)] = init
-    for (round <- 1 to iters) {
-      val votes: RDD[(Long, (Long, Double))] =
-        csr.zipPartitions(labels, preservesPartitioning = false) { (cit, lit) =>
-          if (!cit.hasNext) Iterator.empty
-          else {
-            val adj = cit.next()
-            // tally in bounded chunks: early rounds (all labels distinct)
-            // hold ~one boxed (dst,label)→weight entry PER EDGE, well over
-            // 100 bytes each — unchunked, a 4M-edge partition's map can
-            // reach several hundred MB per concurrent task (round-13
-            // ADVICE). Flushing at TallyFlushEntries keeps per-task heap
-            // bounded; the downstream combineByKey merges partial tallies,
-            // so chunked emission is exact. A chunk can overshoot by the
-            // max degree of its last source vertex — fine, the cap is a
-            // heap bound, not a contract.
-            import scala.jdk.CollectionConverters._
-            val flushCap = TallyFlushEntries // hoisted off the hot loop
-            def chunks(): Iterator[(Long, (Long, Double))] = {
-              if (!lit.hasNext) Iterator.empty
-              else {
-                val acc = new java.util.HashMap[(Long, Long), Array[Double]]()
-                while (lit.hasNext && acc.size < flushCap) {
-                  val (b, lb) = lit.next()
-                  val i = adj.indexOf(b)
-                  if (i >= 0) {
-                    var j = adj.offs(i); val end = adj.offs(i + 1)
-                    while (j < end) {
-                      val k = (adj.nbrs(j), lb)
-                      val cur = acc.get(k)
-                      if (cur == null) acc.put(k, Array(adj.wts(j)))
-                      else cur(0) += adj.wts(j)
-                      j += 1
-                    }
-                  }
-                }
-                acc.entrySet().iterator().asScala
-                  .map(e => (e.getKey._1, (e.getKey._2, e.getValue()(0)))) ++
-                  chunks() // lazy RHS: next chunk builds only when reached
-              }
-            }
-            chunks()
-          }
+      relType: Option[String] = None, weighted: Boolean = false): DataFrame =
+    CsrKernel.run[String, (String, String)](g, relType.toSeq, undirected = true,
+      weighted, iters, StructType(Seq(
+        StructField("id", StringType), StructField("label", StringType))))(
+      init = _.keys.clone(),
+      dst = _._1, // message key = (receiver, voted label)
+      send = { (c, lbl, i, t) =>
+        var j = c.offs(i)
+        while (j < c.offs(i + 1)) { t.add((c.nbrs(j), lbl(i)), c.wts(j)); j += 1 }
+      },
+      update = { (c, lbl, in) =>
+        val best = new java.util.HashMap[String, (Double, String)]()
+        in.sums.forEach { (k, v) =>
+          val cur = best.get(k._1)
+          if (cur == null || v(0) > cur._1 || (v(0) == cur._1 && k._2 > cur._2))
+            best.put(k._1, (v(0), k._2))
         }
-      // single label-keyed shuffle: merge the partial (label → weight)
-      // tallies per dst, then argmax. mapSideCombine=false — the
-      // zipPartitions pass above IS the map-side combine, over primitive
-      // CSR arrays instead of the shuffle writer's boxed machinery.
-      type LMap = java.util.HashMap[java.lang.Long, java.lang.Double]
-      val tally: RDD[(Long, Long)] = votes.combineByKeyWithClassTag[LMap](
-        (v: (Long, Double)) => { val m = new LMap; m.put(v._1, v._2); m },
-        (m: LMap, v: (Long, Double)) => {
-          val c0 = m.get(v._1)
-          m.put(v._1, if (c0 == null) v._2 else c0 + v._2); m
-        },
-        (m1: LMap, m2: LMap) => {
-          val (big, sm) = if (m1.size >= m2.size) (m1, m2) else (m2, m1)
-          val it = sm.entrySet().iterator()
-          while (it.hasNext) {
-            val e = it.next(); val c0 = big.get(e.getKey)
-            big.put(e.getKey,
-              if (c0 == null) e.getValue else c0 + e.getValue)
-          }
-          big
-        },
-        part, mapSideCombine = false
-      ).mapValues { m =>
-        // same argmax as max(struct(w, nl)): weight first, then label
-        var bw = Double.NegativeInfinity; var bl = Long.MinValue
-        val it = m.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          val w = e.getValue.doubleValue(); val l = e.getKey.longValue()
-          if (w > bw || (w == bw && l > bl)) { bw = w; bl = l }
+        Array.tabulate(c.keys.length) { i =>
+          val b = best.get(c.keys(i))
+          if (b == null) lbl(i) else b._2
         }
-        bl
-      }
-      val next = labels.zipPartitions(tally, preservesPartitioning = true) {
-        (lit, tit) =>
-          val m = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-          tit.foreach { case (v, lb) => m.put(v, lb) }
-          lit.map { case (v, old) =>
-            val nw = m.get(v)
-            (v, if (nw != null) nw.longValue() else old)
-          }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      next.localCheckpoint() // lineage hygiene: see [[LoopCkptEvery]]
-      next.count()
-      loopGc(round, nVoteEdges)
-      if (labels ne init) labels.unpersist()
-      labels = next
-    }
-    val rows = labels
-      .map { case (idx, rank) => (rank, idx) }
-      .join(c.rankToId) // decode label rank → label string id
-      .map { case (_, (idx, lbId)) => (idx, lbId) }
-      .join(c.rev)
-      .map { case (_, (lb, id)) => Row(id, lb) }
-    val out = toDf(g, rows, StructType(Seq(
-      StructField("id", StringType), StructField("label", StringType))))
-    // the caller consumes a DataFrame; free the iteration lineage once the
-    // rows RDD is realized through it (init stays only if iters == 0)
-    if (labels ne init) init.unpersist()
-    out
-  }
+      })
 
-  /** Louvain-style communities (GraphX LPA weighted-majority local moves) +
-    * modularity of the final partition — same contract as
-    * [[Algorithms.louvain]].
+  /** Louvain-style communities (weighted label propagation, the
+    * label-adoption stand-in for modularity-gain local moves) and the
+    * modularity of the final partition. Returns (communities, modularity).
     */
   def louvain(g: PropertyGraph, iters: Int,
       relType: Option[String] = None): (DataFrame, DataFrame) = {
-    // cached: modularity joins the communities twice (src + dst side)
     val communities = labelPropagation(g, iters, relType, weighted = true)
-      .localCheckpoint(true)
     (communities, Algorithms.modularity(g, communities, relType))
   }
 }

@@ -137,9 +137,9 @@ object ApocGraphProcs {
     "apoc.community.stronglyconnectedcomponents" -> ((g, args) =>
       GraphXAlgos.scc(g, arg(args, 0))),
     "apoc.community.labelpropagation" -> ((g, args) =>
-      Algorithms.labelPropagation(g, argInt(args, 0, 10))),
+      GraphXAlgos.labelPropagation(g, argInt(args, 0, 10))),
     "apoc.community.louvain" -> ((g, args) =>
-      Algorithms.louvain(g, argInt(args, 0, 10))._1),
+      GraphXAlgos.louvain(g, argInt(args, 0, 10))._1),
     "apoc.community.modularity" -> ((g, args) => {
       val p = pairs(g, arg(args, 0))
       val comm = Dedup.dedupClusters(p)
@@ -185,16 +185,16 @@ object ApocGraphProcs {
     // distributed Louvain, method surfaced (community.go:923 FastGreedy
     // et al are O(n³) driver loops)
     "apoc.community.fastgreedy" -> ((g, args) =>
-      Algorithms.louvain(g, argInt(args, 0, 10))._1
+      GraphXAlgos.louvain(g, argInt(args, 0, 10))._1
         .withColumn("method", lit("louvain(fastGreedy substitution)"))),
     "apoc.community.infomap" -> ((g, args) =>
-      Algorithms.louvain(g, argInt(args, 0, 10))._1
+      GraphXAlgos.louvain(g, argInt(args, 0, 10))._1
         .withColumn("method", lit("louvain(infomap substitution)"))),
     "apoc.community.spinglass" -> ((g, args) =>
-      Algorithms.louvain(g, argInt(args, 0, 10))._1
+      GraphXAlgos.louvain(g, argInt(args, 0, 10))._1
         .withColumn("method", lit("louvain(spinglass substitution)"))),
     "apoc.community.walktrap" -> ((g, args) =>
-      Algorithms.louvain(g, argInt(args, 0, 10))._1
+      GraphXAlgos.louvain(g, argInt(args, 0, 10))._1
         .withColumn("method", lit("louvain(walktrap substitution)"))),
 
     // ---- apoc.label.* storage procedures (label.go; scalar members live

@@ -3,7 +3,7 @@ package graft.cypher
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.graph.{Expand, PropertyGraph}
-import graft.algos.{Algorithms, BfsRdd}
+import graft.algos.{Algorithms, BfsRdd, GraphXAlgos}
 import graft.operators.PathExpand
 
 /** CALL-surface registry for the apoc.algo / apoc.neighbors / apoc.path /
@@ -116,7 +116,7 @@ object ApocProcs {
     // in-memory loops, riding the same implementations the q_algo_* rows
     // oracle-check
     "apoc.algo.pagerank" -> ((g, args) =>
-      Algorithms.pageRank(g, argInt(args, 0, 20))),
+      GraphXAlgos.pageRank(g, argInt(args, 0, 20))),
     "apoc.algo.degreecentrality" -> ((g, args) => {
       // score = undirected degree (algo.go:220-237)
       val es = arg(args, 0).map(g.edgesByType).getOrElse(g.edges)
@@ -124,7 +124,7 @@ object ApocProcs {
         .groupBy("id").agg(count(lit(1)).as("score"))
     }),
     "apoc.algo.community" -> ((g, args) => // label propagation (algo.go:239)
-      Algorithms.labelPropagation(g, argInt(args, 0, 10))),
+      GraphXAlgos.labelPropagation(g, argInt(args, 0, 10))),
     // closeness of ONE node: (reachable−1) / Σ dist over the bounded
     // undirected BFS — the reference's per-node loop (algo.go:162-218) as a
     // point query, like its A* surface

@@ -169,12 +169,10 @@ class ComponentDiffSpec extends AnyFunSuite {
     check(rnd.shuffle(groups.flatten), edges)
   }
 
-  test("an SCC DAG 66 levels deep") {
-    // level i is the 2-cycle h_i <-> x_i, with x_i -> x_(i+1) and h_i -> x_j
-    // for every later j. Hubs come first in node order, so h_i holds the
-    // min ctx idx of what is left and colors every later level in one
-    // hop: each coloring round peels exactly one level, 66 rounds in all
-    val k = 66
+  /** Level i is the 2-cycle h_i <-> x_i, with x_i -> x_(i+1) and
+    * h_i -> x_j for every later j.
+    */
+  private def sccDag(k: Int): (Seq[String], Edges) = {
     val hubs = (0 until k).map(i => s"h$i")
     val xs = (0 until k).map(i => s"x$i")
     val edges = (0 until k).flatMap { i =>
@@ -182,7 +180,43 @@ class ComponentDiffSpec extends AnyFunSuite {
         (if (i + 1 < k) Seq((xs(i), xs(i + 1))) else Nil) ++
         (i + 1 until k).map(j => (hubs(i), xs(j)))
     }
-    check(hubs ++ xs, edges)
+    (hubs ++ xs, edges)
+  }
+
+  test("an SCC DAG 66 levels deep") {
+    // Hubs come first in node order, so h_i holds the min ctx idx of what
+    // is left and colors every later level in one hop: each outer round
+    // of the distributed loop peels exactly one level, 66 rounds in all,
+    // unless the driver endgame takes the residual first
+    val (nodes, edges) = sccDag(66)
+    check(nodes, edges)
+  }
+
+  test("an SCC DAG 70 levels deep finishes in one driver endgame") {
+    // 70 outer rounds in the distributed loop; the residual (140 nodes,
+    // 2,624 arcs) fits under EndgamePairCap, so Tarjan finishes it
+    val (nodes, edges) = sccDag(70)
+    val t0 = System.nanoTime()
+    assertSame(comps(GraphXAlgos.scc(graph(nodes, edges))), sccRef(nodes, edges), "scc")
+    assert(System.nanoTime() - t0 < 30e9, "the endgame should take seconds, not a round per level")
+  }
+
+  test("scc through distributed rounds only (driver endgame off)") {
+    val rnd = new scala.util.Random(3L)
+    val nodes = ids(120)
+    // rings of 5 joined into a DAG by forward chords, a few random chords
+    // merging rings, self-loops and repeated arcs
+    val rings = (0 until 120 by 5).flatMap(b => (0 until 5).map(i => (s"n${b + i}", s"n${b + (i + 1) % 5}")))
+    val chords = Seq.fill(50) { val a = rnd.nextInt(115); (s"n$a", s"n${a + 1 + rnd.nextInt(119 - a)}") } ++
+      Seq.fill(4)((s"n${rnd.nextInt(120)}", s"n${rnd.nextInt(120)}"))
+    val edges = rings ++ chords ++ chords.take(10) ++ Seq(("n0", "n0"), ("n7", "n7"))
+    val (dagNodes, dagEdges) = sccDag(6)
+    sys.props("graft.test.endgamePairCap") = "0"
+    try {
+      assertSame(comps(GraphXAlgos.scc(graph(nodes, edges))), sccRef(nodes, edges), "scc")
+      assertSame(comps(GraphXAlgos.scc(graph(dagNodes, dagEdges))),
+        sccRef(dagNodes, dagEdges), "scc on a 6-level DAG")
+    } finally sys.props.remove("graft.test.endgamePairCap")
   }
 
   test("scc across multiple ctx partitions: 14,000 rings with DAG tails") {

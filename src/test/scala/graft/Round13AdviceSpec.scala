@@ -10,8 +10,8 @@ import graft.graph.PropertyGraph
   *    as final components on diameter > maxIter graphs);
   *  - the public wcc() must thread its maxIter through (it was silently
   *    ignored) while producing the same fully-converged labeling;
-  *  - the reworked CSR-vote LPA must stay exact across MULTIPLE
-  *    adjacency partitions (the vote shuffle now carries per-partition
+  *  - the kernel LPA must stay exact across MULTIPLE
+  *    CSR partitions (the vote shuffle now carries per-partition
   *    aggregates — a partition-alignment bug would silently drop votes,
   *    the same failure shape Round12ScaleSpec caught for WCC).
   */
@@ -59,12 +59,11 @@ class Round13AdviceSpec extends AnyFunSuite {
     // DataFrame variant is the semantics oracle (same contract asserted
     // single-partition in AlgoSpec)
     val g = chainGraph(40000)
-    val df = graft.algos.Algorithms.labelPropagation(g, 3, None)
+    val df = LpaReference.labelPropagation(g, 3, None)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val gx = graft.algos.GraphXAlgos.labelPropagation(g, 3, None)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(graft.algos.GraphXAlgos.ctxFor(g, Nil).voteCsr(false)
-      .getNumPartitions > 1, "fixture must span multiple vote partitions")
+    val gxDf = graft.algos.GraphXAlgos.labelPropagation(g, 3, None)
+    val gx = gxDf.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(gxDf.rdd.getNumPartitions > 1, "fixture must span multiple kernel partitions")
     assert(gx == df)
   }
 

@@ -21,7 +21,9 @@ import graft.graph.PropertyGraph
   *
   * The ring fixture IS the regression test for the scheduler explosion:
   * 3 disjoint 40-cycles force a 40-round SCC sweep (and a deep WCC loop)
-  * that simply never completed before the truncation.
+  * that simply never completed before the truncation. The SCC runs with
+  * the driver endgame off (`graft.test.endgamePairCap` = 0), since the
+  * endgame would finish these rings in one Tarjan pass.
   */
 class Round14HygieneSpec extends AnyFunSuite {
   import TestSpark._
@@ -47,6 +49,13 @@ class Round14HygieneSpec extends AnyFunSuite {
     PropertyGraph(nodes, edges)
   }
 
+  /** SCC through its distributed rounds only. */
+  private def distributedScc(g: PropertyGraph) = {
+    sys.props("graft.test.endgamePairCap") = "0"
+    try GraphXAlgos.scc(g).collect().map(_.toSeq).toSet
+    finally sys.props.remove("graft.test.endgamePairCap")
+  }
+
   test("hygieneRound paces the GC nudge by edge count and cadence") {
     val big = GraphXAlgos.LoopCkptMinEdges
     assert(!GraphXAlgos.hygieneRound(3, big - 1)) // small graph: never
@@ -61,7 +70,7 @@ class Round14HygieneSpec extends AnyFunSuite {
     def ringRoot(r: Int) = f"n${r * 40}%07d" // min id of ring r
     val plain = (
       GraphXAlgos.wccDeltaLoop(g, GraphXAlgos.ctxFor(g, Nil)).collect().map(_.toSeq).toSet,
-      GraphXAlgos.scc(g).collect().map(_.toSeq).toSet,
+      distributedScc(g),
       GraphXAlgos.labelPropagation(g, 4, None, weighted = true)
         .collect().map(_.toSeq).toSet)
     // ground truth: each ring is one weak component AND one SCC, labeled
@@ -74,7 +83,7 @@ class Round14HygieneSpec extends AnyFunSuite {
     try {
       val engaged = (
         GraphXAlgos.wccDeltaLoop(g, GraphXAlgos.ctxFor(g, Nil)).collect().map(_.toSeq).toSet,
-        GraphXAlgos.scc(g).collect().map(_.toSeq).toSet,
+        distributedScc(g),
         GraphXAlgos.labelPropagation(g, 4, None, weighted = true)
           .collect().map(_.toSeq).toSet)
       assert(engaged._1 == plain._1) // WCC identical under forced nudges

@@ -6,7 +6,7 @@ import graft.algos.GraphXAlgos
 import graft.graph.PropertyGraph
 
 /** Round-14 scale work (round-13 verdict items #6 and ADVICE #2):
-  *  - EVERY per-round loop substrate — the LPA vote adjacency, the WCC/SCC
+  *  - EVERY per-round loop substrate — the kernel CSR, the WCC/SCC
   *    CSR adjacency, the BFS pair adjacency — must derive its partition
   *    width from the scale-aware [[GraphXAlgos.adjWidthFor]], not a flat
   *    rows-per-partition constant: per-round shuffle-block count grows as
@@ -14,7 +14,7 @@ import graft.graph.PropertyGraph
   *    into 5.7M blocks/round;
   *  - adjWidthFor's three regimes (fine / coarse cap / bytes floor) hold
   *    at their crossovers;
-  *  - the LPA vote tally's chunked flush (bounded per-task heap) is EXACT:
+  *  - the kernel message tally's chunked flush (bounded per-task heap) is EXACT:
   *    forcing a tiny flush cap must not change any label.
   */
 class Round14ScaleSpec extends AnyFunSuite {
@@ -79,8 +79,10 @@ class Round14ScaleSpec extends AnyFunSuite {
       fineTarget = GraphXAlgos.EdgesPerPartition)
     assert(wVote > wBoth && wBoth > 1,
       "fixture must split the two fine targets and be multi-partition")
-    // LPA vote adjacency (round-13 rework) — both orientations
-    assert(c.voteCsr(false).getNumPartitions == wVote)
+    // kernel CSR (its pinned result keeps the CSR partitioning): both
+    // orientations for label propagation, out-edges for PageRank
+    assert(GraphXAlgos.labelPropagation(g, 0).rdd.getNumPartitions == wVote)
+    assert(GraphXAlgos.pageRank(g, 0).rdd.getNumPartitions == GraphXAlgos.adjWidthFor(e, par))
     // WCC delta loop + SCC trim/coloring substrate
     assert(c.csrByDir("both").getNumPartitions == wBoth)
     assert(c.csrByDir("out").getNumPartitions == wOne)
@@ -114,15 +116,13 @@ class Round14ScaleSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     sys.props("graft.test.tallyFlushEntries") = "8"
     try {
-      // fresh graph → fresh ctx → fresh vote pass under the tiny cap
-      val g2 = chainGraph(40000)
-      val chunked = GraphXAlgos.labelPropagation(g2, 3, None, weighted = true)
+      // the kernel builds per call, so the same graph runs under the tiny cap
+      val chunked = GraphXAlgos.labelPropagation(g, 3, None, weighted = true)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(chunked == baseline)
-      val g3 = chainGraph(40000)
-      val df = graft.algos.Algorithms.labelPropagation(g3, 3, None)
+      val df = LpaReference.labelPropagation(g, 3, None)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      val gx = GraphXAlgos.labelPropagation(g3, 3, None)
+      val gx = GraphXAlgos.labelPropagation(g, 3, None)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(gx == df)
     } finally sys.props.remove("graft.test.tallyFlushEntries")
