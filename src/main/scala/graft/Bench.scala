@@ -50,7 +50,7 @@ object Bench {
     // one-time build
     val g = GraphQueries.graph(spark, sfDir)
     g.nodes.count(); g.edges.count()
-    // …and the GraphX id-dictionary contexts the algorithm/path family
+    // …and the GraphX id-dictionary context the SCC and path family
     // shares (round-2 bench showed the first algo query absorbing the ~5 s
     // ctx build)
     graft.algos.GraphXAlgos.warm(g)
@@ -216,7 +216,9 @@ object Bench {
         "--add-opens=java.base/sun.util.calendar=ALL-UNNAMED",
         "--add-opens=java.base/sun.security.action=ALL-UNNAMED",
         "-cp", childClasspath(), "graft.Bench")
-      pb.redirectOutput(ProcessBuilder.Redirect.INHERIT)
+      // the child's stdout (its own JSON and summary lines) is copied to
+      // stderr below, so this parent's summary is the only one on stdout;
+      // its result comes back through SPARK_GRAFT_BENCH_OUT
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val env = pb.environment()
       env.remove("SPARK_GRAFT_BENCH_ISOLATE")
@@ -225,6 +227,8 @@ object Bench {
       System.err.println(s"[bench-isolate] $name ...")
       val t0 = System.nanoTime()
       val proc = pb.start()
+      val copy = new Thread(() => proc.getInputStream.transferTo(System.err))
+      copy.setDaemon(true); copy.start()
       val finished = proc.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
       if (!finished) {
         proc.destroyForcibly(); proc.waitFor()
@@ -245,6 +249,7 @@ object Bench {
           s"${timings.get(name).orElse(errors.get(name)).getOrElse("?")}" +
           f" (child ${(System.nanoTime() - t0) / 1e9}%.0f s)")
       }
+      copy.join(10000) // the child has exited: its stdout ends
       try java.nio.file.Files.deleteIfExists(out) catch { case _: Exception => () }
       try { // recursive delete of the child's spill dir, children first
         import java.nio.file.{Files, Path}

@@ -16,7 +16,7 @@ import graft.graph.{Expand, PropertyGraph}
   * bounded-hop point queries — the reference answers these from in-memory
   * adjacency (`/root/reference/pkg/cypher/traversal.go:1435`). Here a level
   * is a handful of RDD joins against the contracted, cached, pre-partitioned
-  * pair adjacency shared with PageRank/WCC/LPA ([[GraphXAlgos.Ctx]]), which
+  * pair adjacency shared with SCC ([[GraphXAlgos.Ctx]]), which
   * drops the per-level cost to shuffle-of-the-frontier only. Results are
   * translated back to string ids distributively (explode + dictionary join)
   * — no `collect()` anywhere, so the same code path survives a 1000-executor

@@ -2,9 +2,12 @@ package graft.algos
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -14,8 +17,8 @@ import graft.graph.PropertyGraph
   * traversal analytics"), iterated as in-memory loops with no per-round
   * query planning.
   *
-  * PageRank, label propagation and Louvain run on [[CsrKernel]], which
-  * builds its own CSR per call and keeps nothing. WCC, SCC and the
+  * PageRank, label propagation, Louvain and WCC run on [[CsrKernel]],
+  * which builds its own CSR per call and keeps nothing. SCC and the
   * [[BfsRdd]] paths run on a [[Ctx]]: the property graph's string node ids
   * mapped to dense Longs with a `zipWithIndex` dictionary (collision-free
   * by construction, unlike hashing — SURVEY §7 "hard parts"), cached per
@@ -26,8 +29,8 @@ import graft.graph.PropertyGraph
 object GraphXAlgos {
 
   /** Cached id dictionary + translated distinct directed (src, dst) idx
-    * pairs for one (graph, relType). The WCC/SCC loops and [[BfsRdd]]
-    * derive their adjacency views from it.
+    * pairs for one (graph, relType). The SCC loop and [[BfsRdd]] derive
+    * their adjacency views from it.
     */
   final case class Ctx(
       dict: RDD[(String, Long)], // string id → dense idx
@@ -64,27 +67,15 @@ object GraphXAlgos {
         rdd
       })
 
-    /** Materialized component labelings, keyed by algorithm — the same
-      * derived-index pattern as [[csrByDir]] and the search tier's HNSW
-      * partition-graph cache: a ctx belongs to ONE immutable graph
-      * snapshot (writes produce a new PropertyGraph → a new ctx), so a
-      * computed labeling can never go stale, and repeat analytics over a
-      * loaded store pay the loop once (the reference's benchmarks
-      * likewise run against loaded storage — BASELINE.md).
-      */
-    private val resultCache = new ConcurrentHashMap[String, DataFrame]()
-    private[algos] def cachedResult(key: String)(f: => DataFrame): DataFrame =
-      resultCache.computeIfAbsent(key, _ => f)
-
-    /** Per-partition CSR index of the pair adjacency (one [[CsrAdj]] per
-      * partition, self-loops dropped) — the iterative loops (WCC min-label,
-      * SCC trim) `zipPartitions` their per-round delta against this instead
-      * of RDD-joining the pair RDD: a co-partitioned RDD join is a COGROUP
-      * that re-materializes the full adjacency partition into a hash map
-      * EVERY round (~2.6 s/round fixed cost at sf1, the round-12 profile's
-      * dominant term), while the CSR lookup costs only the delta's edges.
-      * Same idea as GraphX's indexed vertex/edge partitions, kept to
-      * exactly the two primitives these loops need.
+    /** Per-partition CSR index of the pair adjacency per direction
+      * ("out"|"in"; one [[CsrAdj]] per partition, self-loops dropped) —
+      * the SCC trim rounds `zipPartitions` their per-round delta against
+      * this instead of RDD-joining the pair RDD: a co-partitioned RDD join
+      * is a COGROUP that re-materializes the full adjacency partition into
+      * a hash map EVERY round (~2.6 s/round fixed cost at sf1, the
+      * round-12 profile's dominant term), while the CSR lookup costs only
+      * the delta's edges. Same idea as GraphX's indexed vertex/edge
+      * partitions, kept to exactly the two primitives the loop needs.
       */
     private val csrCache = new ConcurrentHashMap[String, RDD[CsrAdj]]()
     def csrByDir(dir: String): RDD[CsrAdj] =
@@ -94,18 +85,16 @@ object GraphXAlgos {
         val oriented = d match {
           case "out" => base
           case "in"  => base.map(_.swap)
-          case _     => base.union(base.map(_.swap)).distinct()
         }
-        // scale-aware width (round-13 verdict item #6): the WCC delta loop
-        // and SCC trim/FW-BW rounds shuffle state at THIS width every
-        // round; the flat ctx edge width put sf10 at ~1000 partitions →
-        // ~1M shuffle blocks per round (maps × reducers), the exact term
-        // that dominated the round-12 sf3 LPA probe. Fine target = the
-        // coarse 128k/partition (delta passes are launch-bound — see
-        // pairsByDir); the 4·par cap and 4M bytes floor do the scale work.
+        // scale-aware width (round-13 verdict item #6): the SCC trim/FW-BW
+        // rounds shuffle state at THIS width every round; the flat ctx
+        // edge width put sf10 at ~1000 partitions → ~1M shuffle blocks per
+        // round (maps × reducers), the exact term that dominated the
+        // round-12 sf3 LPA probe. Fine target = the coarse 128k/partition
+        // (delta passes are launch-bound — see pairsByDir); the 4·par cap
+        // and 4M bytes floor do the scale work.
         val part = new org.apache.spark.HashPartitioner(
-          GraphXAlgos.adjWidthFor(
-            (if (d == "both") 2L else 1L) * edges.count(),
+          GraphXAlgos.adjWidthFor(edges.count(),
             edges.sparkContext.defaultParallelism,
             fineTarget = GraphXAlgos.EdgesPerPartition))
         val rdd = oriented.partitionBy(part)
@@ -257,8 +246,8 @@ object GraphXAlgos {
     * Two distinct failure modes share one cause — per-round RDDs keep the
     * whole loop history reachable through their lineage:
     *
-    *  1. Every per-round shuffle (LPA vote tallies, WCC delta messages,
-    *     SCC color/sweep rounds) leaves its shuffle FILES on executor
+    *  1. Every per-round shuffle (kernel messages, SCC color/sweep
+    *     rounds) leaves its shuffle FILES on executor
     *     disk until the driver GC collects the ShuffleDependency, and
     *     while the chain is reachable nothing is collectable: disk grows
     *     linearly in rounds × shuffle volume. Invisible at sf0.1
@@ -304,27 +293,15 @@ object GraphXAlgos {
   private[graft] def loopGc(round: Int, nEdges: Long): Unit =
     if (hygieneRound(round, nEdges)) System.gc()
 
-  /** Max boundary label pairs the WCC union-find endgame will collect to
-    * the driver (~100 MB boxed at this bound). Above it — early rounds,
-    * or adversarially fragmented graphs at cluster scale — the loop just
-    * keeps running distributed rounds instead. (sys-prop override is
-    * TEST plumbing, mirroring [[TallyFlushEntries]].)
+  /** Max records a driver endgame collects: the label pairs of WCC's
+    * closing pass (see [[CsrKernel.Closing]]) and SCC's residual vertices
+    * and arcs. Above it the loops keep running distributed rounds
+    * instead. (sys-prop override is TEST plumbing, mirroring
+    * [[TallyFlushEntries]].)
     */
   private[graft] def EndgamePairCap: Long =
     sys.props.get("graft.test.endgamePairCap").map(_.toLong)
       .getOrElse(2000000L)
-
-  /** When the FORCED endgame (round budget exhausted, labels still
-    * moving) sees more than this multiple of [[EndgamePairCap]] boundary
-    * pairs, it closes the label-pair graph DISTRIBUTED (pointer-jumping
-    * min-propagation, O(log n) rounds, no driver state) instead of
-    * streaming the pairs through a driver union-find — whose parent map
-    * grows with every distinct label mentioned and is then broadcast,
-    * a driver-OOM risk on adversarial topologies far past the cap
-    * (round-13 ADVICE item 3). Near-cap forced runs keep the driver
-    * path: one machine-local pass beats ~15 extra shuffle rounds.
-    */
-  private[graft] val EndgameDistributedFactor = 4L
 
   /** Partition width for a ctx holding `nEdges` contracted edges: scales
     * with DATA SIZE so per-partition bytes stay CONSTANT as data grows.
@@ -343,8 +320,8 @@ object GraphXAlgos {
   private def build(g: PropertyGraph, relTypes: Seq[String]): Ctx = {
     val es = g.edgesByTypes(relTypes).select("src", "dst").distinct()
     // full-graph contexts take the node table as the endpoint superset —
-    // skips a 2×|E| union+distinct shuffle, and is what makes wcc/scc
-    // label isolated nodes (both loops label every dictionary vertex)
+    // skips a 2×|E| union+distinct shuffle, and is what makes scc label
+    // isolated nodes (the loop labels every dictionary vertex)
     val endpoints = relTypes match {
       case Seq() => g.nodes.select("id")
       case _ => es.select(col("src").as("id"))
@@ -377,322 +354,122 @@ object GraphXAlgos {
   private def toDf(g: PropertyGraph, rows: RDD[Row], schema: StructType): DataFrame =
     g.nodes.sparkSession.createDataFrame(rows, schema)
 
-  /** Pre-build the contexts the headline algorithm/path queries touch, so
-    * benchmarks measure the algorithms rather than the one-time dictionary
-    * build (the reference's benchmarks likewise run against loaded storage).
-    * Warms: full-graph ctx (+ out/both pair adjacency for the BFS family)
-    * and the CONTAINS ctx.
+  /** Pre-build the full-graph context and its out/both pair adjacency,
+    * which the BFS family reads, so benchmarks measure the traversals
+    * rather than the one-time dictionary build (the reference's benchmarks
+    * likewise run against loaded storage).
     */
   def warm(g: PropertyGraph): Unit = {
     val full = ctxFor(g, Nil)
     full.pairsByDir("out"); full.pairsByDir("both")
-    ctxFor(g, Seq("CONTAINS"))
   }
+
+  /** The kernel input for `g`'s edges of `relType`: the full graph keys
+    * every node (an isolated one too), a typed projection the endpoints
+    * of its edges.
+    */
+  private def kernelInput(g: PropertyGraph,
+      relType: Option[String]): (DataFrame, Option[DataFrame]) =
+    (g.edgesByTypes(relType.toSeq), if (relType.isEmpty) Some(g.nodes) else None)
 
   /** Weakly connected components: (id, component), where component is
     * the min string id of the node's component. The full graph labels
     * every node (apoc_community.go:332), an isolated one as its own
-    * singleton, because the full-graph ctx dictionary is the node table;
-    * a typed projection labels the endpoints of its edges. Memoized per
-    * ctx: a ctx belongs to one immutable snapshot, so repeat calls on a
-    * loaded store pay the loop once.
-    *
-    * maxIter is a ROUND BUDGET, not a result knob: past it the delta loop
-    * forces the union-find endgame (edge contraction over the current
-    * label regions — exact components from any intermediate state), so
-    * the labeling is identical for every maxIter ≥ 1 and one "wcc" memo
-    * entry serves all callers.
+    * singleton; a typed projection labels the endpoints of its edges.
     */
-  def wcc(g: PropertyGraph, relType: Option[String] = None,
-      maxIter: Int = 50): DataFrame = {
-    val c = ctx(g, relType)
-    c.cachedResult("wcc")(wccDeltaLoop(g, c, maxIter))
+  def wcc(g: PropertyGraph, relType: Option[String] = None): DataFrame = {
+    val (es, ns) = kernelInput(g, relType)
+    components(es, ns)
   }
 
-  /** The WCC loop itself, unmemoized: DELTA HashMin over the ctx's CSR
-    * adjacency — min(label) over neighbors, but each round only the
-    * vertices whose label changed last round re-send, so total message
-    * volume is O(|E| · avg label-improvements per edge) ≈ a small
-    * constant × |E|, not rounds × |E|. Every shuffle is keyed by VERTEX,
-    * never by label: a label-keyed join serializes the giant component
-    * into one task the moment HashMin converges toward few labels (the
-    * round-12 profile measured exactly that). Labels are dense idx
-    * representatives; the min-string contract is settled at decode, so
-    * no order-preserving rank dictionary is built. The resident set is
-    * O(|V| + |E|) whatever the round count — the property GraphX's Pregel
-    * connected components lacks: its
-    * supersteps keep a graph replica per round, which measured 12.7× at
-    * 10× data (round-10 sf1).
+  /** Weakly connected components of an undirected pair list (`a`, `b`):
+    * (id, component) for every node of a pair, both in the type of `a`,
+    * component = the component's minimum id in that type. The kernel keys
+    * nodes by string, so for any other type one group-by restores the
+    * type's minimum (the string minimum of {9, 10} is 10).
     */
-  private[graft] def wccDeltaLoop(g: PropertyGraph, c: Ctx,
-      maxIter: Int = 50): DataFrame = {
-    val sc = c.edges.sparkContext
-    val csr = c.csrByDir("both") // per-partition CSR, pinned once per ctx
-    val part = new org.apache.spark.HashPartitioner(csr.getNumPartitions)
-    // lineage hygiene (see the [[LoopCkptEvery]] scaladoc): every pinned
-    // round RDD truncates its lineage inside its own count() job — blocks
-    // are freshly cached, so truncation is free; only the GC nudge that
-    // lets ContextCleaner reap the dead shuffles runs on a gated cadence
-    val nEdges = 2L * c.edges.count()
-    def pin[T](r: RDD[T]): RDD[T] = {
-      val p = r.persist(StorageLevel.MEMORY_AND_DISK)
-      p.localCheckpoint()
-      p.count(); p
-    }
-    // labels are the vertex's own dense idx — a deterministic component
-    // REPRESENTATIVE only; the min-STRING contract is settled at decode.
-    // The (label, changed) flag rides in one pinned RDD per round; the
-    // changed-delta is a narrow view over it.
-    var state: RDD[(Long, (Long, Boolean))] =
-      pin(c.rev.partitionBy(part)
-        .mapPartitions(_.map { case (v, _) => (v, (v, true)) },
-          preservesPartitioning = true))
-    var prev: RDD[(Long, (Long, Boolean))] = null
-    var changed = state.count() // every vertex "changed" at init
-    val totalV = changed
-    var lastEndgameTry = -100
-    var iter = 0
-    // ONE message pass collects the distinct boundary label pairs, a
-    // driver union-find closes them transitively, and a broadcast relabel
-    // finishes in one narrow pass. Exact from ANY intermediate labeling
-    // (it is edge contraction over the current label regions). `force`
-    // ignores EndgamePairCap — the convergence path of last resort.
-    def endgame(force: Boolean): Unit = {
-      val lbls = state.mapValues(_._1)
-      // same source-side prune as the round messages: for a true
-      // boundary pair at least one direction has lbl(from) < to (both
-      // filtered would force lbl(u)=lbl(v) by the ≤-chain), so pair
-      // detection is lossless
-      val offered = csr.zipPartitions(lbls, preservesPartitioning = false) {
-        (cit, lit) =>
-          if (cit.hasNext) {
-            val adj = cit.next()
-            lit.flatMap { case (v, l) => adj.emit(v, l).filter(_._1 > l) }
-          } else Iterator.empty
-      }.partitionBy(part)
-      // per-partition dedup before the distinct shuffle; the global
-      // distinct matters — a local-dedup count overestimated 5× on the
-      // CONTAINS graph and wrongly skipped a viable endgame
-      val boundary = offered.zipPartitions(state,
-        preservesPartitioning = false) { (mit, sit) =>
-          val lbl = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-          sit.foreach { case (v, (l, _)) => lbl.put(v, l) }
-          val seen = new java.util.HashSet[(Long, Long)]()
-          mit.flatMap { case (to, lf) =>
-            val lt = lbl.get(to)
-            if (lt == null || lt.longValue() == lf) Iterator.empty
-            else {
-              val p = (math.min(lf, lt.longValue()), math.max(lf, lt.longValue()))
-              if (seen.add(p)) Iterator.single(p) else Iterator.empty
-            }
-          }
-      }.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-      val nPairs = boundary.count()
-      if (force && nPairs > EndgameDistributedFactor * EndgamePairCap) {
-        // ---- distributed closure (no driver state) ----
-        // Pointer-jumping min-propagation over the boundary label-pair
-        // graph: parent(x) ← min(parent(x), parents of neighbors), then
-        // parent(x) ← parent(parent(x)) — halves remaining depth per
-        // round, so O(log n) rounds close any topology. Exact for the
-        // same reason as the union-find: this is edge contraction over
-        // the current label regions. Relabeling joins on the OLD labels
-        // (region representatives — many, roughly balanced), so the
-        // giant-component key-skew of a label-keyed shuffle never forms.
-        val pairW = new org.apache.spark.HashPartitioner(
-          adjWidthFor(2L * nPairs, sc.defaultParallelism))
-        val bothDir = boundary
-          .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-          .partitionBy(pairW).persist(StorageLevel.MEMORY_AND_DISK)
-        var parent: RDD[(Long, Long)] = bothDir
-          .reduceByKey(pairW, (a: Long, b: Long) => math.min(a, b))
-          .map { case (x, m) => (x, math.min(x, m)) }
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        var movedRows = 1L
-        while (movedRows > 0) {
-          val viaNbr = bothDir.join(parent, pairW)
-            .map { case (_, (nbr, p)) => (nbr, p) }
-          val prop = parent.union(viaNbr).reduceByKey(pairW, (a: Long, b: Long) => math.min(a, b))
-          val jumped = prop.map(_.swap).join(prop, pairW)
-            .map { case (_, (x, pp)) => (x, pp) }
-            .reduceByKey(pairW, (a: Long, b: Long) => math.min(a, b))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val accPj = sc.longAccumulator
-          jumped.join(parent, pairW).foreach { case (_, (nw, old)) =>
-            if (nw != old) accPj.add(1)
-          }
-          movedRows = accPj.value
-          parent.unpersist(false)
-          parent = jumped
-        }
-        val roots = parent.filter { case (x, p) => p != x }
-        val finalState = pin(state
-          .map { case (v, (l, _)) => (l, v) }
-          .leftOuterJoin(roots, pairW)
-          .map { case (l, (v, r)) => (v, (r.getOrElse(l), false)) }
-          .partitionBy(part))
-        parent.unpersist(false); bothDir.unpersist(false)
-        if (prev != null) { prev.unpersist(false); prev = null }
-        state.unpersist(false)
-        state = finalState
-        changed = 0
-      } else if (nPairs <= EndgamePairCap || force) {
-        val parentMap = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while ({ val p = parentMap.get(r); p != null && p.longValue() != r }) r = parentMap.get(r)
-          var c2 = x // path compression
-          while (c2 != r) { val p = parentMap.get(c2); parentMap.put(c2, r); c2 = p.longValue() }
-          r
-        }
-        // forced runs stream partition-at-a-time so the driver never holds
-        // the whole pair set AND its collect buffer together
-        val pairIt =
-          if (nPairs <= EndgamePairCap) boundary.collect().iterator
-          else boundary.toLocalIterator
-        pairIt.foreach { case (a, b) =>
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) {
-            val (lo, hi) = (math.min(ra, rb), math.max(ra, rb))
-            parentMap.put(hi, lo)
+  def wccPairs(pairs: DataFrame): DataFrame = {
+    val idType = pairs.schema("a").dataType
+    val byString = components(pairs.select(col("a").cast(StringType).as("src"),
+      col("b").cast(StringType).as("dst")), None)
+    if (idType == StringType) byString
+    else byString.select(col("id").cast(idType).as("id"),
+      min(col("id").cast(idType)).over(Window.partitionBy("component")).as("component"))
+  }
+
+  /** WCC on [[CsrKernel]]: delta min-label propagation. A label starts as
+    * the node's own id; each round only the rows whose label changed last
+    * round send it, and only to neighbours it can lower (a label never
+    * exceeds its node's id), so total message volume is about a small
+    * constant times |E|, not rounds × |E|. Messages are keyed by receiver,
+    * never by label, so the giant component never lands in one task.
+    *
+    * The closing pass is a union-find over the distinct boundary label
+    * pairs (an edge whose ends carry different labels), which is edge
+    * contraction over the current label regions and so exact from any
+    * labelling. It runs once the rows that would send next have at most
+    * [[EndgamePairCap]] edges — before the first round on graphs of up
+    * to that many oriented edges; larger graphs run distributed rounds
+    * until the bound holds or no label moves.
+    */
+  private def components(edges: DataFrame, nodes: Option[DataFrame]): DataFrame =
+    CsrKernel.run[String, (String, String)](edges, nodes, undirected = true,
+      weighted = false, Int.MaxValue, StructType(Seq(
+        StructField("id", StringType), StructField("component", StringType))))(
+      init = _.keys.clone(),
+      dst = _._1, // message key = (receiver, label)
+      send = { (c, lbl, i, fresh, t) =>
+        if (fresh) {
+          var j = c.offs(i)
+          while (j < c.offs(i + 1)) {
+            if (lbl(i) < c.nbrs(j)) t.add((c.nbrs(j), lbl(i)), 1.0)
+            j += 1
           }
         }
-        // resolve every mentioned label to its root once, then broadcast
-        val resolved = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        val it2 = parentMap.keySet().iterator()
-        while (it2.hasNext) { val k = it2.next(); resolved.put(k, find(k.longValue())) }
-        val bc = sc.broadcast(resolved)
-        val finalState = pin(state.mapPartitions(_.map { case (v, (l, _)) =>
-          val r = bc.value.get(l)
-          (v, (if (r != null) r.longValue() else l, false))
-        }, preservesPartitioning = true))
-        if (prev != null) { prev.unpersist(false); prev = null }
-        state.unpersist(false)
-        state = finalState
-        changed = 0
-      }
-      boundary.unpersist(false)
-    }
-    while (changed > 0 && iter < maxIter) {
-      iter += 1
-      val delta = state.filter(_._2._2).mapValues(_._1) // narrow, cached parent
-      // CSR lookup instead of an RDD join: per-round cost ∝ delta's edges,
-      // not the full adjacency; reduceByKey's map-side combiners absorb
-      // hub-degree and giant-component skew before the shuffle.
-      // preservesPartitioning MUST be false: the emitted keys are DST
-      // vertices — claiming the src partitioning here made reduceByKey
-      // skip its shuffle and silently drop every cross-partition message
-      // (single-partition fixtures can't catch it; Round12ScaleSpec's
-      // multi-partition chain does).
-      // source-side prune: a label ≥ the receiver's idx can never improve
-      // (labels start at the vertex's own idx and only decrease), so it
-      // is dropped BEFORE the shuffle — halves round-1 volume and more
-      // later. No combiner pass either: the receiver-side merge below is
-      // already a per-partition min map, and skipping the combiner's
-      // boxed hash machinery is faster than the volume it would save.
-      val msgs = csr.zipPartitions(delta, preservesPartitioning = false) {
-        (cit, dit) =>
-          if (cit.hasNext) {
-            val adj = cit.next()
-            dit.flatMap { case (v, lbl) => adj.emit(v, lbl).filter(_._1 > lbl) }
-          } else Iterator.empty
-      }.partitionBy(part)
-      val acc = sc.longAccumulator
-      // min-merge messages into state per partition: msgs materialize into
-      // a small per-partition map (≤ touched vertices), state streams
-      val next = pin(state.zipPartitions(msgs, preservesPartitioning = true) {
-        (sit, mit) =>
-          val m = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-          mit.foreach { case (v, l) =>
-            val cur = m.get(v)
-            if (cur == null || l < cur.longValue()) m.put(v, l)
-          }
-          sit.map { case (v, (cur, _)) =>
-            val cand = m.get(v)
-            val nw = if (cand != null && cand.longValue() < cur) cand.longValue() else cur
-            if (nw != cur) acc.add(1)
-            (v, (nw, nw != cur))
-          }
-      })
-      loopGc(iter, nEdges)
-      changed = acc.value
-      if (prev != null) prev.unpersist(false)
-      prev = state
-      state = next
-      // ---- union-find endgame ----
-      // Once a few rounds have coarsened the label regions, the remaining
-      // rounds are a diameter tail (the round-12 profile measured 16
-      // sub-1 s rounds after round 4; a chain graph would take its whole
-      // length). The label-region graph is tiny by then: ONE message pass
-      // collects the distinct boundary label pairs, a driver union-find
-      // closes them transitively, and a broadcast relabel finishes in one
-      // narrow pass. Guarded by a pair cap — if the boundary exceeds it
-      // (early rounds, or adversarially fragmented graphs at cluster
-      // scale) the attempt is retried every 6 rounds while distributed
-      // rounds keep shrinking it.
-      if (changed > 0 && iter >= 3 &&
-          (iter - lastEndgameTry >= 6 || changed * 8 < totalV) &&
-          iter - lastEndgameTry >= 2) {
-        lastEndgameTry = iter
-        endgame(force = false)
-      }
-    }
-    // Round budget exhausted with labels still moving (diameter > maxIter
-    // and every capped attempt skipped — e.g. a huge grid/mesh whose
-    // boundary stays over EndgamePairCap): force the endgame. Union-find
-    // over the boundary label-pair graph is EDGE CONTRACTION, exact from
-    // ANY intermediate labeling, so this converges correctly where the
-    // pre-round-13 code returned partially-propagated labels as final
-    // components (round-12 ADVICE, medium). The chunked toLocalIterator
-    // collect bounds the driver to one partition batch at a time; the
-    // warning records that an adversarial topology pushed past the cap.
-    if (changed > 0) {
-      System.err.println(s"[wccDelta] WARNING: unconverged after $maxIter " +
-        "rounds; forcing union-find endgame past EndgamePairCap")
-      endgame(force = true)
-    }
-    // decode: labels are idx REPRESENTATIVES; the output contract is the
-    // component's min STRING id. Non-singleton components are few (the
-    // giant + a handful), so their min strings fit a broadcast map and
-    // the decode is one narrow state⋈rev pass — singletons (label == own
-    // idx, not in the map) emit their own id. Falls back to the
-    // distributed reduce+join shape if the component set is adversarially
-    // large for the driver.
-    val nontrivial = state.filter { case (v, (l, _)) => l != v }
-      .map(_._2._1).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nLabels = nontrivial.count()
-    // ONE pinned state⋈rev co-partitioned pass serves both the min-map
-    // build and the output rows (round-12 ADVICE: the broadcast branch
-    // ran the decode join twice, doubling the pass over |V|)
-    val decoded = pin(state.join(c.rev, part)
-      .map { case (_, ((lbl, _), id)) => (lbl, id) })
-    val rows =
-      if (nLabels <= EndgamePairCap) {
-        val ntSet = new java.util.HashSet[java.lang.Long]()
-        nontrivial.collect().foreach(l => ntSet.add(l))
-        val bcSet = sc.broadcast(ntSet)
-        val minMap = new java.util.HashMap[java.lang.Long, String]()
-        decoded.mapPartitions(_.filter { case (l, _) => bcSet.value.contains(l) })
-          .reduceByKey((a: String, b: String) => if (a <= b) a else b)
-          .collect().foreach { case (l, s) => minMap.put(l, s) }
-        val bcMin = sc.broadcast(minMap)
-        decoded.map { case (l, id) =>
-          val m = bcMin.value.get(l)
-          Row(id, if (m != null) m else id)
+      },
+      update = { (c, lbl, in) =>
+        val least = new java.util.HashMap[String, String]()
+        in.sums.keySet.forEach { k =>
+          val cur = least.get(k._1)
+          if (cur == null || k._2 < cur) least.put(k._1, k._2)
         }
-      } else {
-        val minByLbl = decoded
-          .reduceByKey(part, (a: String, b: String) => if (a <= b) a else b)
-        decoded.join(minByLbl, part)
-          .map { case (_, (id, minId)) => Row(id, minId) }
-      }
-    val out = toDf(g, rows, StructType(Seq(
-      StructField("id", StringType), StructField("component", StringType))))
-    val pinned = out.localCheckpoint(true) // realize before freeing the parts
-    if (prev != null) prev.unpersist(false)
-    state.unpersist(false); nontrivial.unpersist(false)
-    decoded.unpersist(false)
-    pinned
+        Array.tabulate(c.keys.length) { i =>
+          val m = least.get(c.keys(i))
+          if (m != null && m < lbl(i)) m else lbl(i)
+        }
+      },
+      closing = Some(CsrKernel.Closing[String, (String, String)](
+        receive = { (c, lbl, in) =>
+          val seen = new java.util.HashSet[(String, String)]()
+          val keys = c.keys.asInstanceOf[Array[AnyRef]]
+          in.sums.keySet.forEach { k =>
+            val (v, l) = k
+            val cur = lbl(java.util.Arrays.binarySearch(keys, v))
+            if (cur != l) seen.add(if (l < cur) (l, cur) else (cur, l))
+          }
+          seen.iterator().asScala
+        },
+        finish = unionFind)))
+
+  /** Label → the least label it is joined to through `pairs`, for every
+    * label that is not that least one itself.
+    */
+  private def unionFind(pairs: Array[(String, String)]): java.util.Map[String, String] = {
+    val up = new java.util.HashMap[String, String]()
+    def find(x: String): String = {
+      var r = x
+      while (up.containsKey(r)) r = up.get(r)
+      var y = x // path compression
+      while (y != r) { val nx = up.get(y); up.put(y, r); y = nx }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      // the lesser root wins, so a set's root is its least label
+      if (ra < rb) up.put(rb, ra) else if (rb < ra) up.put(ra, rb)
+    }
+    up.keySet.toArray(new Array[String](0)).foreach(find)
+    up
   }
 
   /** Per-node triangle counts over a long-keyed undirected pair-edge
@@ -741,9 +518,8 @@ object GraphXAlgos {
 
   /** Scale SCC: trim + forward-coloring + backward sweep (the FW-BW/
     * coloring family — Orzan's coloring as in the distributed-SCC
-    * literature), iterated as co-partitioned RDD joins with the same
-    * residency discipline as [[wccDeltaLoop]]: every superseded round
-    * is unpersisted, resident state stays O(|V|+|E|) no matter how many
+    * literature), iterated as co-partitioned RDD joins: every superseded
+    * round is unpersisted, resident state stays O(|V|+|E|) no matter how many
     * rounds run — the property GraphX SCC lacks (round-11 sf1 measured it
     * 30.9× at 10× data).
     *
@@ -777,7 +553,7 @@ object GraphXAlgos {
     * returns the unpeeled ones as wrong singleton SCCs.
     *
     *  - ENDGAME: once the residual vertices and arcs each fit under
-    *    [[EndgamePairCap]] (as WCC's boundary pairs must), they are
+    *    [[EndgamePairCap]], they are
     *    collected and an iterative Tarjan on the driver finishes them in
     *    one pass. A deep SCC DAG whose levels share one color class would
     *    otherwise take one outer round per level.
@@ -1043,13 +819,14 @@ object GraphXAlgos {
     * where outdeg counts parallel edges — on [[CsrKernel]]. Returns (id, r).
     */
   def pageRank(g: PropertyGraph, iters: Int,
-      relType: Option[String] = None): DataFrame =
-    CsrKernel.run[Double, String](g, relType.toSeq, undirected = false,
+      relType: Option[String] = None): DataFrame = {
+    val (es, ns) = kernelInput(g, relType)
+    CsrKernel.run[Double, String](es, ns, undirected = false,
       weighted = false, iters, StructType(Seq(
         StructField("id", StringType), StructField("r", DoubleType))))(
       init = c => Array.fill(c.keys.length)(1.0),
       dst = m => m,
-      send = { (c, r, i, t) =>
+      send = { (c, r, i, _, t) =>
         val (from, to) = (c.offs(i), c.offs(i + 1))
         var outdeg = 0.0; var j = from
         while (j < to) { outdeg += c.wts(j); j += 1 }
@@ -1060,6 +837,7 @@ object GraphXAlgos {
         val s = in.sums.get(c.keys(i))
         0.15 + 0.85 * (if (s == null) 0.0 else s(0))
       })
+  }
 
   /** Synchronous label propagation on [[CsrKernel]] over the undirected
     * graph, parallel edges contracted: each round every node adopts the
@@ -1069,13 +847,14 @@ object GraphXAlgos {
     * own id. Returns (id, label).
     */
   def labelPropagation(g: PropertyGraph, iters: Int,
-      relType: Option[String] = None, weighted: Boolean = false): DataFrame =
-    CsrKernel.run[String, (String, String)](g, relType.toSeq, undirected = true,
+      relType: Option[String] = None, weighted: Boolean = false): DataFrame = {
+    val (es, ns) = kernelInput(g, relType)
+    CsrKernel.run[String, (String, String)](es, ns, undirected = true,
       weighted, iters, StructType(Seq(
         StructField("id", StringType), StructField("label", StringType))))(
       init = _.keys.clone(),
       dst = _._1, // message key = (receiver, voted label)
-      send = { (c, lbl, i, t) =>
+      send = { (c, lbl, i, _, t) =>
         var j = c.offs(i)
         while (j < c.offs(i + 1)) { t.add((c.nbrs(j), lbl(i)), c.wts(j)); j += 1 }
       },
@@ -1091,6 +870,7 @@ object GraphXAlgos {
           if (b == null) lbl(i) else b._2
         }
       })
+  }
 
   /** Louvain-style communities (weighted label propagation, the
     * label-adoption stand-in for modularity-gain local moves) and the

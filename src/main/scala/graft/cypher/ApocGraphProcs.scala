@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.graph.{GraphProjections, GraphStore, PropertyGraph}
 import graft.algos.{Algorithms, GraphXAlgos}
-import graft.operators.Dedup
 
 /** CALL-surface registry for apoc.community / apoc.label / apoc.graph /
   * apoc.export-import-load / apoc.scoring procedures (ref
@@ -13,7 +12,7 @@ import graft.operators.Dedup
   * `apoc/scoring/scoring.go`).
   *
   * Community members ride the SAME distributed implementations the
-  * q_algo_* rows oracle-check (GraphX-ctx loops / iterative joins); the
+  * q_algo_* rows oracle-check (CSR kernel / ctx loops / iterative joins); the
   * reference's in-memory modularity heuristics (fastGreedy, infomap,
   * spinglass, walktrap) are served by the distributed Louvain — a method
   * substitution, surfaced in the `method` column.
@@ -50,31 +49,15 @@ object ApocGraphProcs {
     df.sparkSession.createDataFrame(rdd, schema)
   }
 
-  private val pairsCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[PropertyGraph,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())
-
   /** Undirected distinct pair list of the (optionally type-filtered) edge
-    * set — the input shape of the community family. CACHED per
-    * (graph, relType): density/conductance/triangles on the same graph
-    * share one build instead of re-shuffling the edge distinct per CALL
-    * (weak-keyed so dropped graphs release their cache).
+    * set — the input shape of the community family. Not cached: a CALL
+    * leaves nothing persisted but its own result.
     */
   private[graft] def pairs(g: PropertyGraph, relType: Option[String]): DataFrame = {
-    val inner = pairsCache.synchronized {
-      var m = pairsCache.get(g)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        pairsCache.put(g, m)
-      }
-      m
-    }
-    inner.computeIfAbsent(relType.getOrElse("*"), _ => {
-      val es = relType.map(g.edgesByType).getOrElse(g.edges)
-      es.select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct().cache()
-    })
+    val es = relType.map(g.edgesByType).getOrElse(g.edges)
+    es.select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") =!= col("b")).distinct()
   }
 
   private def store: GraphStore = GraphStore.currentStore
@@ -126,14 +109,12 @@ object ApocGraphProcs {
       withLongIds(pairs(g, arg(args, 0)))(GraphXAlgos.clusteringCoefficients)
         .agg(avg(col("coefficient")).as("value"))),
     "apoc.community.connectedcomponents" -> ((g, args) =>
-      Dedup.dedupClusters(pairs(g, arg(args, 0)))
-        .select(col("doc_id").as("id"), col("cluster_id").as("component"))),
+      GraphXAlgos.wccPairs(pairs(g, arg(args, 0)))),
     "apoc.community.weaklyconnectedcomponents" -> ((g, args) =>
-      Dedup.dedupClusters(pairs(g, arg(args, 0)))
-        .select(col("doc_id").as("id"), col("cluster_id").as("component"))),
+      GraphXAlgos.wccPairs(pairs(g, arg(args, 0)))),
     "apoc.community.numcomponents" -> ((g, args) =>
-      Dedup.dedupClusters(pairs(g, arg(args, 0)))
-        .agg(countDistinct(col("cluster_id")).as("value"))),
+      GraphXAlgos.wccPairs(pairs(g, arg(args, 0)))
+        .agg(countDistinct(col("component")).as("value"))),
     "apoc.community.stronglyconnectedcomponents" -> ((g, args) =>
       GraphXAlgos.scc(g, arg(args, 0))),
     "apoc.community.labelpropagation" -> ((g, args) =>
@@ -142,9 +123,7 @@ object ApocGraphProcs {
       GraphXAlgos.louvain(g, argInt(args, 0, 10))._1),
     "apoc.community.modularity" -> ((g, args) => {
       val p = pairs(g, arg(args, 0))
-      val comm = Dedup.dedupClusters(p)
-        .select(col("doc_id").as("id"), col("cluster_id").as("component"))
-      Algorithms.modularity(p, comm)
+      Algorithms.modularity(p, GraphXAlgos.wccPairs(p))
     }),
     "apoc.community.kcore" -> ((g, args) =>
       Algorithms.kCore(pairs(g, arg(args, 1)), argInt(args, 0, 3))),
@@ -176,10 +155,10 @@ object ApocGraphProcs {
       Algorithms.density(pairs(g, arg(args, 0)))),
     "apoc.community.conductance" -> ((g, args) => {
       val p = pairs(g, arg(args, 0))
-      val comm = Dedup.dedupClusters(p)
+      val comm = GraphXAlgos.wccPairs(p)
       Algorithms.conductance(p,
-        comm.filter(col("cluster_id") === comm.agg(min("cluster_id"))
-          .collect().head.getString(0)).select(col("doc_id").as("id")))
+        comm.filter(col("component") === comm.agg(min("component"))
+          .collect().head.getString(0)).select(col("id")))
     }),
     // the reference's in-memory modularity heuristics — served by the
     // distributed Louvain, method surfaced (community.go:923 FastGreedy

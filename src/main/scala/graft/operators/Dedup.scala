@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
-  * All variants are shuffle-partitioned joins/aggregations — no driver-side
-  * state — so they hold at 100 TB: exact dedup is one hash aggregation;
-  * near-dup variants first *bucket* (LSH band / simhash prefix / shingle)
-  * so the quadratic verify step only runs within buckets.
+  * The pair generators are shuffle-partitioned joins/aggregations — no
+  * driver-side state — so they hold at 100 TB: exact dedup is one hash
+  * aggregation; near-dup variants first *bucket* (LSH band / simhash
+  * prefix / shingle) so the quadratic verify step only runs within
+  * buckets.
   */
 object Dedup {
 
@@ -198,38 +199,16 @@ object Dedup {
   }
 
   /** Cluster resolution over near-dup pairs — the pipeline step AFTER pair
-    * generation: connected components of the pair graph, each doc labeled
-    * with its component's minimum doc id (the canonical "keep-first"
-    * survivor). Min-label propagation runs ONLY on the pair subgraph —
-    * at 100 TB dup pairs are a vanishing fraction of the corpus, and
-    * near-dup components have tiny diameter, so this is a handful of
-    * small self-joins, not a full-corpus traversal.
+    * generation: connected components of the pair graph
+    * ([[graft.algos.GraphXAlgos.wccPairs]]), each doc labeled with its
+    * component's minimum doc id (the canonical "keep-first" survivor).
+    * Only the pair subgraph is traversed, never the full corpus.
     *
     * Returns (doc_id, cluster_id, canonical) for every doc in a cluster.
     */
-  def dedupClusters(pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("a").as("x"), col("b").as("y"))
-      .union(pairs.select(col("b").as("x"), col("a").as("y"))).cache()
-    var labels = edges.select(col("x").as("doc_id")).distinct()
-      .withColumn("lbl", col("doc_id")).localCheckpoint(true)
-    // no round cap: a component needs as many rounds as its diameter, and
-    // stopping earlier returns it split in two
-    var changed = 1L
-    while (changed > 0) {
-      val neighborMin = edges
-        .join(labels.select(col("doc_id").as("y"), col("lbl").as("nlbl")), "y")
-        .groupBy(col("x").as("doc_id")).agg(min(col("nlbl")).as("nmin"))
-      val next = labels.join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"), least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"),
-          col("lbl").as("prev"))
-        .localCheckpoint(true)
-      changed = next.filter(col("lbl") =!= col("prev")).count()
-      labels = next.select("doc_id", "lbl")
-    }
-    edges.unpersist()
-    labels.select(col("doc_id"), col("lbl").as("cluster_id"),
-      (col("doc_id") === col("lbl")).as("canonical"))
-  }
+  def dedupClusters(pairs: DataFrame): DataFrame =
+    graft.algos.GraphXAlgos.wccPairs(pairs).select(col("id").as("doc_id"),
+      col("component").as("cluster_id"), (col("id") === col("component")).as("canonical"))
 
   /** True Jaccard for given candidate pairs against a shingle table. */
   private def pairJaccard(cand: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {

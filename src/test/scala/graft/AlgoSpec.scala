@@ -19,14 +19,20 @@ class AlgoSpec extends AnyFunSuite {
   }
 
   test("GraphX wcc agrees exactly with DataFrame wcc") {
-    // the DataFrame WCC is Dedup.dedupClusters over the undirected pairs,
-    // what CALL apoc.community.weaklyconnectedcomponents runs
-    val a = graft.operators.Dedup.dedupClusters(
-        graft.cypher.ApocGraphProcs.pairs(g, Some("SUPPLIES"))).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    // the graph entry and the pair-list (DataFrame) entry that CALL
+    // apoc.community.weaklyconnectedcomponents runs, both against the
+    // union-find reference, component = min string id
+    val es = g.edgesByType("SUPPLIES").select("src", "dst").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    val rep = perfbench.Checks.components(es.flatMap(e => Seq(e._1, e._2)).distinct, es)
+    val mins = rep.groupBy(_._2).map { case (r, m) => r -> m.keys.min }
+    val want = rep.map { case (v, r) => v -> mins(r) }
+    val a = GraphXAlgos.wccPairs(graft.cypher.ApocGraphProcs.pairs(g, Some("SUPPLIES")))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val b = GraphXAlgos.wcc(g, Some("SUPPLIES")).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(a == b)
+    assert(b == want)
+    assert(a == want)
   }
 
   test("wcc on the full graph converges to one giant component") {

@@ -8,11 +8,13 @@ import graft.algos.GraphXAlgos
 import graft.graph.PropertyGraph
 
 /** Differential spec for the component loops: `GraphXAlgos.wcc` and
-  * `GraphXAlgos.scc` (and `Dedup.dedupClusters`, the pair-input WCC the
+  * `GraphXAlgos.scc` (and `GraphXAlgos.wccPairs`, the pair-input WCC the
   * CALL surface runs) against plain-Scala references — union-find for
   * WCC, Tarjan for SCC — over seeded generated graphs. Every comparison
   * is the full (id → component) map, component = min string id. Ids are
   * unpadded (`n7` > `n10` as strings), so a numeric min would not pass.
+  * WCC runs twice: as it is routed (the union-find closing pass takes any
+  * graph this small) and through distributed rounds only.
   */
 class ComponentDiffSpec extends AnyFunSuite {
   import TestSpark._
@@ -101,17 +103,28 @@ class ComponentDiffSpec extends AnyFunSuite {
     byMin(nodes.indices.map(i => nodes(i) -> comp(i).toString).toMap)
   }
 
-  /** Full-graph wcc, scc and dedupClusters against the references. */
+  /** `f` with the driver endgames off, so only distributed rounds run. */
+  private def distributed[T](f: => T): T = {
+    sys.props("graft.test.endgamePairCap") = "0"
+    try f finally sys.props.remove("graft.test.endgamePairCap")
+  }
+
+  /** wcc both ways against union-find. */
+  private def checkWcc(g: PropertyGraph, want: Map[String, String]): Unit = {
+    assertSame(comps(GraphXAlgos.wcc(g)), want, "wcc")
+    assertSame(distributed(comps(GraphXAlgos.wcc(g))), want, "wcc (distributed rounds)")
+  }
+
+  /** Full-graph wcc, scc and the pair-input wcc against the references. */
   private def check(nodes: Seq[String], edges: Edges): Unit = {
     val g = graph(nodes, edges)
-    assertSame(comps(GraphXAlgos.wcc(g)), wccRef(nodes, edges), "wcc")
+    checkWcc(g, wccRef(nodes, edges))
     assertSame(comps(GraphXAlgos.scc(g)), sccRef(nodes, edges), "scc")
     // the pair-input WCC labels the endpoints of its non-loop pairs
     val pairNodes = edges.filter { case (a, b) => a != b }
       .flatMap { case (a, b) => Seq(a, b) }.toSet
-    val dedup = comps(graft.operators.Dedup.dedupClusters(
-      graft.cypher.ApocGraphProcs.pairs(g, None)))
-    assertSame(dedup, wccRef(nodes, edges).filter(kv => pairNodes(kv._1)), "dedupClusters")
+    val pairWcc = comps(GraphXAlgos.wccPairs(graft.cypher.ApocGraphProcs.pairs(g, None)))
+    assertSame(pairWcc, wccRef(nodes, edges).filter(kv => pairNodes(kv._1)), "wccPairs")
   }
 
   private def ids(n: Int): Seq[String] = (0 until n).map(i => s"n$i")
@@ -238,6 +251,43 @@ class ComponentDiffSpec extends AnyFunSuite {
     assert(c.edges.getNumPartitions >= 2, "fixture must span multiple ctx partitions")
     assert(c.csrByDir("out").getNumPartitions >= 2, "and multiple CSR partitions")
     assertSame(comps(GraphXAlgos.scc(g)), sccRef(nodes, edges), "scc")
-    assertSame(comps(GraphXAlgos.wcc(g)), wccRef(nodes, edges), "wcc")
+    checkWcc(g, wccRef(nodes, edges))
+  }
+
+  test("a Long pair list is labelled by its numeric minimum, across partitions") {
+    // 7,000 random components over ids of 1 to 7 digits, so the string
+    // and numeric minimums of a component mostly differ, plus {9, 10}
+    // (string minimum "10"); the pairs put the kernel CSR past one
+    // partition (asserted below)
+    val rnd = new scala.util.Random(11L)
+    val ids = rnd.shuffle((1L to 9000000L by 257L).toVector) // distinct
+    var next = 0
+    val pairs = Seq((9L, 10L)) ++ (0 until 7000).flatMap { _ =>
+      val k = 2 + rnd.nextInt(4)
+      val g = ids.slice(next, next + k); next += k
+      (1 until k).map(i => (g(i), g(rnd.nextInt(i)))) ++
+        Seq.fill(rnd.nextInt(3))((g(rnd.nextInt(k)), g(rnd.nextInt(k))))
+          .filter { case (a, b) => a != b }
+    }
+    val sp = spark
+    import sp.implicits._
+    val df = sp.sparkContext.parallelize(pairs, 4).toDF("a", "b")
+    assert(GraphXAlgos.adjWidthFor(2L * pairs.size, sp.sparkContext.defaultParallelism) >= 2,
+      "fixture must span several kernel partitions")
+    val rep = perfbench.Checks.components(
+      pairs.flatMap { case (a, b) => Seq(a.toString, b.toString) }.distinct,
+      pairs.map { case (a, b) => (a.toString, b.toString) })
+    val mins = rep.groupBy(_._2).map { case (r, m) => r -> m.keys.map(_.toLong).min }
+    val want = rep.map { case (v, r) => v -> mins(r).toString }
+    def labels: Map[String, String] = {
+      val got = GraphXAlgos.wccPairs(df)
+      assert(got.schema("id").dataType == org.apache.spark.sql.types.LongType)
+      assert(got.schema("component").dataType == org.apache.spark.sql.types.LongType)
+      got.collect().map(r => r.getLong(0).toString -> r.getLong(1).toString).toMap
+    }
+    for ((m, how) <- Seq(labels -> "routed", distributed(labels) -> "distributed rounds")) {
+      assert(m("9") == "9" && m("10") == "9", how)
+      assertSame(m, want, s"wccPairs over Long ids ($how)")
+    }
   }
 }

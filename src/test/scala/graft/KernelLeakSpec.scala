@@ -60,7 +60,10 @@ class KernelLeakSpec extends AnyFunSuite {
       "apoc.community.labelpropagation" ->
         "CALL apoc.community.labelpropagation(3) YIELD id, label RETURN id, label",
       "apoc.community.louvain" ->
-        "CALL apoc.community.louvain(3) YIELD id, label RETURN id, label")) {
+        "CALL apoc.community.louvain(3) YIELD id, label RETURN id, label",
+      "apoc.community.weaklyconnectedcomponents" ->
+        "CALL apoc.community.weaklyconnectedcomponents('E') YIELD id, component RETURN id, component",
+      "apoc.algo.wcc" -> "CALL apoc.algo.wcc() YIELD node, componentId RETURN node, componentId")) {
     test(s"CALL $name keeps only its pinned result persisted") {
       assert(graft.algos.GraphXAlgos.pageRank(g, 0).rdd.getNumPartitions >= 2,
         "fixture must span several kernel partitions")

@@ -69,19 +69,25 @@ class Round12ScaleSpec extends AnyFunSuite {
     assert(wcc.keySet == expectedScc.keySet)
     // all non-isolated nodes are one weak component rooted at min id "A"
     assert((expectedScc.keySet - "Z").forall(wcc(_) == "A"))
-    // the pair-input WCC labels the same nodes minus the isolate
+    // ... as the union-find reference has it
+    val es = g.edges.select("src", "dst").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    val rep = perfbench.Checks.components(expectedScc.keySet, es)
+    val mins = rep.groupBy(_._2).map { case (r, m) => r -> m.keys.min }
+    assert(wcc == rep.map { case (v, r) => v -> mins(r) })
+    // the pair-input WCC (dedupClusters) labels the same nodes minus the isolate
     val dedup = comps(graft.operators.Dedup.dedupClusters(
       graft.cypher.ApocGraphProcs.pairs(g, None)))
     assert(dedup == wcc - "Z")
   }
 
   test("wcc scale loop is exact across MULTIPLE ctx partitions (chain + endgame)") {
-    // >131072 contracted edges forces widthFor past one partition, so the
-    // min-label messages must actually cross partitions — the round-12
+    // 300,000 oriented edges put the kernel CSR past one partition, so the
+    // closing pass's messages must actually cross partitions — the round-12
     // profile caught a preservesPartitioning lie that silently dropped
     // every cross-partition message while all single-partition fixtures
-    // stayed green. A chain also has huge diameter, so this exercises the
-    // union-find endgame (boundary pairs ≪ cap) rather than O(n) rounds.
+    // stayed green. A chain also has huge diameter: the union-find closing
+    // pass (pairs ≪ cap) finishes it rather than O(n) rounds.
     val sp = spark
     import sp.implicits._
     val n = 150001

@@ -5,11 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.PropertyGraph
 
 /** Round-13 advice + scale work:
-  *  - wccDeltaLoop must CONVERGE even when the round budget runs out
-  *    (round-12 ADVICE medium: it returned partially-propagated labels
-  *    as final components on diameter > maxIter graphs);
-  *  - the public wcc() must thread its maxIter through (it was silently
-  *    ignored) while producing the same fully-converged labeling;
   *  - the kernel LPA must stay exact across MULTIPLE
   *    CSR partitions (the vote shuffle now carries per-partition
   *    aggregates — a partition-alignment bug would silently drop votes,
@@ -30,26 +25,6 @@ class Round13AdviceSpec extends AnyFunSuite {
       .withColumn("properties", map_from_arrays(array(), array()))
       .withColumn("weight", lit(1.0))
     PropertyGraph(nodes, edges)
-  }
-
-  test("wccDeltaLoop converges via FORCED endgame when the round budget is exhausted") {
-    // maxIter=2 exits the delta rounds long before the diameter (and
-    // before the iter>=3 opportunistic-endgame heuristic can fire), so
-    // only the forced post-loop endgame can produce the right answer
-    val g = chainGraph(500)
-    val res = graft.algos.GraphXAlgos.wccDeltaLoop(
-      g, graft.algos.GraphXAlgos.ctxFor(g, Nil), maxIter = 2)
-    val comps = res.select("component").distinct().collect().map(_.getString(0))
-    assert(comps.toSeq == Seq("n0000000"), s"one chain component, got ${comps.length}")
-    assert(res.count() == 500)
-  }
-
-  test("public wcc() threads maxIter and still converges (budget = performance knob)") {
-    val g = chainGraph(300)
-    val res = graft.algos.GraphXAlgos.wcc(g, None, maxIter = 2)
-    val comps = res.select("component").distinct().collect().map(_.getString(0))
-    assert(comps.toSeq == Seq("n0000000"))
-    assert(res.count() == 300)
   }
 
   test("CSR-vote LPA is exact across MULTIPLE adjacency partitions") {
@@ -80,13 +55,6 @@ class Round13AdviceSpec extends AnyFunSuite {
       .withColumn("properties", map_from_arrays(array(), array()))
       .withColumn("weight", lit(1.0))
     val g = PropertyGraph(nodes, edges)
-    // q_algo_wcc_loop runs the unmemoized loop, q_algo_wcc the memo
-    val wccFresh = graft.algos.GraphXAlgos.wccDeltaLoop(
-        g, graft.algos.GraphXAlgos.ctxFor(g, Nil))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val wccRouted = graft.algos.GraphXAlgos.wcc(g)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(wccFresh == wccRouted)
     val sccFresh = graft.algos.GraphXAlgos.scc(g)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val expectedScc = Map(

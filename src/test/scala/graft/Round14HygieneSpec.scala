@@ -20,10 +20,10 @@ import graft.graph.PropertyGraph
   * ContextCleaner delete the dead shuffles promptly.
   *
   * The ring fixture IS the regression test for the scheduler explosion:
-  * 3 disjoint 40-cycles force a 40-round SCC sweep (and a deep WCC loop)
-  * that simply never completed before the truncation. The SCC runs with
-  * the driver endgame off (`graft.test.endgamePairCap` = 0), since the
-  * endgame would finish these rings in one Tarjan pass.
+  * 3 disjoint 40-cycles force a 40-round SCC sweep (and a ~20-round WCC
+  * loop) that simply never completed before the truncation. WCC and SCC
+  * run with the driver endgames off (`graft.test.endgamePairCap` = 0),
+  * since those would finish these rings in one union-find or Tarjan pass.
   */
 class Round14HygieneSpec extends AnyFunSuite {
   import TestSpark._
@@ -49,10 +49,10 @@ class Round14HygieneSpec extends AnyFunSuite {
     PropertyGraph(nodes, edges)
   }
 
-  /** SCC through its distributed rounds only. */
-  private def distributedScc(g: PropertyGraph) = {
+  /** `f`'s rows, run through distributed rounds only (driver endgames off). */
+  private def distributed(f: => org.apache.spark.sql.DataFrame) = {
     sys.props("graft.test.endgamePairCap") = "0"
-    try GraphXAlgos.scc(g).collect().map(_.toSeq).toSet
+    try f.collect().map(_.toSeq).toSet
     finally sys.props.remove("graft.test.endgamePairCap")
   }
 
@@ -69,8 +69,8 @@ class Round14HygieneSpec extends AnyFunSuite {
     val g = ringGraph(40, 3)
     def ringRoot(r: Int) = f"n${r * 40}%07d" // min id of ring r
     val plain = (
-      GraphXAlgos.wccDeltaLoop(g, GraphXAlgos.ctxFor(g, Nil)).collect().map(_.toSeq).toSet,
-      distributedScc(g),
+      distributed(GraphXAlgos.wcc(g)),
+      distributed(GraphXAlgos.scc(g)),
       GraphXAlgos.labelPropagation(g, 4, None, weighted = true)
         .collect().map(_.toSeq).toSet)
     // ground truth: each ring is one weak component AND one SCC, labeled
@@ -82,8 +82,8 @@ class Round14HygieneSpec extends AnyFunSuite {
     System.setProperty("graft.test.loopCkptMinEdges", "1")
     try {
       val engaged = (
-        GraphXAlgos.wccDeltaLoop(g, GraphXAlgos.ctxFor(g, Nil)).collect().map(_.toSeq).toSet,
-        distributedScc(g),
+        distributed(GraphXAlgos.wcc(g)),
+        distributed(GraphXAlgos.scc(g)),
         GraphXAlgos.labelPropagation(g, 4, None, weighted = true)
           .collect().map(_.toSeq).toSet)
       assert(engaged._1 == plain._1) // WCC identical under forced nudges

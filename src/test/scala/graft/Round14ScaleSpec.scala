@@ -6,7 +6,7 @@ import graft.algos.GraphXAlgos
 import graft.graph.PropertyGraph
 
 /** Round-14 scale work (round-13 verdict items #6 and ADVICE #2):
-  *  - EVERY per-round loop substrate — the kernel CSR, the WCC/SCC
+  *  - EVERY per-round loop substrate — the kernel CSR, the SCC
   *    CSR adjacency, the BFS pair adjacency — must derive its partition
   *    width from the scale-aware [[GraphXAlgos.adjWidthFor]], not a flat
   *    rows-per-partition constant: per-round shuffle-block count grows as
@@ -80,34 +80,16 @@ class Round14ScaleSpec extends AnyFunSuite {
     assert(wVote > wBoth && wBoth > 1,
       "fixture must split the two fine targets and be multi-partition")
     // kernel CSR (its pinned result keeps the CSR partitioning): both
-    // orientations for label propagation, out-edges for PageRank
+    // orientations for label propagation and WCC, out-edges for PageRank
     assert(GraphXAlgos.labelPropagation(g, 0).rdd.getNumPartitions == wVote)
+    assert(GraphXAlgos.wcc(g).rdd.getNumPartitions == wVote)
     assert(GraphXAlgos.pageRank(g, 0).rdd.getNumPartitions == GraphXAlgos.adjWidthFor(e, par))
-    // WCC delta loop + SCC trim/coloring substrate
-    assert(c.csrByDir("both").getNumPartitions == wBoth)
+    // SCC trim/coloring substrate
     assert(c.csrByDir("out").getNumPartitions == wOne)
     assert(c.csrByDir("in").getNumPartitions == wOne)
     // BFS pair adjacency (var-length expand, shortest paths, simple paths)
     assert(c.pairsByDir("both").getNumPartitions == wBoth)
     assert(c.pairsByDir("out").getNumPartitions == wOne)
-  }
-
-  test("forced endgame goes DISTRIBUTED past the pair cap and stays exact") {
-    // endgamePairCap=0 makes every capped endgame attempt skip and the
-    // forced endgame take the pointer-jumping branch (driver union-find
-    // unreachable: force && nPairs > 4·0 for any non-empty boundary), so
-    // this pins the distributed closure end-to-end: a 60-chain with a
-    // 3-round budget is nowhere near converged when the loop forces it.
-    sys.props("graft.test.endgamePairCap") = "0"
-    try {
-      val g = chainGraph(60)
-      val c = GraphXAlgos.ctxFor(g, Nil)
-      val out = GraphXAlgos.wccDeltaLoop(g, c, maxIter = 3)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(out.size == 60)
-      assert(out.values.toSet == Set("n0000000"), // one component, min id
-        s"expected a single fully-closed component, got ${out.values.toSet}")
-    } finally sys.props.remove("graft.test.endgamePairCap")
   }
 
   test("chunked vote-tally flush is exact (forced tiny cap, weighted + unweighted)") {
