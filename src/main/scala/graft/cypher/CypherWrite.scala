@@ -59,7 +59,7 @@ object CypherWrite {
         paths.foreach { p =>
           if (p.hops.isEmpty) {
             val (df, v) = nodeRows(fr, p.first, params)
-            nc += store.createNodes(df.dropDuplicates("id")).nodesCreated
+            nc += store.createNodes(df).nodesCreated
             refresh()
             fr = bindNodeInFrame(fr, v, p.first, params)
           } else {
@@ -74,7 +74,7 @@ object CypherWrite {
                 require(pat.label.isDefined,
                   s"CREATE rel: endpoint $v is neither bound nor a creatable (:Label) pattern")
                 val (df, vv) = nodeRows(fr, pat, params)
-                nc += store.createNodes(df.dropDuplicates("id")).nodesCreated
+                nc += store.createNodes(df).nodesCreated
                 refresh()
                 fr = bindNodeInFrame(fr, vv, pat, params)
               }
@@ -147,12 +147,9 @@ object CypherWrite {
         frame0
       case MergeClause(path, onCreateSet, onMatchSet) =>
         val (cand, v) = nodeRows(frame0, path.first, params)
-        val candD = cand.dropDuplicates("id").localCheckpoint(true)
-        val existing = candD.join(g.nodes.select("id"), Seq("id"), "left_semi")
-          .select("id").localCheckpoint(true)
-        nc += store.mergeNodes(candD).nodesCreated
+        val (stats, createdIds, existing) = store.mergeNodesReporting(cand)
+        nc += stats.nodesCreated
         refresh()
-        val createdIds = candD.select("id").join(existing, Seq("id"), "left_anti")
         onCreateSet.foreach { case (Prop(pv, key), e) =>
           require(pv == v, s"ON SET target $pv must be the MERGE variable $v")
           ps += applySet(store, pv, createdIds, key, e, params); refresh()
@@ -166,7 +163,7 @@ object CypherWrite {
         items.foreach { case (Prop(v, key), e) =>
           require(frame0.kinds.get(v).contains(NodeK), s"SET target $v must be a bound node")
           val updates = frame0.df.select(col(s"${v}_id").as("id"),
-            Planner.compile(e, frame0, params).as("newval")).dropDuplicates("id")
+            Planner.compile(e, frame0, params).as("newval"))
           ps += store.setNodeProperties(updates, key).propertiesSet
           refresh()
         }
@@ -174,7 +171,7 @@ object CypherWrite {
       case DeleteClause(vars, detach) =>
         vars.foreach { v =>
           require(frame0.kinds.get(v).contains(NodeK), s"DELETE target $v must be a bound node")
-          val ids = frame0.df.select(col(s"${v}_id").as("id")).dropDuplicates()
+          val ids = frame0.df.select(col(s"${v}_id").as("id"))
           val stats = store.deleteNodes(ids, detach)
           nd += stats.nodesDeleted; rd += stats.relationshipsDeleted
           refresh()
@@ -184,7 +181,7 @@ object CypherWrite {
         items.foreach { case Prop(v, key) =>
           require(frame0.kinds.get(v).contains(NodeK), s"REMOVE target $v must be a bound node")
           val updates = frame0.df.select(col(s"${v}_id").as("id"),
-            lit(null).as("newval")).dropDuplicates("id")
+            lit(null).as("newval"))
           ps += store.setNodeProperties(updates, key).propertiesSet
           refresh()
         }
@@ -373,17 +370,15 @@ object CypherWrite {
   /** ON CREATE/MATCH SET value evaluation with the merge variable BOUND
     * over the affected ids — self-referencing expressions
     * (`ON MATCH SET n.count = n.count + 1`, merge_test.go:108) read the
-    * node's current values; literals behave as before.
+    * node's current values; literals behave as before. The rows come
+    * from the store's lookup, which the MERGE that precedes it has just
+    * filled (no job).
     */
   private def applySet(store: GraphStore, v: String, ids: DataFrame,
       key: String, e: Expr, params: Map[String, Any]): Long = {
-    val g = store.snapshot
-    val bound = Frame(
-      graft.graph.Expand.nodeColsOf(g.nodes, v)
-        .join(ids.select(col("id").as(s"${v}_id")), s"${v}_id"),
-      Map(v -> NodeK))
+    val bound = Frame(graft.graph.Expand.nodeColsOf(store.nodesById(ids), v), Map(v -> NodeK))
     val updates = bound.df.select(col(s"${v}_id").as("id"),
-      Planner.compile(e, bound, params).as("newval")).dropDuplicates("id")
+      Planner.compile(e, bound, params).as("newval"))
     store.setNodeProperties(updates, key).propertiesSet
   }
 }

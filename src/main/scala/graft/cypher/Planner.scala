@@ -81,11 +81,16 @@ object Planner {
   /** Seed frame: one row, zero columns, so a leading UNWIND/RETURN
     * produces rows.
     */
-  // one explicit partition: range(1) defaults to defaultParallelism
-  // partitions, and a 1-row 32-partition seed bloats every write's
-  // appended rows (the store accumulated ~30 empty partitions per CREATE)
-  def seedFrame(g: PropertyGraph): Frame =
-    Frame(g.nodes.sparkSession.range(0, 1, 1, 1).toDF().drop("id"), Map.empty)
+  def seedFrame(g: PropertyGraph): Frame = Frame(oneRow(g.nodes.sparkSession), Map.empty)
+
+  /** One row, zero columns, as a local relation: projections of literals
+    * over it fold into a local relation while Catalyst optimizes, so
+    * collecting them (a CREATE's rows, a procedure's one-row answer) runs
+    * no Spark job, and anything that does execute it reads one partition.
+    */
+  def oneRow(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row()),
+      new org.apache.spark.sql.types.StructType())
 
   /** Advance the binding frame by one READ clause (MATCH / UNWIND / WITH /
     * RETURN). `first` = no pattern clause consumed yet. Exposed for the
@@ -280,7 +285,8 @@ object Planner {
     // drops a Sort under a join (join output order is undefined), which
     // would silently discard an ORDER BY inside the procedure's query
     // (apoc.cypher.runFirstColumn's contract is ordered rows) — surfaced
-    // when bucketized stores stopped matching insertion order.
+    // when store frames stopped matching insertion order (a written row
+    // reads back after the base rows, from the store's delta).
     var out =
       if (f.df.columns.isEmpty)
         Frame(res, f.kinds ++ res.columns.map(_ -> (ValK: Kind)))

@@ -68,8 +68,8 @@ object SearchCallProcs {
     c.get(k).map(asStrList).getOrElse(Nil)
 
   private def oneRow(g: PropertyGraph, cols: (String, Any)*): DataFrame =
-    cols.foldLeft(g.nodes.sparkSession.range(1).toDF("_one")) {
-      case (d, (n, v)) => d.withColumn(n, lit(v)) }.drop("_one")
+    cols.foldLeft(Planner.oneRow(g.nodes.sparkSession)) {
+      case (d, (n, v)) => d.withColumn(n, lit(v)) }
 
   /** Node-embedding-backed vector/fulltext index frame: the CURRENT
     * store's named embeddings for `prop`, label-restricted. Resolved per

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Incremental commit log for [[GraphStore]] — the Spark-native analog of
   * the reference's WAL + snapshot + compaction storage
@@ -14,11 +15,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Here a "WAL record" is a per-statement DELTA COMMIT: only the rows the
   * statement touched are written (upserts keyed by `id`, deletes as id
-  * lists), never the full store. Every `compactEvery` delta commits the log
-  * writes a CHECKPOINT (full materialized tables) and replay restarts from
-  * it — so recovery cost and lineage depth are both bounded by
-  * `compactEvery`, and a statement that sets one property on one node
-  * writes one row, not 100 TB.
+  * lists), never the full store. Every `compactEvery` delta commits the
+  * store writes a CHECKPOINT (full tables) and reads its bases back from
+  * it (see [[Overlay]]); replay restarts from it too, so recovery cost is
+  * bounded by `compactEvery`, and a statement that sets one property on
+  * one node writes one row, not 100 TB.
+  *
+  * The latest version and the deltas since the newest checkpoint are kept
+  * in this instance, read from `_log` once on first use and moved by each
+  * commit, so a commit never re-reads the log.
   *
   * Commit protocol (the public Delta-Lake-style log shape): data files land
   * under `dir/delta/v{N}/<part>` or `dir/checkpoint/v{N}/<table>` first,
@@ -66,14 +71,21 @@ final class DeltaLog(val spark: SparkSession, val dir: String,
     }.sortBy(_.version)
   }
 
-  def latestVersion: Long = commits().lastOption.map(_.version).getOrElse(-1L)
-
-  /** Delta commits since (and not counting) the newest checkpoint. */
-  def deltasSinceCheckpoint: Int = {
+  /** (latest version, delta commits since the newest checkpoint). */
+  private var state: Option[(Long, Int)] = None
+  private def seen: (Long, Int) = state.getOrElse {
     val cs = commits()
     val lastCp = cs.reverse.find(_.kind == "checkpoint").map(_.version).getOrElse(-1L)
-    cs.count(c => c.kind == "delta" && c.version > lastCp)
+    val s = (cs.lastOption.map(_.version).getOrElse(-1L),
+      cs.count(c => c.kind == "delta" && c.version > lastCp))
+    state = Some(s)
+    s
   }
+
+  def latestVersion: Long = synchronized(seen._1)
+
+  /** Delta commits since (and not counting) the newest checkpoint. */
+  def deltasSinceCheckpoint: Int = synchronized(seen._2)
 
   private def writeRecord(version: Long, kind: String, parts: Seq[String]): Unit = {
     val json = s"""{"version":$version,"kind":"$kind","parts":[${
@@ -87,12 +99,14 @@ final class DeltaLog(val spark: SparkSession, val dir: String,
   }
 
   /** Write one delta commit: only the statement's touched rows. */
-  def commitDelta(version: Long, parts: Map[String, DataFrame]): Unit = {
+  def commitDelta(version: Long, parts: Map[String, DataFrame]): Unit = synchronized {
     require(!parts.isEmpty, "empty delta commit")
     parts.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$dir/delta/v$version/$name")
     }
     writeRecord(version, "delta", parts.keys.toSeq.sorted)
+    // not yet read: the first read will count this commit
+    state = state.map { case (_, since) => (version, since + 1) }
   }
 
   /** Write a checkpoint: the fully materialized tables. Replay restarts
@@ -100,14 +114,21 @@ final class DeltaLog(val spark: SparkSession, val dir: String,
     * deployment vacuums them on a retention clock).
     */
   def commitCheckpoint(version: Long, g: PropertyGraph,
-      nodeEmb: DataFrame, relEmb: DataFrame): Unit = {
+      nodeEmb: DataFrame, relEmb: DataFrame): Unit = synchronized {
     val base = s"$dir/checkpoint/v$version"
     g.nodes.write.mode("overwrite").parquet(s"$base/nodes")
     g.edges.write.mode("overwrite").parquet(s"$base/edges")
     nodeEmb.write.mode("overwrite").parquet(s"$base/node_embeddings")
     relEmb.write.mode("overwrite").parquet(s"$base/rel_embeddings")
     writeRecord(version, "checkpoint", Nil)
+    state = Some((version, 0))
   }
+
+  /** One table of checkpoint `version`, read back with the `schema` it
+    * was written with (no inference job).
+    */
+  def checkpointTable(version: Long, table: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(s"$dir/checkpoint/v$version/$table")
 
   /** Garbage-collect data made unreachable by the newest checkpoint: delta
     * directories at or below its version and all older checkpoints (the
@@ -136,9 +157,9 @@ final class DeltaLog(val spark: SparkSession, val dir: String,
       relEmb: DataFrame, version: Long)
 
   /** Recovery: newest checkpoint + ordered delta tail
-    * (`wal_engine.go:28-45`'s open path). Upserts replace by key; the
-    * result is materialized (localCheckpoint) so the replayed store starts
-    * with a flat lineage regardless of tail length.
+    * (`wal_engine.go:28-45`'s open path). Upserts replace by key. The
+    * frames are lazy; [[GraphStore.loadWal]] pins them, so the replayed
+    * store starts with a flat lineage regardless of tail length.
     */
   def replay(): Replayed = {
     val cs = commits()
@@ -171,8 +192,8 @@ final class DeltaLog(val spark: SparkSession, val dir: String,
         if (parts.contains(up)) {
           // schema evolution across commits: an upsert batch may carry
           // hoisted property columns older commits (or the checkpoint)
-          // never saw — the live store widens buckets the same way
-          // (GraphStore.widenSchemas)
+          // never saw — the live store widens its tables the same way
+          // (Overlay.conform)
           val rows = spark.read.parquet(s"$dir/delta/v$v/$up")
           out = out.unionByName(rows, allowMissingColumns = true)
         }
@@ -203,9 +224,6 @@ final class DeltaLog(val spark: SparkSession, val dir: String,
       rEmb = applyEmb(rEmb, c.version, c.parts, "rel_embeddings_upserts",
         "rel_embeddings_deletes")
     }
-    Replayed(
-      PropertyGraph(nodes.localCheckpoint(true), edges.localCheckpoint(true)),
-      nEmb.localCheckpoint(true), rEmb.localCheckpoint(true),
-      cs.last.version)
+    Replayed(PropertyGraph(nodes, edges), nEmb, rEmb, cs.last.version)
   }
 }

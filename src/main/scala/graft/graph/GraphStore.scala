@@ -1,19 +1,11 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** Mutation layer (SURVEY §2.8): CREATE / MERGE / SET / REMOVE / DELETE
-  * over versioned snapshots.
-  *
-  * The reference mutates row stores under a WAL
-  * (`/root/reference/pkg/cypher/create.go`, `merge.go`,
-  * `executor_mutations.go`); here every statement computes a NEW
-  * nodes/edges DataFrame pair and atomically swaps the snapshot — readers
-  * keep the version they started with (statement-level snapshot isolation,
-  * the transaction.go analog). At scale the swap is a Delta-style commit of
-  * appended/rewritten partitions; in-memory it is a reference swap.
-  */
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
 /** Global registry of the most recently constructed store — the engine's
   * analog of the reference's package-level `Storage` variable
   * (`apoc/storage`); the store-backed CALL procedures (apoc.schema DDL,
@@ -30,28 +22,29 @@ object GraphStore {
       labels: Seq[String] = Nil, relType: Option[String] = None,
       properties: Map[String, String] = Map.empty)
 
-  /** Lineage-bounding pin for every frame the store keeps live.
+  /** Lineage-bounding pin for every base frame the store keeps.
     *
-    * Default: `localCheckpoint(true)` — executor-resident pinned blocks,
-    * the fast local-mode choice, but explicitly NOT fault-tolerant: lose
-    * an executor (or, in local mode, hit one task OOM) and the pinned
-    * blocks are unrecoverable — the round-11 sf3 probe's
-    * `"localCheckpoint" action failed` cascade was exactly this.
+    * Default: `localCheckpoint` — executor-resident pinned blocks, the
+    * fast local-mode choice, but explicitly NOT fault-tolerant: lose an
+    * executor (or, in local mode, hit one task OOM) and the pinned blocks
+    * are unrecoverable — the round-11 sf3 probe's `"localCheckpoint"
+    * action failed` cascade was exactly this.
     *
     * With `spark.graft.checkpointDir` set, frames pin through RELIABLE
     * `checkpoint()` into that directory instead: a scale/production
     * store then survives executor loss mid-session (pair with
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` so
     * superseded checkpoint files are reaped as their frames are GC'd).
+    * `eager = false` defers the pin to the first job that reads the frame.
     */
-  private[graft] def pin(df: DataFrame): DataFrame = {
+  private[graft] def pin(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = spark.sparkContext
         if (!sc.getCheckpointDir.exists(_.contains(dir))) sc.setCheckpointDir(dir)
-        df.checkpoint(eager = true)
-      case None => df.localCheckpoint(true)
+        df.checkpoint(eager)
+      case None => df.localCheckpoint(eager)
     }
   }
 
@@ -68,12 +61,23 @@ object GraphStore {
   private val inTx = new ThreadLocal[GraphStore]()
   def activeTransaction: Option[GraphStore] = Option(inTx.get)
 
+  private val IdKey = Seq("id")
+  private val EmbKey = Seq("entity_id", "name")
+
+  private val EmbSchema = StructType(Seq(
+    StructField("entity_id", StringType),
+    StructField("name", StringType),
+    StructField("embedding", ArrayType(DoubleType))))
+
+  private def embRows(spark: SparkSession, rows: Row*): DataFrame =
+    spark.createDataFrame(rows.asJava, EmbSchema)
+
   /** Restore a store from a [[GraphStore.persist]] directory — the read
     * side of the reference's snapshot recovery (`pkg/storage/
     * wal_engine.go:28-45` loads WAL + snapshot on open). Embedding side
     * tables are optional so pre-persist directories stay readable.
     */
-  def load(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def load(spark: SparkSession, dir: String,
       registerGlobal: Boolean = true): GraphStore = {
     val store = new GraphStore(PropertyGraph(
       spark.read.parquet(s"$dir/nodes"),
@@ -81,29 +85,74 @@ object GraphStore {
     def opt(p: String): Option[DataFrame] =
       if (new java.io.File(s"$dir/$p").exists())
         Some(spark.read.parquet(s"$dir/$p")) else None
-    store.nodeEmbs = opt("node_embeddings")
-    store.relEmbs = opt("rel_embeddings")
+    val t = store.tables
+    store.tables = t.copy(
+      nodeEmb = opt("node_embeddings").map(Overlay.of(_, EmbKey)).getOrElse(t.nodeEmb),
+      relEmb = opt("rel_embeddings").map(Overlay.of(_, EmbKey)).getOrElse(t.relEmb))
     store
   }
 
   /** Reopen a WAL-backed store: newest checkpoint + delta-tail replay
-    * (`pkg/storage/wal_engine.go:28-45`'s recovery path). The returned
-    * store keeps logging to the same WAL, continuing the version sequence.
+    * (`pkg/storage/wal_engine.go:28-45`'s recovery path). The replayed
+    * tables are pinned and counted once here; the returned store keeps
+    * logging to the same WAL, continuing the version sequence.
     */
-  def loadWal(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def loadWal(spark: SparkSession, dir: String,
       registerGlobal: Boolean = true, compactEvery: Int = 8): GraphStore = {
     val replayed = new DeltaLog(spark, dir).replay()
-    val store = new GraphStore(replayed.graph, registerGlobal,
-      walDir = Some(dir), compactEvery = compactEvery)
-    store.nodeEmbs = Some(replayed.nodeEmb)
-    store.relEmbs = Some(replayed.relEmb)
+    val t = Tables(Overlay.pinned(replayed.graph.nodes, IdKey),
+      Overlay.pinned(replayed.graph.edges, IdKey),
+      Overlay.pinned(replayed.nodeEmb, EmbKey), Overlay.pinned(replayed.relEmb, EmbKey))
+    Seq(t.nodes, t.edges, t.nodeEmb, t.relEmb).foreach(_.base.counts)
+    val store = new GraphStore(PropertyGraph(t.nodes.frame, t.edges.frame),
+      registerGlobal, walDir = Some(dir), compactEvery = compactEvery)
+    store.tables = t
     store.versionCounter = replayed.version
     store
   }
+
+  /** The four keyed tables of one version. */
+  private final case class Tables(nodes: Overlay, edges: Overlay,
+      nodeEmb: Overlay, relEmb: Overlay) {
+    def zip(o: Tables)(f: (Overlay, Overlay) => Overlay): Tables =
+      Tables(f(nodes, o.nodes), f(edges, o.edges), f(nodeEmb, o.nodeEmb), f(relEmb, o.relEmb))
+  }
+
+  /** A batch applied to one table, not yet committed: the table after it
+    * (built on first use), the rows it wrote (WAL part, change feed), the
+    * keys it names, how many the table held, and — for an insert — which.
+    */
+  private final class Applied(next0: => Overlay, val written: DataFrame,
+      val n: Long, val present: Long, val matched: DataFrame = null) {
+    lazy val next: Overlay = next0
+  }
 }
 
+/** Mutation layer (SURVEY §2.8): CREATE / MERGE / SET / REMOVE / DELETE
+  * over versioned snapshots, the analog of the reference's WAL-backed row
+  * stores (`pkg/cypher/create.go`, `merge.go`, `pkg/storage/wal_engine.go`).
+  *
+  * Each keyed table — nodes, edges and the two embedding side tables — is
+  * an [[Overlay]]: a pinned base plus a small driver-resident delta. A
+  * point write collects its touched rows (at most [[Overlay.FoldRows]]),
+  * merges them into the delta, writes its WAL part from those same rows
+  * and swaps in the new version: O(changed rows) whatever the store's
+  * size. Readers keep the version they started with (statement-level
+  * snapshot isolation, the transaction.go analog).
+  *
+  * A FOLD makes a table's read frame its new base: pinned when its delta
+  * passes the bound, at once for a larger batch, and on the first write
+  * to a frame the caller handed over; at each WAL checkpoint the written
+  * checkpoint files become every table's base, so a logging store keeps
+  * no second copy of its tables in block storage. The store drops the old
+  * base; Spark's cleaner unpersists it once no reader's snapshot holds it
+  * (an explicit unpersist would break a reader still holding one). Row
+  * counts move with every commit, so [[nodeCount]] and friends run no job.
+  */
 final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     walDir: Option[String] = None, compactEvery: Int = 8) {
+  import GraphStore.{Applied, EmbKey, IdKey, Tables}
+
   // transaction-private stores must NOT hijack the global registry
   if (registerGlobal) GraphStore.registerCurrent(this)
 
@@ -112,6 +161,13 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
       relationshipsCreated: Long = 0, relationshipsDeleted: Long = 0,
       propertiesSet: Long = 0)
 
+  // a val: a method reading `initial` would keep the first frames alive
+  private val spark: SparkSession = initial.nodes.sparkSession
+
+  @volatile private var tables: Tables = Tables(
+    Overlay.of(initial.nodes, IdKey), Overlay.of(initial.edges, IdKey),
+    Overlay.of(GraphStore.embRows(spark), EmbKey),
+    Overlay.of(GraphStore.embRows(spark), EmbKey))
   @volatile private var current: PropertyGraph = initial
   @volatile private[graph] var versionCounter: Long = 0
 
@@ -142,20 +198,12 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     this.maxNodes = maxNodes; this.maxEdges = maxEdges; this.limitDb = db
   }
 
-  private def checkNodeLimit(g: PropertyGraph, adding: Long): Unit =
-    if (maxNodes > 0) {
-      val cur = g.nodes.count()
-      if (cur + adding > maxNodes) throw new IllegalStateException(
+  private def checkLimit(t: Overlay, adding: Long, max: Long, what: String): Unit =
+    if (max > 0) {
+      val cur = t.count()
+      if (cur + adding > max) throw new IllegalStateException(
         s"storage limit exceeded: database '$limitDb' has reached " +
-          s"max_nodes limit ($cur/$maxNodes)")
-    }
-
-  private def checkEdgeLimit(g: PropertyGraph, adding: Long): Unit =
-    if (maxEdges > 0) {
-      val cur = g.edges.count()
-      if (cur + adding > maxEdges) throw new IllegalStateException(
-        s"storage limit exceeded: database '$limitDb' has reached " +
-          s"max_edges limit ($cur/$maxEdges)")
+          s"max_$what limit ($cur/$max)")
     }
 
   /** Incremental commit log (None = in-memory-only store). When present,
@@ -164,18 +212,26 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * WAL+snapshot+compaction (`pkg/storage/wal_engine.go:28-45`), so a
     * single-property SET never rewrites the store on disk.
     */
-  private val wal: Option[DeltaLog] =
-    walDir.map(d => new DeltaLog(initial.nodes.sparkSession, d))
+  private val wal: Option[DeltaLog] = walDir.map(d => new DeltaLog(spark, d))
   // a fresh WAL dir starts with checkpoint v0 of the initial graph so
-  // replay always has a base (recovery never needs out-of-band state).
-  // emptyEmb, not nodeEmbeddings: the emb vars initialize after this block.
+  // replay always has a base (recovery never needs out-of-band state)
   wal.foreach { w =>
     if (w.latestVersion < 0)
-      w.commitCheckpoint(0L, initial, emptyEmb, emptyEmb)
+      w.commitCheckpoint(0L, initial, nodeEmbeddings, relEmbeddings)
   }
 
   def snapshot: PropertyGraph = current
   def version: Long = versionCounter
+
+  /** Rows of the current version, kept at commit time: no Spark job once
+    * each table's base is counted (at a WAL replay, else on first demand).
+    */
+  def nodeCount: Long = tables.nodes.count()
+  def edgeCount: Long = tables.edges.count()
+  /** Nodes holding an embedding named `name` (the status surfaces'
+    * "embedded" figure).
+    */
+  def embeddedNodeCount(name: String = "embedding"): Long = tables.nodeEmb.count(name)
 
   // ===================================================== change feed =====
 
@@ -219,299 +275,137 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
         .foreach(r => fanOut(GraphStore.GraphChange(kind, r.getString(0),
           Nil, Option(r.getString(1)))))
 
-  /** Commit `g` as the next version. Writers serialize per store: every
-    * public mutation holds the store monitor for its whole body (probe,
-    * bucket rewrite, this swap), so no commit is built on a frame another
-    * writer has since replaced. Readers never lock — they read the
-    * volatile `current`.
+  // ========================================================== commit =====
+
+  /** Commit `next` as the next version. Writers serialize per store:
+    * every public mutation holds the store monitor for its whole body, so
+    * no commit is built on tables another writer has since replaced.
+    * Readers never lock. Every `compactEvery` deltas a checkpoint writes
+    * the tables and they rebase on its files; then a table past the bound
+    * folds, as does a written table whose base the caller handed over.
     */
-  private def swap(g: PropertyGraph,
-      parts: Map[String, DataFrame] = Map.empty): Unit = {
+  private def commit(next: Tables, parts: Map[String, DataFrame]): Unit = {
+    val prev = tables
     versionCounter += 1
+    var t = next
     wal.foreach { w =>
       if (parts.nonEmpty) w.commitDelta(versionCounter, parts)
       if (w.deltasSinceCheckpoint >= compactEvery) {
         versionCounter += 1
-        w.commitCheckpoint(versionCounter, g, nodeEmbeddings, relEmbeddings)
+        val v = versionCounter
+        w.commitCheckpoint(v, PropertyGraph(t.nodes.frame, t.edges.frame),
+          t.nodeEmb.frame, t.relEmb.frame)
+        def reread(o: Overlay, table: String) =
+          o.rebase(w.checkpointTable(v, table, Overlay.nullable(o.schema)))
+        t = Tables(reread(t.nodes, "nodes"), reread(t.edges, "edges"),
+          reread(t.nodeEmb, "node_embeddings"), reread(t.relEmb, "rel_embeddings"))
       }
     }
-    // Lineage bounding. A bucketed side is materialized bucket-wise by the
-    // copy-on-write committer (only touched buckets ever rewrite — the
-    // file-granularity commit Delta Lake does); an unbucketed side falls
-    // back to the periodic whole-frame checkpoint, skipped when this
-    // commit didn't change that side's frame at all.
-    val old = current
-    current =
-      if (versionCounter % 6 == 0)
-        PropertyGraph(
-          if (nodeSide.buckets.isDefined || (g.nodes eq old.nodes)) g.nodes
-          else g.nodes.transform(GraphStore.pin),
-          if (edgeSide.buckets.isDefined || (g.edges eq old.edges)) g.edges
-          else g.edges.transform(GraphStore.pin))
-      else g
+    t = t.zip(prev)((o, p) =>
+      if (o.size > Overlay.FoldRows || ((o ne p) && !o.base.pinned)) o.fold() else o)
+    tables = t
+    if ((t.nodes ne prev.nodes) || (t.edges ne prev.edges))
+      current = PropertyGraph(t.nodes.frame, t.edges.frame)
   }
 
-  // ============================================ bucketed copy-on-write =====
-  // The node/edge frames are hash-bucketed by id once a store starts
-  // mutating: a keyed mutation rewrites ONLY the buckets containing
-  // touched rows, leaving every other bucket's materialized blocks live —
-  // so a point SET on a 100 TB store rewrites O(store/nBuckets), never the
-  // store. Id-equality reads on the write path (duplicate-id checks, WAL
-  // delta rows, change events) prune to the same touched buckets. The WAL
-  // below is untouched: deltas stay row-keyed (`wal_engine.go:28-45`
-  // recovery shape preserved). Read-only stores never bucketize. One
-  // committer ([[Side]]) serves both the node and the edge frame.
+  // ==================================================== batch helpers =====
 
-  /** Target rows per bucket: bucket count adapts to store size (4..64 in
-    * local mode; a cluster deployment sizes this to its file-granularity
-    * commit target, e.g. 128 MB of Parquet per bucket). Coarse on purpose:
-    * each bucket materializes as its own job at bucketize time, so many
-    * small buckets cost more up-front than the rewrite granularity buys.
+  /** Insert-or-replace `batch` into `t` by key; `keepPresent = false`
+    * leaves out keys the table holds (MERGE). A batch of at most
+    * [[Overlay.FoldRows]] rows goes to the delta after one point probe.
     */
-  private val bucketTargetRows = 200000L
-
-  /** A side splits into real buckets only after this many committed keyed
-    * mutations on it — one-shot and short write bursts (most analytics
-    * queries that build + mutate a store once) stay on the whole-frame
-    * path and never pay the bucket materialization; long-lived stores (the
-    * server, ingest jobs) cross it after a few writes and amortize. The
-    * counters start at 0 on every store, a WAL-replayed one included, so
-    * a reopened server defers its first writes like a fresh store.
-    */
-  private val bucketizeAfter = 3L
-
-  /** Bucket vector: the per-bucket frames plus — after a LAZY conversion —
-    * the frozen pre-conversion parent and the set of buckets still
-    * identical to `parent.filter(bucketCol == b)`. Keeping the pure set
-    * lets (a) every read compose all still-pure buckets as ONE filtered
-    * scan of the parent instead of nBuckets per-bucket scans, and (b) the
-    * conversion skip materializing any bucket up front — a bucket only
-    * materializes when a mutation first touches it. Crossing the deferral
-    * bound therefore costs at most one checkpoint of the frame the store
-    * already holds, never a full-frame × nBuckets rewrite — at 100 TB the
-    * conversion is a metadata event, not a scan.
-    */
-  private final case class BucketVec(parent: Option[DataFrame],
-      pure: Set[Int], bs: IndexedSeq[DataFrame]) {
-    def size: Int = bs.size
-  }
-  private object BucketVec {
-    /** Deferral mode: the whole frame as a single bucket. */
-    def whole(df: DataFrame): BucketVec =
-      BucketVec(None, Set.empty, IndexedSeq(df))
-  }
-
-  private val maxDepth = 4
-
-  private def bucketColFor(n: Int)(c: Column): Column =
-    pmod(xxhash64(c), lit(n)).cast("int")
-
-  /** Partitions a materialized bucket compacts to: a bucket is the commit
-    * unit (≤ bucketTargetRows), so a handful of partitions carries it.
-    * WITHOUT this compaction, every union/join layer ADDS partitions and
-    * localCheckpoint freezes the accumulation — a mutation-heavy session
-    * snowballed a 4-bucket store to a 22k-task scan before this bound.
-    */
-  private def bucketParts(df: DataFrame, nBuckets: Int): Int = {
-    val conf = df.sparkSession.sessionState.conf.numShufflePartitions
-    math.max(1, conf / math.max(1, nBuckets))
-  }
-
-  /** A frame whose plan IS a pinned RDD (the product of localCheckpoint):
-    * re-checkpointing it would be a pure copy.
-    */
-  private def isPinned(df: DataFrame): Boolean =
-    df.queryExecution.logical.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-
-  /** Split `df` into hash-buckets INCREMENTALLY: the parent is pinned
-    * (one checkpoint pass, skipped when the frame is already a
-    * checkpoint) and every bucket starts as a lazy filter view over it —
-    * no bucket materializes until mutations later touch it (the pure-set
-    * machinery on [[BucketVec]]).
-    */
-  private def bucketize(df: DataFrame): BucketVec = {
-    val parent =
-      if (isPinned(df)) df
-      else df.coalesce(df.sparkSession.sessionState.conf.numShufflePartitions)
-        .transform(GraphStore.pin)
-    val rows = parent.count()
-    val n = math.max(4L, math.min(64L, (rows + bucketTargetRows - 1) / bucketTargetRows)).toInt
-    val views = (0 until n).map(b =>
-      parent.filter(bucketColFor(n)(col("id")) === b))
-    BucketVec(Some(parent), (0 until n).toSet, views)
-  }
-
-  /** One side (the node or the edge frame) of the bucketed copy-on-write
-    * committer: its bucket vector, per-bucket layer depths and deferral
-    * clock. Every method runs with the store monitor held — each public
-    * mutation holds it for its whole body.
-    */
-  private final class Side(frame: PropertyGraph => DataFrame) {
-    var buckets: Option[BucketVec] = None
-    // un-materialized mutation layers stacked per bucket; a bucket
-    // re-checkpoints when its depth reaches the bound, so lineage stays flat
-    // without ever rewriting untouched buckets
-    private var depth: Array[Int] = Array.empty
-    // committed keyed mutations on this side (a delete that touches only
-    // nodes must not push the edge side toward bucketization)
-    private var commits = 0L
-    private var bucketizeAt = bucketizeAfter
-    private def deferred: Boolean = commits < bucketizeAt
-
-    def ensure(): BucketVec = buckets match {
-      // still under the deferral bound (single whole-frame "bucket"), or
-      // already split — keep as is
-      case Some(v) if v.size > 1 || deferred => v
-      // first keyed write (from the current frame), or crossed the bound
-      // (split the whole-frame bucket)
-      case old =>
-        val whole = old.fold(frame(current))(_.bs.head)
-        val v = if (deferred) BucketVec.whole(whole) else bucketize(whole)
-        depth = Array.fill(v.size)(0)
-        buckets = Some(v)
-        v
-    }
-
-    def conformInsert(rows: DataFrame): DataFrame = {
-      val (v, r) = widenSchemas(ensure(), rows)
-      buckets = Some(v); r
-    }
-
-    /** Rewrite exactly the touched buckets through `f(bucketId, frame)`,
-      * re-materializing a bucket only when its stacked-layer depth hits
-      * the bound. Returns the new bucket vector (also installed).
-      */
-    def rewrite(touched: Set[Int])(f: (Int, DataFrame) => DataFrame): BucketVec = {
-      val v = ensure()
-      val nb = v.bs.zipWithIndex.map { case (df, b) =>
-        if (!touched(b)) df
-        else {
-          val nf = f(b, df)
-          // a still-pure bucket materializes on its FIRST touch: its view
-          // lineage re-scans the whole parent on every later read, so one
-          // O(bucket) checkpoint now buys O(bucket) reads from here on —
-          // while buckets never touched stay views and never pay anything
-          // (measured across the write family at sf0.1: this beats both
-          // the defer-to-depth-bound and the materialize-on-second-touch
-          // variants on total wall-clock)
-          depth(b) = if (v.pure(b) && v.size > 1) maxDepth else depth(b) + 1
-          if (depth(b) >= maxDepth) {
-            depth(b) = 0
-            // coalesce BEFORE materializing: layers accumulate partitions
-            // (union appends, broadcast joins preserve) and localCheckpoint
-            // would freeze the growth unbounded
-            nf.coalesce(bucketParts(nf, v.size)).transform(GraphStore.pin)
-          } else nf
-        }
-      }
-      // a touched bucket is no longer the parent view; once nothing is
-      // pure the parent drops out of the read path entirely
-      val pure2 = v.pure -- touched
-      val nv = BucketVec(if (pure2.isEmpty) None else v.parent, pure2, nb)
-      buckets = Some(nv)
-      commits += 1
-      nv
-    }
-
-    /** Wholesale rewrites and transaction commits replace the frame
-      * outside the committer — drop back to unbucketed mode (the next
-      * keyed mutation re-buckets).
-      */
-    def invalidate(): Unit = {
-      buckets = None
-      // restart the deferral clock: a store that keeps doing wholesale
-      // rewrites (refactor-heavy sessions) must not thrash re-bucketization
-      bucketizeAt = commits + bucketizeAfter
+  private def put(t0: Overlay, batch: DataFrame, keepPresent: Boolean = true): Applied = {
+    val (t, b) = t0.conform(batch)
+    Overlay.small(b) match {
+      case Some(rs0) =>
+        val rs = rs0.distinctBy(t.key)
+        val found = t.lookup(rs.map(t.key)).keySet
+        val kept = if (keepPresent) rs else rs.filterNot(r => found(t.key(r)))
+        new Applied(t.upsert(kept, found), t.local(kept), kept.size, found.size,
+          keyFrame(t, found))
+      case None =>
+        val keys = t.keyCols.map(col)
+        val keyed = GraphStore.pin(b.dropDuplicates(t.keyCols))
+        val marked = keyed.join(t.frame.select(keys :+ lit(true).as("_present"): _*),
+          t.keyCols, "left_outer")
+        val c = marked.agg(count(lit(1)), count(col("_present"))).collect().head
+        val (all, present) = (c.getLong(0), c.getLong(1))
+        val kept =
+          if (keepPresent) keyed
+          else GraphStore.pin(marked.filter(col("_present").isNull).drop("_present"))
+        new Applied(Overlay.pinned(t.frame.join(kept.select(keys: _*), t.keyCols, "left_anti")
+            .unionByName(kept), t.keyCols),
+          kept, if (keepPresent) all else all - present, present,
+          marked.filter(col("_present").isNotNull).select(keys: _*))
     }
   }
 
-  private val nodeSide = new Side(_.nodes)
-  private val edgeSide = new Side(_.edges)
-
-  /** Full frame of a bucket vector: all still-pure buckets come back as
-    * ONE filtered scan of the parent (an unfiltered scan when every
-    * bucket is pure), only materialized/rewritten buckets union on top.
+  /** Rewrite the current rows named by `updates` (key plus payload
+    * columns): `f` gets those rows joined with their payload and returns
+    * them with unchanged keys. `n` counts every distinct key of `updates`.
     */
-  private def unionAll(v: BucketVec): DataFrame = {
-    val impure = v.bs.indices.filterNot(v.pure).map(v.bs)
-    v.parent match {
-      case Some(p) if v.pure.nonEmpty =>
-        val pureScan =
-          if (v.pure.size == v.size) p
-          else p.filter(bucketColFor(v.size)(col("id")).isInCollection(v.pure))
-        (pureScan +: impure).reduce(_.unionByName(_))
-      case _ => impure.reduce(_.unionByName(_))
+  private def rewrite(t: Overlay, updates: DataFrame)(f: DataFrame => DataFrame): Applied = {
+    val payload = updates.schema.fields.filterNot(p => t.keyCols.contains(p.name))
+    def finish(df: DataFrame): DataFrame = f(df).select(t.schema.fieldNames.map(col).toSeq: _*)
+    Overlay.small(updates) match {
+      case Some(us0) =>
+        val kIdx = t.keyCols.map(updates.schema.fieldIndex)
+        val pIdx = payload.map(p => updates.schema.fieldIndex(p.name))
+        val us = us0.distinctBy(u => kIdx.map(u.getString))
+        val cur = t.lookup(us.map(u => kIdx.map(u.getString)))
+        val joined = us.flatMap(u => cur.get(kIdx.map(u.getString))
+          .map(r => Row.fromSeq(r.toSeq ++ pIdx.map(u.get))))
+        // a projection over a local relation: Catalyst evaluates it while
+        // optimizing, so this collect runs no job
+        val out = finish(spark.createDataFrame(joined.asJava,
+          Overlay.nullable(StructType(t.schema.fields ++ payload)))).collect().toSeq
+        new Applied(t.upsert(out, _ => true), t.local(out), us.size, cur.size)
+      case None =>
+        val u = GraphStore.pin(updates.dropDuplicates(t.keyCols))
+        val out = GraphStore.pin(finish(t.frame.join(u, t.keyCols)))
+        val n = u.count()
+        new Applied(Overlay.pinned(t.frame.join(u.select(t.keyCols.map(col): _*),
+          t.keyCols, "left_anti").unionByName(out), t.keyCols), out, n, n)
     }
   }
 
-  /** Distinct bucket ids that can contain `keys.id` rows — a ≤nBuckets-int
-    * driver read over the (checkpointed, small) key frame.
+  /** Delete the rows named by `keys` (a frame of the key columns); `n`
+    * counts the rows that existed.
     */
-  private def touchedBuckets(keys: DataFrame, n: Int): Set[Int] =
-    if (n == 1) Set(0) // deferral mode: whole frame, skip the driver read
-    else keys.select(bucketColFor(n)(col("id")).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSet
-
-  /** Union of only the buckets in `touched` — the pruned frame every
-    * id-equality join on the write path reads instead of the full store.
-    * Touched-and-still-pure buckets read as one filtered parent scan.
-    */
-  private def prunedUnion(v: BucketVec, touched: Set[Int]): DataFrame =
-    if (touched.isEmpty) v.bs.head.limit(0)
-    else {
-      val pureT = touched.intersect(v.pure)
-      val impure = v.bs.indices.filter(b => touched(b) && !v.pure(b)).map(v.bs)
-      val parts = v.parent match {
-        case Some(p) if pureT.nonEmpty =>
-          p.filter(bucketColFor(v.size)(col("id")).isInCollection(pureT)) +: impure
-        case _ => impure
-      }
-      if (parts.isEmpty) v.bs.head.limit(0)
-      else parts.reduce(_.unionByName(_))
+  private def drop(t: Overlay, keys: DataFrame): Applied =
+    Overlay.small(keys) match {
+      case Some(ks0) =>
+        val ks = ks0.map(r => t.keyCols.indices.map(r.getString)).distinct
+        val found = t.lookup(ks).keySet
+        new Applied(t.delete(ks, found), keyFrame(t, ks), found.size, found.size)
+      case None =>
+        val k = GraphStore.pin(keys.dropDuplicates())
+        val n = t.frame.join(k, t.keyCols, "left_semi").count()
+        new Applied(Overlay.pinned(t.frame.join(k, t.keyCols, "left_anti"), t.keyCols),
+          k, n, n)
     }
 
-  /** Schema evolution on insert: `rows` may carry hoisted property
-    * columns the store has not seen yet (the first CREATE against an
-    * empty server store starts from the 3-column floor). Widen every
-    * bucket with a typed-null PROJECTION — lazy, never a rewrite, the
-    * materialized blocks stay live — and align `rows` to the store-side
-    * dtype where both have the column (store wins a type clash).
-    */
-  private def widenSchemas(v: BucketVec, rows: DataFrame)
-      : (BucketVec, DataFrame) = {
-    val base = v.bs.head.schema
-    val extra = rows.schema.fields.filterNot(f => base.fieldNames.contains(f.name))
-    val widened =
-      if (extra.isEmpty) v
-      else {
-        def widen(df: DataFrame): DataFrame = extra.foldLeft(df)((d, f) =>
-          d.withColumn(f.name, lit(null).cast(f.dataType)))
-        // the parent widens too: pure buckets read through it
-        BucketVec(v.parent.map(widen), v.pure, v.bs.map(widen))
-      }
-    val aligned = base.fields.foldLeft(rows) { (d, f) =>
-      if (!d.columns.contains(f.name))
-        d.withColumn(f.name, lit(null).cast(f.dataType))
-      // catalogString ignores nullability: array<string> with a different
-      // containsNull must NOT cast — Spark refuses the no-op cast
-      else if (d.schema(f.name).dataType.catalogString != f.dataType.catalogString)
-        d.withColumn(f.name, col(f.name).cast(f.dataType))
-      else d
-    }
-    (widened, aligned)
-  }
+  /** `ks` as a local frame of `t`'s key columns (a WAL delete part). */
+  private def keyFrame(t: Overlay, ks: Iterable[Seq[String]]): DataFrame =
+    spark.createDataFrame(ks.map(Row.fromSeq).toSeq.asJava,
+      StructType(t.keyCols.map(StructField(_, StringType))))
+
+  // ==================================================== transactions =====
 
   /** Optimistic explicit transaction (§2.9 `transaction.go`): `f` runs
-    * against a PRIVATE store seeded from the current snapshot; its writes
-    * become visible in ONE atomic swap at commit, and only if no other
-    * writer committed meanwhile (first-committer-wins). An exception in
-    * `f` rolls back by simply discarding the private store.
+    * against a PRIVATE store seeded as an overlay on the same bases; its
+    * writes become visible in ONE atomic swap at commit, and only if no
+    * other writer committed meanwhile (first-committer-wins). The commit
+    * logs the transaction's net delta as one upsert/delete delta commit
+    * (a table the transaction folded logs a rewrite). An exception in `f`
+    * rolls back by simply discarding the private store.
     */
   def transaction[T](f: GraphStore => T): T = {
-    // version and frame read together: a swap bumps the counter before
-    // it installs the frame
-    val (baseVersion, base) = synchronized((versionCounter, current))
-    val tx = new GraphStore(base, registerGlobal = false)
+    // version and tables read together: a commit bumps the counter
+    // before it installs the tables
+    val (baseVersion, seed, seedGraph) = synchronized((versionCounter, tables, current))
+    val tx = new GraphStore(seedGraph, registerGlobal = false)
+    tx.tables = seed
     GraphStore.inTx.set(tx)
     val out =
       try f(tx) // throw → nothing swapped (rollback)
@@ -519,20 +413,42 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     synchronized {
       require(versionCounter == baseVersion,
         "transaction conflict: the store changed underneath; rolled back")
-      // the committed frames were built by the PRIVATE store's bucket
-      // committer — this store's bucket vectors no longer describe them
-      nodeSide.invalidate()
-      edgeSide.invalidate()
-      current = tx.snapshot
-      versionCounter += 1
-      // a committed transaction's net effect isn't tracked statement-wise
-      // (the private store has no WAL) → log it as one rewrite commit
-      wal.foreach(_.commitDelta(versionCounter,
-        Map("nodes_rewrite" -> tx.snapshot.nodes,
-          "edges_rewrite" -> tx.snapshot.edges)))
+      val end = tx.tables
+      val parts =
+        netDelta(seed.nodes, end.nodes, "nodes", rewrite = true) ++
+          netDelta(seed.edges, end.edges, "edges", rewrite = true) ++
+          netDelta(seed.nodeEmb, end.nodeEmb, "node_embeddings", rewrite = false) ++
+          netDelta(seed.relEmb, end.relEmb, "rel_embeddings", rewrite = false)
+      if (parts.nonEmpty || (end ne seed)) commit(end, parts)
     }
     out
   }
+
+  /** WAL parts taking table `a` to `b`: on one base, the changed delta
+    * rows and the keys that left; across a fold, a `_rewrite` (or, for an
+    * embedding table, the keys that left plus every row).
+    */
+  private def netDelta(a: Overlay, b: Overlay, name: String,
+      rewrite: Boolean): Map[String, DataFrame] =
+    if (a eq b) Map.empty
+    else if (a.base eq b.base) {
+      val ups = b.rows.filter { case (k, r) => !a.rows.get(k).contains(r) }
+      // keys the transaction removed: hidden now, and not already hidden
+      // (or never there) at the start
+      val dels = (a.rows.keySet ++ b.shadow).filter(k =>
+        !b.rows.contains(k) && !(a.shadow(k) && !a.rows.contains(k)))
+      (if (ups.nonEmpty) Map(s"${name}_upserts" -> b.local(ups.values))
+      else Map.empty[String, DataFrame]) ++
+        (if (dels.nonEmpty) Map(s"${name}_deletes" -> keyFrame(b, dels)) else Map.empty)
+    } else if (rewrite) Map(s"${name}_rewrite" -> b.frame)
+    else {
+      val keys = a.keyCols.map(col)
+      Map(s"${name}_deletes" -> a.frame.select(keys: _*)
+          .join(b.frame.select(keys: _*), a.keyCols, "left_anti"),
+        s"${name}_upserts" -> b.frame)
+    }
+
+  // ===================================================== node writes =====
 
   /** Enforce catalog unique constraints against rows about to be added
     * (`pkg/storage/constraint_validation.go` analog): no duplicate values
@@ -542,7 +458,7 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * unchanged constrained property would always refuse (round-11 ADVICE:
     * recordConsent re-recording consent under a Consent constraint).
     */
-  private def enforceUnique(g: PropertyGraph, newNodes: DataFrame,
+  private def enforceUnique(nodes: DataFrame, newNodes: DataFrame,
       replacedIds: Option[DataFrame] = None): Unit =
     catalog.uniqueConstraints.foreach { c =>
       val hoisted = Set("id", "key", "name", "acctbal", "mktsegment")
@@ -563,7 +479,7 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
       val dupWithin = fresh.groupBy("v").count().filter(col("count") > 1).limit(1).count()
       require(dupWithin == 0,
         s"unique constraint ${c.name} (${c.label}.${c.properties.mkString(",")}) violated within created nodes")
-      val labeled = g.nodes.filter(array_contains(col("labels"), c.label))
+      val labeled = nodes.filter(array_contains(col("labels"), c.label))
       val existing = replacedIds.fold(labeled)(ids =>
         labeled.join(ids.select("id"), Seq("id"), "left_anti"))
       val clash = fresh.join(existing.select(valueOf(existing).as("v")), Seq("v"), "left_semi")
@@ -574,104 +490,67 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
 
   /** CREATE nodes (duplicate-id rows rejected — unique-id constraint,
     * `pkg/storage/constraint_validation.go` analog). The duplicate check
-    * joins only the buckets the new ids hash into, and the insert routes
-    * each new row to its bucket — untouched buckets stay materialized.
+    * reads the delta, then one point probe on the base.
     */
   def createNodes(newNodes: DataFrame): QueryStats = synchronized {
-    val g = current
-    // pin the rows once: the frame may carry nondeterministic exprs
-    // (generated ids) and is read by the check, the router, and the WAL
-    val nn = newNodes.transform(GraphStore.pin)
-    val bs = nodeSide.ensure()
-    val touched = touchedBuckets(nn, bs.size)
-    // one pass computes both the batch size and the duplicate-id count
-    // (two separate jobs cost a driver round-trip each on every CREATE)
-    val existing = prunedUnion(bs, touched).select(col("id"), lit(true).as("_ex"))
-    val counts = nn.join(existing, Seq("id"), "left_outer")
-      .agg(count(lit(1)).as("n"), count(col("_ex")).as("conflicts"))
-      .collect().head
-    val n = counts.getLong(0)
-    val conflicts = counts.getLong(1)
-    require(conflicts == 0, s"unique-id constraint violated for $conflicts node(s)")
-    enforceUnique(g, nn)
-    checkNodeLimit(g, n)
-    val nnA = nodeSide.conformInsert(nn)
-    val nb = nodeSide.rewrite(touched)((b, df) =>
-      df.unionByName(nnA.filter(bucketColFor(bs.size)(col("id")) === b)))
-    swap(PropertyGraph(unionAll(nb), g.edges), Map("nodes_upserts" -> nnA))
-    emitNodes("node_created", nnA)
-    QueryStats(nodesCreated = n)
+    val t = tables
+    val a = put(t.nodes, newNodes)
+    require(a.present == 0, s"unique-id constraint violated for ${a.present} node(s)")
+    enforceUnique(t.nodes.frame, a.written)
+    checkLimit(t.nodes, a.n, maxNodes, "nodes")
+    commit(t.copy(nodes = a.next), Map("nodes_upserts" -> a.written))
+    emitNodes("node_created", a.written)
+    QueryStats(nodesCreated = a.n)
   }
 
   /** Keyed REPLACE-or-INSERT: each row lands under its id, replacing any
     * existing row wholesale — the reference's consent-ledger upsert shape
-    * (db_privacy.go:38-106 RecordConsent). ONE commit and one pruned
-    * bucket rewrite, where delete-then-create pays two probes and two
-    * commits for the same net effect.
+    * (db_privacy.go:38-106 RecordConsent). ONE probe and one commit, where
+    * delete-then-create pays two of each for the same net effect.
+    * Replaced rows don't clash with unique constraints and don't count
+    * toward max_nodes (a pure replace at the boundary must not refuse —
+    * round-11 ADVICE).
     */
   def upsertNodes(rows: DataFrame): QueryStats = synchronized {
-    val g = current
-    val nn = rows.transform(GraphStore.pin)
-    val bs = nodeSide.ensure()
-    val touched = touchedBuckets(nn, bs.size)
-    // One pruned probe sizes the batch AND splits it into replaces vs
-    // inserts: replaced rows are excluded from the unique-constraint
-    // clash and don't count toward max_nodes (a pure replace at the
-    // boundary must not refuse — round-11 ADVICE). With NO unique
-    // constraints and NO node limit the replace/insert split is consumed
-    // by nothing — only the batch size is needed, and that is one count
-    // of the tiny pinned batch instead of a store-sized probe join (the
-    // round-15 lifecycle profile measured one full-store scan per
-    // consent upsert spent entirely on this probe).
-    val n =
-      if (maxNodes == 0 && catalog.uniqueConstraints.isEmpty) nn.count()
-      else {
-        val existing = prunedUnion(bs, touched).select(col("id"), lit(true).as("_ex"))
-        val counts = nn.join(existing, Seq("id"), "left_outer")
-          .agg(count(lit(1)).as("n"), count(col("_ex")).as("present"))
-          .collect().head
-        enforceUnique(g, nn, replacedIds = Some(nn))
-        checkNodeLimit(g, counts.getLong(0) - counts.getLong(1))
-        counts.getLong(0)
-      }
-    val nnA = nodeSide.conformInsert(nn)
-    val keys = nnA.select("id")
-    val nb = nodeSide.rewrite(touched)((b, df) =>
-      df.join(keys, Seq("id"), "left_anti")
-        .unionByName(nnA.filter(bucketColFor(bs.size)(col("id")) === b)))
-    swap(PropertyGraph(unionAll(nb), g.edges), Map("nodes_upserts" -> nnA))
-    emitNodes("node_updated", nnA)
-    QueryStats(propertiesSet = n)
+    val t = tables
+    val a = put(t.nodes, rows)
+    enforceUnique(t.nodes.frame, a.written, replacedIds = Some(a.written))
+    checkLimit(t.nodes, a.n - a.present, maxNodes, "nodes")
+    commit(t.copy(nodes = a.next), Map("nodes_upserts" -> a.written))
+    emitNodes("node_updated", a.written)
+    QueryStats(propertiesSet = a.n)
   }
 
   /** MERGE nodes by id: insert the ones that do not exist (ON CREATE);
-    * existing ones are left untouched (no ON MATCH SET here). The
-    * existence anti-join reads only the candidate ids' buckets.
+    * existing ones are left untouched (no ON MATCH SET here).
     */
-  def mergeNodes(candidates: DataFrame): QueryStats = synchronized {
-    val g = current
-    val cand = candidates.transform(GraphStore.pin)
-    val bs = nodeSide.ensure()
-    val candBuckets = touchedBuckets(cand, bs.size)
-    val missing = cand.join(prunedUnion(bs, candBuckets).select("id"),
-      Seq("id"), "left_anti").transform(GraphStore.pin)
-    enforceUnique(g, missing)
-    // one pass: batch size + the touched-bucket set
-    val stat = missing.agg(count(lit(1)).as("n"),
-      collect_set(bucketColFor(bs.size)(col("id"))).as("bks")).collect().head
-    val n = stat.getLong(0)
-    checkNodeLimit(g, n)
-    val touched =
-      if (n == 0) Set.empty[Int]
-      else if (bs.size == 1) Set(0)
-      else stat.getSeq[Int](1).toSet
-    val missA = if (n > 0) nodeSide.conformInsert(missing) else missing
-    val nb = nodeSide.rewrite(touched)((b, df) =>
-      df.unionByName(missA.filter(bucketColFor(bs.size)(col("id")) === b)))
-    swap(PropertyGraph(unionAll(nb), g.edges),
-      if (n > 0) Map("nodes_upserts" -> missA) else Map.empty)
-    if (n > 0) emitNodes("node_created", missA)
-    QueryStats(nodesCreated = n)
+  def mergeNodes(candidates: DataFrame): QueryStats = mergeNodesReporting(candidates)._1
+
+  /** [[mergeNodes]], also returning the ids it created and the candidate
+    * ids that already existed — MERGE's ON CREATE and ON MATCH targets.
+    */
+  def mergeNodesReporting(candidates: DataFrame)
+      : (QueryStats, DataFrame, DataFrame) = synchronized {
+    val t = tables
+    val a = put(t.nodes, candidates, keepPresent = false)
+    enforceUnique(t.nodes.frame, a.written)
+    checkLimit(t.nodes, a.n, maxNodes, "nodes")
+    if (a.n > 0) {
+      commit(t.copy(nodes = a.next), Map("nodes_upserts" -> a.written))
+      emitNodes("node_created", a.written)
+    }
+    (QueryStats(nodesCreated = a.n), a.written.select("id"), a.matched)
+  }
+
+  /** The current rows of the node ids in `ids` — driver-resident (no job
+    * after a probe of the same ids) when they are few.
+    */
+  def nodesById(ids: DataFrame): DataFrame = {
+    val t = tables
+    Overlay.small(ids.select(col("id").cast("string"))) match {
+      case Some(rs) => t.nodes.local(t.nodes.lookup(rs.map(r => Seq(r.getString(0)))).values)
+      case None => t.nodes.frame.join(ids.select("id"), Seq("id"), "left_semi")
+    }
   }
 
   /** SET a property to per-row values: `updates` = (id, newval). Hoisted
@@ -681,39 +560,21 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * (a null newval removes the key, REMOVE semantics).
     */
   def setNodeProperties(updates: DataFrame, property: String): QueryStats = synchronized {
-    val g = current
-    val u = updates.select(col("id"), col("newval")).withColumn("_upd", lit(true))
-      .transform(GraphStore.pin)
-    val bs = nodeSide.ensure()
-    val touched = touchedBuckets(u, bs.size)
-    def transform(bucket: DataFrame): DataFrame = {
-      val joined = bucket.join(u, Seq("id"), "left_outer")
+    val t = tables
+    val a = rewrite(t.nodes, updates.select(col("id").cast("string").as("id"), col("newval"))) { df =>
       val withCol =
-        if (bucket.columns.contains(property)) {
-          val dtype = bucket.schema(property).dataType
-          joined.withColumn(property,
-            when(col("_upd"), col("newval").cast(dtype)).otherwise(col(property)))
-        } else joined
+        if (df.columns.contains(property))
+          df.withColumn(property, col("newval").cast(df.schema(property).dataType))
+        else df
+      val kept = map_filter(col("properties"), (k, _) => k =!= property)
       withCol.withColumn("properties",
-        when(col("_upd") && col("newval").isNotNull,
-          map_concat(
-            map_filter(col("properties"), (k, _) => k =!= property),
-            map(lit(property), col("newval").cast("string"))))
-          .when(col("_upd"), // null newval: drop the key
-            map_filter(col("properties"), (k, _) => k =!= property))
-          .otherwise(col("properties")))
-        .drop("newval", "_upd")
+        when(col("newval").isNotNull,
+          map_concat(kept, map(lit(property), col("newval").cast("string"))))
+          .otherwise(kept))
     }
-    val nb = nodeSide.rewrite(touched)((_, df) => transform(df))
-    // WAL delta + change feed = only the touched rows, read from only the
-    // touched buckets
-    val touchedRows = prunedUnion(nb, touched)
-      .join(u.select("id"), Seq("id"), "left_semi")
-    val n = u.count()
-    swap(PropertyGraph(unionAll(nb), g.edges),
-      Map("nodes_upserts" -> touchedRows))
-    emitNodes("node_updated", touchedRows)
-    QueryStats(propertiesSet = n)
+    commit(t.copy(nodes = a.next), Map("nodes_upserts" -> a.written))
+    emitNodes("node_updated", a.written)
+    QueryStats(propertiesSet = a.n)
   }
 
   /** SET a property to ONE value for matching node ids (same hoisted-or-
@@ -723,167 +584,129 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     setNodeProperties(ids.select(col("id"), value.as("newval")), property)
 
   /** DELETE nodes; `detach` also removes incident edges, otherwise edges
-    * referencing the victims must not exist (Neo4j semantics).
+    * referencing the victims must not exist (Neo4j semantics). For a few
+    * victims the node probe and the incident-edge probe run as one job.
     */
   def deleteNodes(ids: DataFrame, detach: Boolean): QueryStats = synchronized {
-    val g = current
-    val victims = ids.select("id").transform(GraphStore.pin)
-    val v = victims.withColumnRenamed("id", "vid")
-    val incidentCond = col("src") === col("vid") || col("dst") === col("vid")
-    val bs = nodeSide.ensure()
-    val touched = touchedBuckets(victims, bs.size)
-    val nDel = prunedUnion(bs, touched).join(victims, Seq("id"), "left_semi").count()
-    // nothing matches: no incident validation, no rewrite, no commit —
-    // the upsert pattern (DELETE id; CREATE id) pays one pruned read on
-    // the usually-absent id, never a full edge scan
-    if (nDel == 0) return QueryStats()
-    if (!detach) {
-      // edges carry their own `id` column — alias the victim ids
-      val incident = g.edges.join(v, incidentCond, "left_semi").count()
-      require(incident == 0, s"cannot delete nodes with $incident incident edge(s); use DETACH DELETE")
+    val t = tables
+    val victims = ids.select(col("id").cast("string").as("id"))
+    val few = Overlay.small(victims).map(_.map(_.getString(0)).distinct).flatMap { vs =>
+      val keys = vs.map(Seq(_))
+      val Seq(nodeHits, edgeHits) = Overlay.probeIds(Seq(
+        t.nodes.baseWhere(Overlay.keyIn(IdKey, keys.filterNot(t.nodes.inDelta))),
+        t.edges.baseWhere(col("src").isin(vs: _*) || col("dst").isin(vs: _*))))
+      edgeHits.map { eh =>
+        val v = vs.toSet
+        val (src, dst) = (t.edges.schema.fieldIndex("src"), t.edges.schema.fieldIndex("dst"))
+        val found = keys.filter(t.nodes.rows.contains) ++ nodeHits.get.map(Seq(_))
+        val incident = eh.map(Seq(_)) ++ t.edges.rows.collect {
+          case (k, r) if v(r.getString(src)) || v(r.getString(dst)) => k }
+        (new Applied(t.nodes.delete(keys, found.toSet), keyFrame(t.nodes, keys),
+            found.size, found.size),
+          new Applied(t.edges.delete(incident, _ => true), keyFrame(t.edges, incident),
+            incident.size, incident.size))
+      }
     }
-    val nb = nodeSide.rewrite(touched)((_, df) =>
-      df.join(victims, Seq("id"), "left_anti"))
-    // detach: the incident scan is one pass on src/dst (no id-pruning
-    // possible there), but the edge REWRITE keys on the found edge ids —
-    // so only the buckets holding deleted edges rewrite
-    val edgeVictims =
-      if (detach)
-        Some(g.edges.join(v, incidentCond, "left_semi").select("id")
-          .transform(GraphStore.pin))
-      else None
-    val eDel = edgeVictims.map(_.count()).getOrElse(0L)
-    val newEdgesFrame = edgeVictims match {
-      case Some(ev) if eDel > 0 =>
-        val ebs = edgeSide.ensure()
-        val tE = touchedBuckets(ev, ebs.size)
-        unionAll(edgeSide.rewrite(tE)((_, df) =>
-          df.join(ev, Seq("id"), "left_anti")))
-      case _ => g.edges
+    val (n, e) = few.getOrElse {
+      val n = drop(t.nodes, victims)
+      val v = n.written.withColumnRenamed("id", "vid")
+      val incident = GraphStore.pin(t.edges.frame
+        .join(v, col("src") === col("vid") || col("dst") === col("vid"), "left_semi")
+        .select("id"))
+      (n, drop(t.edges, incident))
     }
+    // nothing matches: no incident validation, no commit — the upsert
+    // pattern (DELETE id; CREATE id) pays one probe on the usually-absent id
+    if (n.n == 0) return QueryStats()
+    require(detach || e.n == 0,
+      s"cannot delete nodes with ${e.n} incident edge(s); use DETACH DELETE")
     // detach always logs the edge-delete part (possibly empty) — the WAL
     // commit shape a replayer and the byte-bound spec rely on
-    val parts = Map("nodes_deletes" -> victims) ++
-      edgeVictims.map(ev => Map("edges_deletes" -> ev)).getOrElse(Map.empty)
-    swap(PropertyGraph(unionAll(nb), newEdgesFrame), parts)
-    emitIds("node_deleted", victims)
-    parts.get("edges_deletes").foreach(emitIds("rel_deleted", _))
-    QueryStats(nodesDeleted = nDel, relationshipsDeleted = eDel)
+    val parts = Map("nodes_deletes" -> n.written) ++
+      (if (detach) Map("edges_deletes" -> e.written) else Map.empty)
+    commit(t.copy(nodes = n.next, edges = if (e.n > 0) e.next else t.edges), parts)
+    emitIds("node_deleted", n.written)
+    if (detach) emitIds("rel_deleted", e.written)
+    QueryStats(nodesDeleted = n.n, relationshipsDeleted = e.n)
   }
 
-  /** Copy-on-write keyed rewrite: apply `transform` to exactly the rows
-    * whose id appears in `ids` (it receives ONLY the matched rows and
-    * must return the same schema without changing ids), leaving every
-    * other row — and every untouched bucket's materialized blocks —
+  /** Keyed rewrite: apply `transform` to exactly the rows whose id
+    * appears in `ids` (it receives ONLY the matched rows and must return
+    * the same schema without changing ids), leaving every other row
     * untouched. The anonymize-class operation (db_admin.go:1390-1439)
     * rides this instead of a wholesale frame replace.
     */
   def updateNodes(ids: DataFrame)(transform: DataFrame => DataFrame): QueryStats = synchronized {
-    val g = current
-    val keys = ids.select("id").transform(GraphStore.pin)
-    val bs = nodeSide.ensure()
-    val touched = touchedBuckets(keys, bs.size)
-    val nb = nodeSide.rewrite(touched)((_, df) =>
-      transform(df.join(keys, Seq("id"), "left_semi"))
-        .unionByName(df.join(keys, Seq("id"), "left_anti")))
-    val touchedRows = prunedUnion(nb, touched).join(keys, Seq("id"), "left_semi")
-    val n = keys.count()
-    swap(PropertyGraph(unionAll(nb), g.edges),
-      Map("nodes_upserts" -> touchedRows))
-    emitNodes("node_updated", touchedRows)
-    QueryStats(propertiesSet = n)
+    val t = tables
+    val a = rewrite(t.nodes, ids.select(col("id").cast("string").as("id")))(transform)
+    commit(t.copy(nodes = a.next), Map("nodes_upserts" -> a.written))
+    emitNodes("node_updated", a.written)
+    QueryStats(propertiesSet = a.n)
   }
 
-  /** Delete relationships by edge id — the keyed copy-on-write path (the
-    * GraphQL deleteRelationship mutation and friends), rewriting only the
-    * buckets holding the victims.
+  /** Replace the node set wholesale (label rewrites — apoc.label.add/
+    * remove/replace mutate the labels array per node).
     */
+  def replaceNodes(nodes: DataFrame): Unit = replace(Some(nodes), None)
+
+  /** Replace the edge set wholesale (apoc.refactor rel rewrites: rename
+    * type, invert, redirect).
+    */
+  def replaceEdges(edges: DataFrame): Unit = replace(None, Some(edges))
+
+  /** Replace both sides in one version (refactor operations that rewrite
+    * nodes and their incident edges together).
+    */
+  def replaceGraph(g: PropertyGraph): Unit = replace(Some(g.nodes), Some(g.edges))
+
+  /** Each given frame becomes its table's new base (pinned as it is
+    * logged, in a store with a WAL).
+    */
+  private def replace(nodes: Option[DataFrame], edges: Option[DataFrame]): Unit = synchronized {
+    val t = tables
+    val (n, e) = (nodes.map(Overlay.pinned(_, IdKey)), edges.map(Overlay.pinned(_, IdKey)))
+    commit(t.copy(nodes = n.getOrElse(t.nodes), edges = e.getOrElse(t.edges)),
+      n.map("nodes_rewrite" -> _.frame).toMap ++ e.map("edges_rewrite" -> _.frame))
+  }
+
+  // ===================================================== edge writes =====
+
+  /** Delete relationships by edge id. */
   def deleteEdges(ids: DataFrame): QueryStats = synchronized {
-    val g = current
-    val victims = ids.select("id").transform(GraphStore.pin)
-    val ebs = edgeSide.ensure()
-    val touched = touchedBuckets(victims, ebs.size)
-    val eDel = prunedUnion(ebs, touched).join(victims, Seq("id"), "left_semi").count()
-    if (eDel == 0) return QueryStats() // nothing matched: no rewrite, no commit
-    val nb = edgeSide.rewrite(touched)((_, df) =>
-      df.join(victims, Seq("id"), "left_anti"))
-    swap(PropertyGraph(g.nodes, unionAll(nb)), Map("edges_deletes" -> victims))
-    emitIds("rel_deleted", victims)
-    QueryStats(relationshipsDeleted = eDel)
+    val t = tables
+    val a = drop(t.edges, ids.select(col("id").cast("string").as("id")))
+    if (a.n == 0) return QueryStats() // nothing matched: no commit
+    commit(t.copy(edges = a.next), Map("edges_deletes" -> a.written))
+    emitIds("rel_deleted", a.written)
+    QueryStats(relationshipsDeleted = a.n)
   }
 
   /** SET a relationship property for matching edge ids: `weight` is a
     * hoisted column, everything else lives in the string property map.
     */
   def setEdgeProperty(ids: DataFrame, key: String, value: Column): QueryStats = synchronized {
-    val g = current
-    val keys = ids.select(col("id")).transform(GraphStore.pin)
-    val marked = keys.withColumn("_hit", lit(true))
-    val ebs = edgeSide.ensure()
-    val touched = touchedBuckets(keys, ebs.size)
-    def transform(bucket: DataFrame): DataFrame = {
-      val joined = bucket.join(marked, Seq("id"), "left_outer")
-      if (key == "weight")
-        joined.withColumn("weight",
-          when(col("_hit"), value.cast("double")).otherwise(col("weight"))).drop("_hit")
-      else
-        joined.withColumn("properties",
-          when(col("_hit"),
-            map_concat(
-              map_filter(col("properties"), (k, _) => k =!= key),
-              map(lit(key), value.cast("string"))))
-            .otherwise(col("properties"))).drop("_hit")
+    val t = tables
+    val a = rewrite(t.edges, ids.select(col("id").cast("string").as("id"))) { df =>
+      if (key == "weight") df.withColumn("weight", value.cast("double"))
+      else df.withColumn("properties", map_concat(
+        map_filter(col("properties"), (k, _) => k =!= key),
+        map(lit(key), value.cast("string"))))
     }
-    val nb = edgeSide.rewrite(touched)((_, df) => transform(df))
-    val touchedRows = prunedUnion(nb, touched).join(keys, Seq("id"), "left_semi")
-    val n = keys.count()
-    swap(PropertyGraph(g.nodes, unionAll(nb)),
-      Map("edges_upserts" -> touchedRows))
-    emitEdges("rel_updated", touchedRows)
-    QueryStats(propertiesSet = n)
+    commit(t.copy(edges = a.next), Map("edges_upserts" -> a.written))
+    emitEdges("rel_updated", a.written)
+    QueryStats(propertiesSet = a.n)
   }
 
-  /** Replace the node set wholesale (label rewrites — apoc.label.add/
-    * remove/replace mutate the labels array per node).
+  /** CREATE relationships, keyed by edge id (a re-created id replaces its
+    * row, as WAL replay always did).
     */
-  def replaceNodes(nodes: DataFrame): Unit = synchronized {
-    // refactor ops rewrite the frame wholesale by design → rewrite commit
-    nodeSide.invalidate()
-    swap(PropertyGraph(nodes, current.edges), Map("nodes_rewrite" -> nodes))
-  }
-
-  /** Replace the edge set wholesale (apoc.refactor rel rewrites: rename
-    * type, invert, redirect).
-    */
-  def replaceEdges(edges: DataFrame): Unit = synchronized {
-    edgeSide.invalidate()
-    swap(PropertyGraph(current.nodes, edges), Map("edges_rewrite" -> edges))
-  }
-
-  /** Replace both sides in one version (refactor operations that rewrite
-    * nodes and their incident edges together).
-    */
-  def replaceGraph(g: PropertyGraph): Unit = synchronized {
-    nodeSide.invalidate()
-    edgeSide.invalidate()
-    swap(g, Map("nodes_rewrite" -> g.nodes, "edges_rewrite" -> g.edges))
-  }
-
-  /** CREATE relationships — routed to their id-hash buckets. */
   def createEdges(newEdges: DataFrame): QueryStats = synchronized {
-    val g = current
-    val ne = newEdges.transform(GraphStore.pin)
-    val n = ne.count()
-    checkEdgeLimit(g, n)
-    val ebs = edgeSide.ensure()
-    val touched = touchedBuckets(ne, ebs.size)
-    val neA = edgeSide.conformInsert(ne)
-    val nb = edgeSide.rewrite(touched)((b, df) =>
-      df.unionByName(neA.filter(bucketColFor(ebs.size)(col("id")) === b)))
-    swap(PropertyGraph(g.nodes, unionAll(nb)),
-      Map("edges_upserts" -> neA))
-    emitEdges("rel_created", neA)
-    QueryStats(relationshipsCreated = n)
+    val t = tables
+    val a = put(t.edges, newEdges)
+    checkLimit(t.edges, a.n, maxEdges, "edges")
+    commit(t.copy(edges = a.next), Map("edges_upserts" -> a.written))
+    emitEdges("rel_created", a.written)
+    QueryStats(relationshipsCreated = a.n)
   }
 
   // =====================================================================
@@ -891,58 +714,23 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
   // map[string][]float32 on nodes/edges, `pkg/storage/types.go:196`,
   // written via db.create.setNodeVectorProperty, `call.go:747-768`).
   // Columnar analog: one (entity_id, name, embedding) side table per
-  // entity kind — at 100 TB a bucketed-by-id parquet table, so the
-  // vector-index scan over ($label, $name) is one partition-pruned read,
-  // never a per-node map lookup.
+  // entity kind, keyed by (entity_id, name) — at 100 TB a bucketed-by-id
+  // parquet table, so the vector-index scan over ($label, $name) is one
+  // partition-pruned read, never a per-node map lookup.
   // =====================================================================
 
-  @volatile private var nodeEmbs: Option[DataFrame] = None
-  @volatile private var relEmbs: Option[DataFrame] = None
-  private var embWrites: Long = 0
+  def nodeEmbeddings: DataFrame = tables.nodeEmb.frame
+  def relEmbeddings: DataFrame = tables.relEmb.frame
 
-  private def emptyEmb: DataFrame = {
-    val spark = current.nodes.sparkSession
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("entity_id", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("name", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))))
-  }
+  /** Upsert a batch of (entity_id, name, embedding) rows by key. */
+  def setNodeVectorProperties(rows: DataFrame): Unit = putEmb(rows, node = true)
+  def setRelationshipVectorProperties(rows: DataFrame): Unit = putEmb(rows, node = false)
 
-  def nodeEmbeddings: DataFrame = nodeEmbs.getOrElse(emptyEmb)
-  def relEmbeddings: DataFrame = relEmbs.getOrElse(emptyEmb)
-
-  /** Upsert a batch of (entity_id, name, embedding) rows — anti-join out
-    * the overwritten keys, union the new rows. Lineage is bounded the
-    * same way [[swap]] bounds the snapshot's: every few writes the table
-    * is materialized (a Delta-style commit at scale).
-    */
-  private def upsertEmb(cur: DataFrame, rows: DataFrame): DataFrame = synchronized {
-    embWrites += 1
-    val next = cur.join(rows.select("entity_id", "name"), Seq("entity_id", "name"),
-        "left_anti")
-      .unionByName(rows)
-    if (embWrites % 6 == 0) next.transform(GraphStore.pin) else next
-  }
-
-  // read + upsert + assign under ONE monitor (upsertEmb's synchronized is
-  // reentrant here): two concurrent writers must not both read the same
-  // base frame and silently drop one upsert
-  def setNodeVectorProperties(rows: DataFrame): Unit = synchronized {
-    nodeEmbs = Some(upsertEmb(nodeEmbeddings, rows))
-    wal.foreach { w =>
-      versionCounter += 1
-      w.commitDelta(versionCounter, Map("node_embeddings_upserts" -> rows))
-    }
-  }
-  def setRelationshipVectorProperties(rows: DataFrame): Unit = synchronized {
-    relEmbs = Some(upsertEmb(relEmbeddings, rows))
-    wal.foreach { w =>
-      versionCounter += 1
-      w.commitDelta(versionCounter, Map("rel_embeddings_upserts" -> rows))
-    }
+  private def putEmb(rows: DataFrame, node: Boolean): Unit = synchronized {
+    val t = tables
+    val a = put(if (node) t.nodeEmb else t.relEmb, rows)
+    commit(if (node) t.copy(nodeEmb = a.next) else t.copy(relEmb = a.next),
+      Map(s"${if (node) "node" else "rel"}_embeddings_upserts" -> a.written))
   }
 
   /** Remove the named embeddings for the given entities (Qdrant
@@ -952,55 +740,33 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
   def deleteNodeEmbeddings(entityIds: Seq[String],
       name: String = "embedding"): Unit = synchronized {
     if (entityIds.isEmpty) return
-    val spark = current.nodes.sparkSession
-    import spark.implicits._
-    val keys = entityIds.map(id => (id, name)).toDF("entity_id", "name")
-      .transform(GraphStore.pin)
-    nodeEmbs = Some(nodeEmbeddings
-      .join(keys, Seq("entity_id", "name"), "left_anti").transform(GraphStore.pin))
-    wal.foreach { w =>
-      versionCounter += 1
-      w.commitDelta(versionCounter, Map("node_embeddings_deletes" -> keys))
-    }
+    val t = tables
+    val a = drop(t.nodeEmb, keyFrame(t.nodeEmb, entityIds.distinct.map(Seq(_, name))))
+    commit(t.copy(nodeEmb = a.next), Map("node_embeddings_deletes" -> a.written))
   }
 
   /** Drop EVERY node embedding under `name` — the reference's
     * ClearAllEmbeddings behind `/nornicdb/embed/clear`
     * (`pkg/server/server_nornicdb.go:158-177`): returns how many entities
-    * lost their vector so the caller can report it. Distributed: the keys
-    * frame is derived by filter, never an id collect.
+    * lost their vector so the caller can report it. The keys are derived
+    * by filter, never an id collect.
     */
   def clearNodeEmbeddings(name: String = "embedding"): Long = synchronized {
-    import org.apache.spark.sql.functions.col
-    val cur = nodeEmbeddings
-    val keys = cur.filter(col("name") === name)
-      .select("entity_id", "name").transform(GraphStore.pin)
-    val cleared = keys.select("entity_id").distinct().count()
+    val t = tables
+    val cleared = t.nodeEmb.count(name)
     if (cleared == 0) return 0L
-    nodeEmbs = Some(cur.filter(col("name") =!= name).transform(GraphStore.pin))
-    wal.foreach { w =>
-      versionCounter += 1
-      w.commitDelta(versionCounter, Map("node_embeddings_deletes" -> keys))
-    }
+    val a = drop(t.nodeEmb, t.nodeEmb.frame.filter(col("name") === name)
+      .select("entity_id", "name"))
+    commit(t.copy(nodeEmb = a.next), Map("node_embeddings_deletes" -> a.written))
     cleared
   }
 
   /** db.create.setNodeVectorProperty point write. */
-  def setNodeVectorProperty(nodeId: String, name: String, vec: Seq[Double]): Unit = {
-    val spark = current.nodes.sparkSession
-    import org.apache.spark.sql.functions.{array, lit}
-    setNodeVectorProperties(spark.range(1).select(
-      lit(nodeId).as("entity_id"), lit(name).as("name"),
-      array(vec.map(lit(_)): _*).as("embedding")))
-  }
+  def setNodeVectorProperty(nodeId: String, name: String, vec: Seq[Double]): Unit =
+    setNodeVectorProperties(GraphStore.embRows(spark, Row(nodeId, name, vec)))
 
-  def setRelationshipVectorProperty(relId: String, name: String, vec: Seq[Double]): Unit = {
-    val spark = current.nodes.sparkSession
-    import org.apache.spark.sql.functions.{array, lit}
-    setRelationshipVectorProperties(spark.range(1).select(
-      lit(relId).as("entity_id"), lit(name).as("name"),
-      array(vec.map(lit(_)): _*).as("embedding")))
-  }
+  def setRelationshipVectorProperty(relId: String, name: String, vec: Seq[Double]): Unit =
+    setRelationshipVectorProperties(GraphStore.embRows(spark, Row(relId, name, vec)))
 
   /** Durable snapshot write-back — the Spark-native form of the
     * reference's WAL + snapshot persistence (`pkg/storage/
@@ -1015,10 +781,10 @@ final class GraphStore(initial: PropertyGraph, registerGlobal: Boolean = true,
     * anywhere.
     */
   def persist(dir: String): Unit = {
-    val g = current
-    g.nodes.write.mode("overwrite").parquet(s"$dir/nodes")
-    g.edges.write.mode("overwrite").parquet(s"$dir/edges")
-    nodeEmbeddings.write.mode("overwrite").parquet(s"$dir/node_embeddings")
-    relEmbeddings.write.mode("overwrite").parquet(s"$dir/rel_embeddings")
+    val t = tables
+    t.nodes.frame.write.mode("overwrite").parquet(s"$dir/nodes")
+    t.edges.frame.write.mode("overwrite").parquet(s"$dir/edges")
+    t.nodeEmb.frame.write.mode("overwrite").parquet(s"$dir/node_embeddings")
+    t.relEmb.frame.write.mode("overwrite").parquet(s"$dir/rel_embeddings")
   }
 }

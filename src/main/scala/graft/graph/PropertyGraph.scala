@@ -63,8 +63,9 @@ object PropertyGraph {
     */
   def empty(spark: SparkSession): PropertyGraph = {
     import org.apache.spark.sql.types._
-    def df(schema: StructType): DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    // a local relation: a store over it counts its rows on the driver
+    def df(schema: StructType): DataFrame =
+      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
     PropertyGraph(
       df(StructType(Seq(
         StructField("id", StringType),

@@ -110,8 +110,8 @@ object Privacy {
   /** Pseudonymize every owned node: owner_id → [[anonymousId]], PII keys
     * stripped from the property map, the hoisted `name` column nulled for
     * the rewritten rows (db_admin.go:1390-1439). One ownership scan finds
-    * the victims; the rewrite itself is a keyed copy-on-write commit that
-    * touches only the buckets holding owned rows — never the whole frame.
+    * the victims; the rewrite itself is a keyed commit that moves only the
+    * owned rows — never the whole frame.
     */
   def anonymizeUserData(store: GraphStore, userId: String): Unit = {
     val anon = anonymousId(userId)

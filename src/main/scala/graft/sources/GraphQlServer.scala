@@ -956,7 +956,7 @@ final class GraphQlServer(store: GraphStore, port: Int = 0,
         if (exists) {
           val s = spark
           import s.implicits._
-          store.deleteEdges(Seq(id).toDF("id")) // keyed copy-on-write delete
+          store.deleteEdges(Seq(id).toDF("id")) // keyed delete
         }
         exists.toString
       case "executeCypher" => cypherField(sel, write = true)

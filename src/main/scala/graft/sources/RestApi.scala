@@ -205,11 +205,8 @@ final class RestApi(store: GraphStore,
     if (ex.getRequestURI.getPath != "/status") {
       err(ex, 404, s"not found: ${ex.getRequestURI.getPath}"); return
     }
-    val g = store.snapshot
-    val nodes = g.nodes.count()
-    val edges = g.edges.count()
-    val embedded = store.nodeEmbeddings.filter(col("name") === "embedding")
-      .select("entity_id").distinct().count()
+    val (nodes, edges, embedded) =
+      (store.nodeCount, store.edgeCount, store.embeddedNodeCount())
     respond(ex, 200,
       s"""{"status":"running","server":{"uptime_seconds":$uptimeSecs,"requests":${requests.get},"errors":${errors.get},"active":${active.get}},"database":{"nodes":$nodes,"edges":$edges,"databases":1},"embeddings":{"enabled":true,"status":"idle","processed":$embedded,"failed":0}}""")
   }
@@ -222,11 +219,8 @@ final class RestApi(store: GraphStore,
     if (ex.getRequestURI.getPath != "/metrics") {
       err(ex, 404, s"not found: ${ex.getRequestURI.getPath}"); return
     }
-    val g = store.snapshot
-    val nodes = g.nodes.count()
-    val edges = g.edges.count()
-    val embedded = store.nodeEmbeddings.filter(col("name") === "embedding")
-      .select("entity_id").distinct().count()
+    val (nodes, edges, embedded) =
+      (store.nodeCount, store.edgeCount, store.embeddedNodeCount())
     val sb = new StringBuilder
     def metric(name: String, help: String, typ: String, value: String): Unit = {
       sb.append(s"# HELP $name $help\n# TYPE $name $typ\n$name $value\n")
@@ -374,9 +368,7 @@ final class RestApi(store: GraphStore,
     respond(ex, 200,
       """{"enabled":true,"archiveThreshold":0.05,"interval":"1h0m0s","weights":{"recency":0.4,"frequency":0.3,"importance":0.3}}""")
 
-  private def embeddedCount(): Long =
-    store.nodeEmbeddings.filter(col("name") === "embedding")
-      .select("entity_id").distinct().count()
+  private def embeddedCount(): Long = store.embeddedNodeCount()
 
   /** Embed the nodes that lack a vector (regenerate=false) or every node
     * (regenerate=true) through the Embedder seam's distributed column
@@ -399,7 +391,7 @@ final class RestApi(store: GraphStore,
       .select(col("id").as("entity_id"), lit("embedding").as("name"),
         col("embedding"))
     if (!rows.isEmpty) store.setNodeVectorProperties(rows)
-    (g.nodes.count(), embeddedCount())
+    (store.nodeCount, embeddedCount())
   }
 
   /** `POST /nornicdb/embed/trigger[?regenerate=true]`
@@ -610,9 +602,7 @@ final class RestApi(store: GraphStore,
     * the reference's runtime columns).
     */
   private def adminStats(ex: HttpExchange): Unit = {
-    val g = store.snapshot
-    val nodes = g.nodes.count()
-    val edges = g.edges.count()
+    val (nodes, edges) = (store.nodeCount, store.edgeCount)
     val rt = Runtime.getRuntime
     val allocMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
     respond(ex, 200,

@@ -2,6 +2,7 @@ package graft
 
 import java.io.File
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cypher.CypherWrite
@@ -154,7 +155,7 @@ class DeltaLogSpec extends AnyFunSuite {
     assert(re.snapshot.nodes.count() == 3)
   }
 
-  test("a committed transaction lands as one rewrite commit; rollback writes nothing") {
+  test("a committed transaction lands as one upsert/delete delta commit; rollback writes nothing") {
     val dir = tmpDir()
     val s = walStore(dir, compactEvery = 50)
     CypherWrite.execute(s, "CREATE (a:Person {key: 1, name: 'A'})")
@@ -165,7 +166,9 @@ class DeltaLogSpec extends AnyFunSuite {
     }
     val afterCommit = new DeltaLog(spark, dir).commits()
     assert(afterCommit.length == before + 1)
-    assert(afterCommit.last.parts.toSet == Set("edges_rewrite", "nodes_rewrite"))
+    // the net delta: the two created rows, nothing else
+    assert(afterCommit.last.parts.toSet == Set("nodes_upserts"))
+    assert(parquetRows(s"$dir/delta/v${afterCommit.last.version}/nodes_upserts") == 2)
     intercept[RuntimeException] {
       s.transaction { tx =>
         CypherWrite.execute(tx, "CREATE (d:Person {key: 4, name: 'D'})")
@@ -175,5 +178,42 @@ class DeltaLogSpec extends AnyFunSuite {
     assert(new DeltaLog(spark, dir).commits().length == afterCommit.length)
     val re = GraphStore.loadWal(spark, dir, registerGlobal = false)
     assert(re.snapshot.nodes.count() == 3)
+  }
+
+  test("a transaction's net delta replays to the committed snapshot") {
+    val dir = tmpDir()
+    val s = walStore(dir, compactEvery = 50)
+    CypherWrite.execute(s,
+      """CREATE (a:Person {key: 1, name: 'A'}), (b:Person {key: 2, name: 'B'}),
+              (c:Person {key: 3, name: 'C'})""")
+    CypherWrite.execute(s,
+      "MATCH (a:Person {key: 1}) MATCH (b:Person {key: 2}) CREATE (a)-[:KNOWS]->(b)")
+    s.setNodeVectorProperty("Person:3", "embedding", Seq(1.0, 0.0))
+    s.transaction { tx =>
+      CypherWrite.execute(tx, "CREATE (d:Person {key: 4, name: 'D'})")
+      CypherWrite.execute(tx, "MATCH (p:Person {key: 1}) SET p.name = 'A2'")
+      CypherWrite.execute(tx, "MATCH (p:Person {key: 2}) DETACH DELETE p")
+      // created and deleted inside the transaction: no trace in the log
+      CypherWrite.execute(tx, "CREATE (e:Person {key: 5, name: 'E'})")
+      CypherWrite.execute(tx, "MATCH (p:Person {key: 5}) DELETE p")
+      tx.setNodeVectorProperty("Person:4", "embedding", Seq(0.0, 1.0))
+      tx.deleteNodeEmbeddings(Seq("Person:3"))
+    }
+    val last = new DeltaLog(spark, dir).commits().last
+    assert(last.parts.toSet == Set("nodes_upserts", "nodes_deletes", "edges_deletes",
+      "node_embeddings_upserts", "node_embeddings_deletes"))
+    assert(parquetRows(s"$dir/delta/v${last.version}/nodes_upserts") == 2) // D, A2
+    val re = GraphStore.loadWal(spark, dir, registerGlobal = false)
+    def rows(df: DataFrame, key: String): Set[String] =
+      df.orderBy(key).toJSON.collect().toSet
+    assert(rows(re.snapshot.nodes, "id") == rows(s.snapshot.nodes, "id"))
+    assert(rows(re.snapshot.edges, "id") == rows(s.snapshot.edges, "id"))
+    assert(rows(re.nodeEmbeddings, "entity_id") == rows(s.nodeEmbeddings, "entity_id"))
+    assert(s.snapshot.nodes.select("id").collect().map(_.getString(0)).toSet ==
+      Set("Person:1", "Person:3", "Person:4"))
+    assert(s.snapshot.edges.count() == 0)
+    assert(s.nodeEmbeddings.select("entity_id").collect().map(_.getString(0)).toSeq ==
+      Seq("Person:4"))
+    assert((s.nodeCount, s.edgeCount, s.embeddedNodeCount()) == (3L, 0L, 1L))
   }
 }

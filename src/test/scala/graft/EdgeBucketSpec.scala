@@ -5,23 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{GraphStore, PropertyGraph}
 
-/** The edge side of the bucketed copy-on-write committer — the edge twin
-  * of [[Round11BucketSpec]]. A keyed edge-mutation sequence on a
-  * WAL-backed store crosses the deferral bound, pushes buckets past the
-  * depth bound, rewrites edge buckets from a DETACH DELETE and drops back
-  * to unbucketed mode on a wholesale replace; the live snapshot and the
+/** The edge table's overlay across WAL checkpoints and its fold bound —
+  * the edge twin of [[Round11BucketSpec]]. A keyed edge-mutation sequence
+  * on a store over a multi-partition edge base checkpoints every fifth
+  * delta (each checkpoint folds and writes the pinned tables), sends a
+  * batch larger than the bound, deletes by edge id and by DETACH DELETE,
+  * replaces the table wholesale and writes on; the live snapshot and the
   * WAL replay must both equal a driver-side model of the same operations.
   */
 class EdgeBucketSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def walStore(dir: String): GraphStore = {
-    val g = GraphQueries.graph(spark, sf)
-    new GraphStore(PropertyGraph(
-      g.nodes.filter("false").localCheckpoint(true),
-      g.edges.filter("false").localCheckpoint(true)),
-      registerGlobal = false, walDir = Some(dir), compactEvery = 5)
-  }
 
   private def mkNodes(ids: Seq[Long]) =
     spark.createDataFrame(ids.map(Tuple1(_))).toDF("n")
@@ -46,38 +39,34 @@ class EdgeBucketSpec extends AnyFunSuite {
 
   private def ids(ns: Long*) = mkEdges(ns).select("id")
 
-  private def contents(s: GraphStore): Map[Long, (Double, Option[String])] =
+  private def contents(s: GraphStore): Seq[(Long, (Double, Option[String]))] =
     s.snapshot.edges
       .select(col("id"), col("weight"), element_at(col("properties"), "tag"))
       .collect().map(r => r.getString(0).stripPrefix("E:").toLong ->
-        (r.getDouble(1), Option(r.getString(2)))).toMap
+        (r.getDouble(1), Option(r.getString(2)))).toSeq
 
-  test("edge mutation sequence across the deferral and depth bounds matches " +
+  test("edge mutation sequence across checkpoints and the fold bound matches " +
       "a driver-side model, live and after WAL replay") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-edge-buckets").toString
-    val store = walStore(dir)
+    val dir = java.nio.file.Files.createTempDirectory("graft-edge-fold").toString
+    val base = mkEdges(1L to 400L).repartition(6).localCheckpoint(true)
+    assert(base.rdd.getNumPartitions == 6)
+    val store = new GraphStore(PropertyGraph(mkNodes(1L to 20L).localCheckpoint(true), base),
+      registerGlobal = false, walDir = Some(dir), compactEvery = 5)
     // model: edge id -> (weight, tag property)
     val model = scala.collection.mutable.Map.empty[Long, (Double, Option[String])]
+    (1L to 400L).foreach(i => model(i) = (1.0, None))
     def setWeight(i: Long, w: Double): Unit = model(i) = model(i).copy(_1 = w)
     def setTag(i: Long, t: String): Unit = model(i) = model(i).copy(_2 = Some(t))
 
-    store.createNodes(mkNodes(1L to 20L))
-
-    // 1-2: two batch creates (edge side deferred, whole-frame path)
-    store.createEdges(mkEdges(1L to 30L))
-    store.createEdges(mkEdges(31L to 60L))
-    (1L to 60L).foreach(i => model(i) = (1.0, None))
-
-    // 3: hoisted-column SET (3rd edge commit, still deferred)
+    // 1-2: creates, then a hoisted-column SET and a map-key SET
+    store.createEdges(mkEdges(401L to 430L))
+    (401L to 430L).foreach(i => model(i) = (1.0, None))
     store.setEdgeProperty(ids(5, 17, 45), "weight", lit(2.5))
     Seq(5L, 17L, 45L).foreach(setWeight(_, 2.5))
-
-    // 4: map-key SET crosses the bound -> lazy conversion, touched rewrite
     store.setEdgeProperty(ids(6, 50), "tag", lit("b"))
     Seq(6L, 50L).foreach(setTag(_, "b"))
 
-    // 5-14: alternating single-edge SETs stack layers on two buckets until
-    // each re-materializes at the depth bound
+    // 3-12: alternating single-edge SETs across two checkpoints
     (1 to 10).foreach { k =>
       val i = if (k % 2 == 0) 1L else 2L
       if (k % 3 == 0) {
@@ -89,37 +78,48 @@ class EdgeBucketSpec extends AnyFunSuite {
       }
     }
 
-    // 15: keyed delete of a slice (an absent id matches nothing)
-    val del = store.deleteEdges(ids(3, 31, 59, 999))
+    // 13: a batch larger than the fold bound
+    val batch = (100L to 399L).filter(_ % 10 != 0)
+    assert(batch.size > 256)
+    store.setEdgeProperty(mkEdges(batch).select("id"), "tag", lit("batch"))
+    batch.foreach(setTag(_, "batch"))
+
+    // 14: keyed delete of a slice (an absent id matches nothing)
+    val del = store.deleteEdges(ids(3, 31, 59, 9999))
     assert(del.relationshipsDeleted == 3)
     Seq(3L, 31L, 59L).foreach(model.remove)
 
-    // 16: DETACH DELETE rewrites the buckets holding the incident edges
+    // 15: DETACH DELETE removes the node's incident edges
     val incident = model.keys.filter(i => src(i) == 4 || dst(i) == 4).toSet
     assert(incident.nonEmpty)
     val det = store.deleteNodes(mkNodes(Seq(4L)).select("id"), detach = true)
     assert(det.relationshipsDeleted == incident.size)
     incident.foreach(model.remove)
 
-    // 17: wholesale replace drops the edge side back to unbucketed mode
+    // 16: wholesale replace
     store.replaceEdges(store.snapshot.edges
       .withColumn("weight", when(col("id") === "E:10", lit(99.0))
         .otherwise(col("weight"))))
     if (model.contains(10L)) setWeight(10L, 99.0)
 
-    // 18-19: more creates and a SET after the invalidate
-    val more = (61L to 70L).filterNot(i => src(i) == 4 || dst(i) == 4)
+    // 17-18: more creates and a SET after the replace
+    val more = (431L to 440L).filterNot(i => src(i) == 4 || dst(i) == 4)
     store.createEdges(mkEdges(more))
     more.foreach(i => model(i) = (1.0, None))
     store.setEdgeProperty(ids(more.head), "tag", lit("late"))
     setTag(more.head, "late")
 
+    val checkpoints = new java.io.File(s"$dir/checkpoint").list().length
+    assert(checkpoints >= 4, s"only $checkpoints checkpoint(s)")
+
     def check(s: GraphStore, what: String): Unit = {
       val got = contents(s)
-      assert(got.keySet == model.keySet,
-        s"$what: missing=${model.keySet -- got.keySet} extra=${got.keySet -- model.keySet}")
-      model.foreach { case (i, v) => assert(got(i) == v, s"$what: edge $i") }
-      assert(s.snapshot.edges.count() == model.size, s"$what: duplicate rows")
+      assert(got.length == got.map(_._1).distinct.length, s"$what: duplicate rows")
+      val m = got.toMap
+      assert(m.keySet == model.keySet,
+        s"$what: missing=${model.keySet -- m.keySet} extra=${m.keySet -- model.keySet}")
+      model.foreach { case (i, v) => assert(m(i) == v, s"$what: edge $i") }
+      assert(s.edgeCount == model.size, s"$what: count")
     }
     check(store, "live")
     check(GraphStore.loadWal(spark, dir, registerGlobal = false), "replayed")

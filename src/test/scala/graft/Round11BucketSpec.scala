@@ -1,28 +1,24 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.{GraphStore, PropertyGraph}
 
-/** Round 11: the lazy bucketization path. A long keyed-mutation sequence
-  * crosses the deferral bound (4th commit), the lazy conversion (buckets
-  * become filter views of a pinned parent), per-bucket depth-bounded
-  * materialization, and a wholesale invalidate+re-bucketize — and the
-  * store's final contents must equal a driver-side replay of the same
-  * operations. This is the regression net for the pure-set bookkeeping:
-  * a bucket wrongly left "pure" after a rewrite would double-count or
-  * drop rows here.
+/** The node table's overlay across its fold bound. A keyed mutation
+  * sequence on a WAL store over a multi-partition base folds the
+  * caller's frame on its first write, accumulates point writes until the
+  * delta passes the bound (the table folds), sends one batch larger than
+  * the bound (it folds at once), deletes, re-merges, replaces the table
+  * wholesale and writes on — and the store's contents must equal a
+  * driver-side replay of the same operations, live and after WAL replay.
+  * A key wrongly kept in (or dropped from) the delta would double-count
+  * or lose rows here.
   */
 class Round11BucketSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def freshStore(): GraphStore = {
-    val g = GraphQueries.graph(spark, sf)
-    new GraphStore(PropertyGraph(
-      g.nodes.filter("false").localCheckpoint(true),
-      g.edges.filter("false").localCheckpoint(true)), registerGlobal = false)
-  }
 
   private def mkNodes(ids: Seq[Long]) =
     spark.createDataFrame(ids.map(Tuple1(_))).toDF("n")
@@ -32,65 +28,75 @@ class Round11BucketSpec extends AnyFunSuite {
         lit(1.0).as("acctbal"), lit(null).cast("string").as("mktsegment"),
         expr("map()").cast("map<string,string>").as("properties"))
 
-  test("20-step mutation sequence across the deferral bound matches a " +
-      "driver-side replay") {
-    val store = freshStore()
-    // model: id -> (exists, nameOverride)
+  /** The frame is a pinned base with an empty delta. */
+  private def folded(df: DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[LogicalRDD]
+
+  test("node mutation sequence across the fold bound matches a driver-side " +
+      "replay, live and after WAL replay") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-node-fold").toString
+    val g = GraphQueries.graph(spark, sf)
+    val base = mkNodes(1L to 600L).repartition(8).localCheckpoint(true)
+    assert(base.rdd.getNumPartitions == 8)
+    // checkpoints out of reach: only the fold bound folds the delta
+    val store = new GraphStore(PropertyGraph(base, g.edges.filter("false")),
+      registerGlobal = false, walDir = Some(dir), compactEvery = 1000)
+    // model: id -> name
     val model = scala.collection.mutable.Map.empty[Long, String]
-
-    // 1-2: two batch creates (still deferred, whole-frame path)
-    store.createNodes(mkNodes(1L to 40L))
-    (1L to 40L).foreach(i => model(i) = s"name$i")
-    store.createNodes(mkNodes(41L to 80L))
-    (41L to 80L).foreach(i => model(i) = s"name$i")
-
-    // 3: per-row SET (3rd commit, still deferred)
-    store.setNodeProperty(
-      mkNodes(Seq(5L, 17L, 63L)).select("id"), "name", lit("touched-a"))
-    Seq(5L, 17L, 63L).foreach(i => model(i) = "touched-a")
-
-    // 4: crosses the bound -> lazy conversion, then touched-bucket rewrite
-    store.setNodeProperty(
-      mkNodes(Seq(6L, 70L)).select("id"), "name", lit("touched-b"))
-    Seq(6L, 70L).foreach(i => model(i) = "touched-b")
-
-    // 5-12: enough single-bucket SETs to push several buckets past
-    // maxDepth (forcing per-bucket materialization of view-lineage frames)
-    (1L to 8L).foreach { k =>
-      store.setNodeProperty(mkNodes(Seq(k)).select("id"), "name", lit(s"pass$k"))
-      model(k) = s"pass$k"
+    (1L to 600L).foreach(i => model(i) = s"name$i")
+    def set(ids: Seq[Long], name: String): Unit = {
+      store.setNodeProperty(mkNodes(ids).select("id"), "name", lit(name))
+      ids.foreach(model(_) = name)
     }
 
-    // 13: delete a slice (touches several buckets)
-    store.deleteNodes(mkNodes(Seq(2L, 41L, 79L)).select("id"), detach = true)
-    Seq(2L, 41L, 79L).foreach(model.remove)
+    // 1: the first write folds the caller's frame into the store's own base
+    store.createNodes(mkNodes(601L to 640L))
+    (601L to 640L).foreach(i => model(i) = s"name$i")
+    assert(folded(store.snapshot.nodes))
+    set(Seq(5L, 17L, 63L), "touched-a")
+    assert(!folded(store.snapshot.nodes))
 
-    // 14: merge re-inserts one deleted id and skips an existing one
-    store.mergeNodes(mkNodes(Seq(2L, 50L)))
+    // 2: point writes of 30 keys each until the delta passes the bound
+    val seen = (0 until 9).map { k =>
+      set((100L + k * 30) until (130L + k * 30), s"pass$k")
+      folded(store.snapshot.nodes)
+    }
+    assert(seen.count(identity) == 1, s"expected one fold at the bound: $seen")
+
+    // 3: one batch larger than the bound folds at once
+    set(1L to 300L filter (_ % 7 != 0), "big")
+    assert(folded(store.snapshot.nodes))
+
+    // 4: delete a slice (an absent id matches nothing), re-merge one
+    val del = store.deleteNodes(mkNodes(Seq(2L, 41L, 79L, 9999L)).select("id"), detach = true)
+    assert(del.nodesDeleted == 3)
+    Seq(2L, 41L, 79L).foreach(model.remove)
+    assert(store.mergeNodes(mkNodes(Seq(2L, 50L))).nodesCreated == 1)
     model(2L) = "name2"
 
-    // 15: wholesale replace (invalidate) then more keyed commits
+    // 5: wholesale replace, then more point writes
     store.replaceNodes(store.snapshot.nodes
       .withColumn("name", when(col("id") === "T:33", lit("replaced"))
         .otherwise(col("name"))))
     model(33L) = "replaced"
-    (1L to 4L).foreach { k =>
-      store.setNodeProperty(mkNodes(Seq(k + 20)).select("id"), "name",
-        lit(s"post$k"))
-      model(k + 20) = s"post$k"
-    }
+    assert(folded(store.snapshot.nodes))
+    (1L to 4L).foreach(k => set(Seq(k + 20), s"post$k"))
 
-    val got = store.snapshot.nodes.select("id", "name").collect()
-      .map(r => r.getString(0).stripPrefix("T:").toLong -> r.getString(1)).toMap
-    assert(got.keySet == model.keySet,
-      s"missing=${model.keySet -- got.keySet} extra=${got.keySet -- model.keySet}")
-    model.foreach { case (k, v) =>
-      assert(got(k) == v, s"id $k: expected $v got ${got(k)}")
+    def check(s: GraphStore, what: String): Unit = {
+      val got = s.snapshot.nodes.select("id", "name").collect()
+        .map(r => r.getString(0).stripPrefix("T:").toLong -> r.getString(1))
+      assert(got.length == got.map(_._1).distinct.length, s"$what: duplicate rows")
+      val m = got.toMap
+      assert(m.keySet == model.keySet,
+        s"$what: missing=${model.keySet -- m.keySet} extra=${m.keySet -- model.keySet}")
+      model.foreach { case (k, v) => assert(m(k) == v, s"$what: id $k: expected $v got ${m(k)}") }
+      // the properties map mirrors the hoisted column for SET rows
+      val props = s.snapshot.nodes.filter(col("id") === "T:6")
+        .select(element_at(col("properties"), "name")).head.getString(0)
+      assert(props == "big", what)
+      assert(s.nodeCount == model.size, s"$what: count")
     }
-    // the properties map mirrors the hoisted column for SET rows
-    // (id 6: step-4 "touched-b" then overwritten by the loop's "pass6")
-    val props = store.snapshot.nodes.filter(col("id") === "T:6")
-      .select(element_at(col("properties"), "name")).head.getString(0)
-    assert(props == "pass6")
+    check(store, "live")
+    check(GraphStore.loadWal(spark, dir, registerGlobal = false), "replayed")
   }
 }

@@ -28,7 +28,8 @@ class Round12CheckpointSpec extends AnyFunSuite {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     try {
       val store = freshStore()
-      // enough keyed commits to cross the bucketize bound and stack layers
+      // the first write folds the frame handed to the store: its pin goes
+      // through the reliable checkpoint dir
       CypherWrite.execute(store,
         "CREATE (:P {key: 1, name: 'a'}), (:P {key: 2, name: 'b'})")
       CypherWrite.execute(store, "CREATE (:P {key: 3, name: 'c'})")
