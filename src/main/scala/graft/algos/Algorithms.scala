@@ -3,6 +3,7 @@ package graft.algos
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
+import graft.search.VectorSearch.dotDec
 
 /** GDS-style graph algorithms (SURVEY §2.11: `apoc.algo.*`, `gds.*`,
   * `/root/reference/pkg/cypher/apoc_algorithms.go`, `apoc_community.go`,
@@ -396,10 +397,6 @@ object Algorithms {
     val rng = max("aa").over(w) - min("aa").over(w)
     val topoN = when(rng === 0.0, lit(1.0))
       .otherwise((col("aa") - min("aa").over(w)) / rng)
-    def dotDec(a: Column, b: Column): Column = aggregate(
-      zip_with(a, b, (x, y) => (x.cast("double") * y.cast("double")).cast("decimal(38,18)")),
-      lit(java.math.BigDecimal.ZERO).cast("decimal(38,18)"),
-      (acc, x) => (acc + x).cast("decimal(38,18)")).cast("double")
     base.withColumn("topology_score", topoN)
       .join(emb.select(col("vec_id").as("s1"), col("embedding").as("e1")), "s1")
       .join(emb.select(col("vec_id").as("s2"), col("embedding").as("e2")), "s2")

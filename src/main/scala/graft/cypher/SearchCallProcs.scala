@@ -26,8 +26,9 @@ import graft.algos.LinkPredict
   * All of these are registry glue over engines that already exist
   * ([[graft.search.VectorSearch]], [[graft.search.BM25]],
   * [[graft.search.Hybrid]], [[graft.algos.Algorithms.fastRP]],
-  * [[graft.algos.LinkPredict]]); nothing here collects or loops on the
-  * driver.
+  * [[graft.algos.LinkPredict]]). The one driver-side step is the hybrid
+  * fusion: it collects each leg's bounded top list (at most 2·k rows, or
+  * the MMR `candidateLimit`) and fuses them in memory.
   */
 object SearchCallProcs {
 
@@ -264,9 +265,7 @@ object SearchCallProcs {
         .withColumn("bm25_rank", row_number().over(
           Window.orderBy(col("score").desc, col("node").asc))))
     }
-    val hasEmb = searchStore.nodeEmbeddings
-      .filter(col("name") === "embedding").limit(1).count() > 0
-    if (!hasEmb)
+    if (searchStore.embeddedNodeCount() == 0)
       (textOnly, "fulltext", true,
         "embeddings unavailable, BM25-only search")
     else {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.search.VectorSearch.dotDec
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -288,15 +289,6 @@ object Dedup {
       .filter(col("dist") <= maxDist)
       .select("a", "b", "dist")
   }
-
-  /** Σ over zip_with products routed through DECIMAL(38,18) — exact, so the
-    * result hash-matches a SQL oracle bit-for-bit.
-    */
-  private def dotDec(x: Column, y: Column): Column =
-    aggregate(
-      zip_with(x, y, (p, q) => (p.cast("double") * q.cast("double")).cast("decimal(38,18)")),
-      lit(java.math.BigDecimal.ZERO).cast("decimal(38,18)"),
-      (acc, z) => (acc + z).cast("decimal(38,18)")).cast("double")
 
   /** Plain double fold — the cheap prefilter twin of [[dotDec]]. */
   private def dotFast(x: Column, y: Column): Column =

@@ -3,14 +3,16 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** BM25 fulltext scoring as a posting-list join+aggregate pipeline.
+/** BM25 fulltext scoring in one tokenize-and-count exchange.
   *
   * Re-expresses the reference's in-memory inverted index
   * (`/root/reference/pkg/search/fulltext_index.go:12-18,125-230`,
-  * k1=1.2 b=0.75) as DataFrames: postings (term, doc, tf), doc lengths and
-  * corpus stats are plain aggregations, so at 100 TB the index build is one
-  * shuffle and a query is a broadcast of the (tiny) per-term df table + one
-  * join on doc_id — no driver-side state.
+  * k1=1.2 b=0.75) as DataFrames. The text is tokenized once, and one
+  * `groupBy(doc_id)` gives each document its length `dl` and the count of
+  * each distinct query term. The corpus stats (`n_docs`, `sum_dl`, each
+  * term's `df`) are a global aggregate over that same per-document frame,
+  * so the plan shuffles the tokens once and reuses that exchange; the
+  * one-row stats are broadcast to the scoring side.
   *
   * All floating-point constants appear as identical literals on the DuckDB
   * oracle side, and per-term scores are summed through DECIMAL(28,12), so
@@ -30,23 +32,33 @@ object BM25 {
     */
   def search(docs: DataFrame, terms: Seq[String], k: Int,
       restrict: Option[DataFrame] = None): DataFrame = {
-    val toks = tokens(docs)
-    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
-    val tf = toks.filter(col("term").isin(terms: _*))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("term").agg(countDistinct("doc_id").as("df"))
+    val qs = terms.distinct.zipWithIndex
+    val tfs = qs.map { case (t, i) => count(when(col("term") === t, 1)).as(s"tf$i") }
+    val dfs = qs.map { case (_, i) => count(when(col(s"tf$i") > 0, 1)).as(s"df$i") }
+    // The not-null filter sits on the tokens, so the stats and the scoring
+    // branch both carry it. A doc_id filter placed later, by hand or
+    // inferred from the `restrict` semi-join, would reach only the scoring
+    // branch's scan; the two exchanges would differ and the tokens would
+    // shuffle twice.
+    val perDoc = tokens(docs).filter(col("doc_id").isNotNull)
+      .groupBy("doc_id").agg(count(lit(1)).as("dl"), tfs: _*)
+    val stats = perDoc.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl") +: dfs: _*)
 
-    val s: Column =
-      log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
-        col("tf") * 2.2 /
-        (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") /
-          (col("sum_dl").cast("double") / col("n_docs"))))
+    // one term's score; null where the document lacks the term, so the
+    // sum below adds exactly the (doc, term) pairs that occur. The sum is
+    // an aggregate: a chain of DECIMAL(28,12) `+` loses scale past 11 terms.
+    def s(i: Int): Column = {
+      val (tf, df) = (col(s"tf$i"), col(s"df$i"))
+      when(tf > 0,
+        log(lit(1.0) + (col("n_docs") - df + 0.5) / (df + 0.5)) *
+          tf * 2.2 /
+          (tf + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") /
+            (col("sum_dl").cast("double") / col("n_docs")))))
+    }
 
-    val scored = tf.join(broadcast(dfreq), "term")
-      .join(dl, "doc_id") // doc-keyed join, co-partitioned with tf
+    val scored = perDoc.filter(qs.map { case (_, i) => col(s"tf$i") > 0 }.foldLeft(lit(false))(_ || _))
       .crossJoin(broadcast(stats))
-      .withColumn("s", s)
+      .select(col("doc_id"), explode(array(qs.map { case (_, i) => s(i) }: _*)).as("s"))
       .groupBy("doc_id")
       .agg(sum(col("s").cast("decimal(28,12)")).cast("double").as("score"))
     restrict.fold(scored)(r => scored.join(r, Seq("doc_id"), "left_semi"))

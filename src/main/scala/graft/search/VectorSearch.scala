@@ -28,7 +28,7 @@ object VectorSearch {
       .limit(k)
 
   /** Σ over zip_with products routed through DECIMAL(38,18) — exact. */
-  private[search] def dotDec(a: Column, b: Column): Column =
+  private[graft] def dotDec(a: Column, b: Column): Column =
     aggregate(
       zip_with(a, b, (x, y) => (x.cast("double") * y.cast("double")).cast("decimal(38,18)")),
       lit(java.math.BigDecimal.ZERO).cast("decimal(38,18)"),
