@@ -1,26 +1,34 @@
 package graft.algos
 
-import org.apache.spark.HashPartitioner
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
+
+import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import graft.algos.GraphXAlgos.CsrAdj
 import graft.graph.{Expand, PropertyGraph}
 
-/** RDD-level BFS over the cached [[GraphXAlgos]] context.
+/** Level-synchronous BFS over the cached [[GraphXAlgos]] context: the one
+  * traversal substrate behind var-length expansion, shortest paths,
+  * allShortestPaths, allSimplePaths and point distance, for any number of
+  * start nodes.
   *
-  * The DataFrame level-synchronous BFS in [[graft.graph.Expand]] is the
-  * right 100 TB *shape* (no driver-side path state), but each level pays a
-  * Catalyst plan + eager checkpoint barrier, so constants dominate on
-  * bounded-hop point queries — the reference answers these from in-memory
-  * adjacency (`/root/reference/pkg/cypher/traversal.go:1435`). Here a level
-  * is a handful of RDD joins against the contracted, cached, pre-partitioned
-  * pair adjacency shared with SCC ([[GraphXAlgos.Ctx]]), which
-  * drops the per-level cost to shuffle-of-the-frontier only. Results are
-  * translated back to string ids distributively (explode + dictionary join)
-  * — no `collect()` anywhere, so the same code path survives a 1000-executor
-  * graph; only the per-level *constant* changed.
+  * The reference answers these from in-memory adjacency
+  * (`/root/reference/pkg/cypher/traversal.go:143,1435`); here a level is
+  * one lookup in the ctx's per-partition CSR ([[GraphXAlgos.Ctx.csrByDir]],
+  * GraphX's indexed edge partitions): the frontier is partitioned like the
+  * CSR, [[step]] `zipPartitions` the two and emits the neighbours, and one
+  * shuffle dedups the new level into place for the next. The frontier is
+  * keyed by (node, start), so one loop serves a single start and every
+  * node of the graph alike, with no driver-side path state. Results are
+  * translated back to string ids distributively (dictionary joins).
+  *
+  * Every call pins its decoded result (`localCheckpoint`) and unpersists
+  * its per-level RDDs before it returns.
   */
 object BfsRdd {
 
@@ -30,18 +38,81 @@ object BfsRdd {
     case Expand.Both => "both"
   }
 
-  /** Map a single-column (`id` STRING) DataFrame to dictionary vertex ids.
-    * Ids absent from the dictionary have no edges of the requested types and
-    * cannot expand — dropping them is semantics-preserving for depth ≥ 1.
+  /** Places a (node, start) key where the CSR's HashPartitioner places the
+    * node, so a level deduplicated by (node, start) is already partitioned
+    * for the next [[step]].
+    */
+  private final class ByNode(n: Int) extends Partitioner {
+    private val hp = new HashPartitioner(n)
+    def numPartitions: Int = n
+    def getPartition(key: Any): Int = hp.getPartition(key.asInstanceOf[(Long, Long)]._1)
+    override def equals(o: Any): Boolean = o match {
+      case b: ByNode => b.numPartitions == n
+      case _ => false
+    }
+    override def hashCode: Int = n
+  }
+
+  /** One BFS level, shared by every loop below: each frontier record
+    * (v, x), partitioned like `csr`, becomes (n, x) for every neighbour n of
+    * v. No shuffle; the adjacency is read in place.
+    */
+  private def step[X](csr: RDD[CsrAdj], frontier: RDD[(Long, X)]): RDD[(Long, X)] =
+    csr.zipPartitions(frontier) { (cit, fit) =>
+      val adj = cit.next()
+      fit.flatMap { case (v, x) => adj.emit(v, x) }
+    }
+
+  /** The RDDs one call persists; [[pin]] releases them once the result
+    * is realized.
+    */
+  private final class Held {
+    private val rdds = ArrayBuffer.empty[RDD[_]]
+    def apply[T](r: RDD[T]): RDD[T] = {
+      rdds += r
+      r.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    def release(): Unit = rdds.foreach(_.unpersist(false))
+    def pin(df: DataFrame): DataFrame = {
+      val p = df.localCheckpoint(true)
+      release()
+      p
+    }
+  }
+
+  /** Dictionary ids of a single-column (`id` STRING) DataFrame. Ids absent
+    * from the dictionary have no edges of the requested types and cannot
+    * expand — dropping them is semantics-preserving for depth ≥ 1.
     */
   private def vids(df: DataFrame, c: GraphXAlgos.Ctx): RDD[Long] =
-    df.rdd.map(r => (r.getString(0), ())).distinct()
-      .join(c.dict).map { case (_, (_, vid)) => vid }
+    df.rdd.map(r => (r.getString(0), ())).join(c.dict, c.dict.partitioner.get)
+      .map { case (_, (_, vid)) => vid }
 
-  /** All shortest paths from every start to every target: the engine behind
-    * `shortestPath` / `allShortestPaths` (semantics identical to
-    * [[graft.graph.Expand.allShortestPathsMultiDf]] — per (start, end) pair
-    * the first reaching level wins, paths may pass through other targets).
+  /** The depth-0 level: one (start, start) key per distinct start. */
+  private def seeds[X: ClassTag](df: DataFrame, c: GraphXAlgos.Ctx, byNode: ByNode,
+      x: Long => X): RDD[((Long, Long), X)] =
+    vids(df, c).map(s => ((s, s), x(s))).reduceByKey(byNode, (a, _) => a)
+
+  /** Decode (start idx, end idx, depth) rows to (start_id, end_id, `depthCol`). */
+  private def pairsToDf(sp: org.apache.spark.sql.SparkSession, c: GraphXAlgos.Ctx,
+      levels: Seq[RDD[(Long, Long, Int)]], depthCol: String): DataFrame = {
+    val rows: RDD[Row] =
+      (if (levels.isEmpty) sp.sparkContext.emptyRDD[(Long, Long, Int)]
+       else sp.sparkContext.union(levels))
+        .map { case (s, v, d) => (s, (v, d)) }
+        .join(c.rev)
+        .map { case (_, ((v, d), sId)) => (v, (sId, d)) }
+        .join(c.rev)
+        .map { case (_, ((sId, d), vId)) => Row(sId, vId, d) }
+    sp.createDataFrame(rows, StructType(Seq(
+      StructField("start_id", StringType),
+      StructField("end_id", StringType),
+      StructField(depthCol, IntegerType, nullable = false))))
+  }
+
+  /** All shortest paths from every start to every target: the engine
+    * behind `shortestPath` / `allShortestPaths`. Per (start, end) pair the
+    * first reaching level wins, paths may pass through other targets.
     * With `stopAtFirstHit` the loop stops at the first level that reaches
     * any target (the single-pair `allShortestPaths` contract).
     * Returns (start_id, end_id, path ARRAY<STRING>, length INT).
@@ -54,84 +125,51 @@ object BfsRdd {
       maxHops: Int,
       direction: Expand.Direction,
       stopAtFirstHit: Boolean): DataFrame = {
-    val sp = g.nodes.sparkSession
-    val sc = sp.sparkContext
+    val sc = g.nodes.sparkSession.sparkContext
     val c = GraphXAlgos.ctxFor(g, relTypes)
-    val adj = c.pairsByDir(dirKey(direction))
-    val part = adj.partitioner.getOrElse(new HashPartitioner(adj.getNumPartitions))
+    val csr = c.csrByDir(dirKey(direction))
+    val byNode = new ByNode(csr.getNumPartitions)
+    val held = new Held
+    // laid out like the levels, so a level meets its targets partition-wise
+    val targets = held(vids(targetIds, c).map((_, ()))
+      .reduceByKey(new HashPartitioner(csr.getNumPartitions), (a, _) => a))
 
-    val seeds = vids(startIds, c)
-    // Target sets in these queries are endpoint patterns — usually a
-    // handful of nodes. Small sets are broadcast (per-level hit detection
-    // becomes a filter fused into the level's one counting job); large sets
-    // fall back to a distributed semi-join per level.
-    val targetVids = vids(targetIds, c)
-    val smallTargets: Option[Set[Long]] = {
-      val probe = targetVids.take(1025)
-      if (probe.length <= 1024) Some(probe.toSet) else None
-    }
-    val targets = smallTargets match {
-      case Some(_) => null
-      case None => targetVids.map((_, ()))
-        .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    }
-
-    // frontier value = all shortest paths reaching (start, v), stored
-    // reversed (head = v) so extension is O(1) prepend
-    var frontier: RDD[((Long, Long), List[List[Long]])] =
-      seeds.map(s => ((s, s), List(List(s)))).persist(StorageLevel.MEMORY_AND_DISK)
-    var visited: RDD[((Long, Long), Unit)] =
-      frontier.mapValues(_ => ()).persist(StorageLevel.MEMORY_AND_DISK)
+    // value = all shortest paths reaching (v, start), each stored reversed
+    // (head = v) so extension is an O(1) prepend
+    var frontier = held(seeds(startIds, c, byNode, s => List(List(s))))
+    var seen = Vector[RDD[((Long, Long), List[List[Long]])]](frontier)
     var hits = Vector.empty[RDD[(List[Long], Int)]]
     var depth = 0
-    var done = frontier.isEmpty()
+    var done = false
     while (depth < maxHops && !done) {
       depth += 1
       val d = depth
-      val fresh = frontier
-        .map { case ((s, v), paths) => (v, (s, paths)) }
-        .partitionBy(part)
-        .join(adj) // (v, ((s, paths), dst)) — narrow on the cached adjacency
-        .map { case (_, ((s, paths), dst)) => ((s, dst), paths.map(dst :: _)) }
-        .reduceByKey(_ ::: _) // merge alternative predecessors (all distinct)
-        .subtractByKey(visited) // only pairs first reached at this level
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val (freshN, hitN) = smallTargets match {
-        case Some(ts) => // one job: materialize fresh + count hits
-          fresh.map { case ((_, v), ps) => (1L, if (ts(v)) ps.size.toLong else 0L) }
-            .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-        case None =>
-          val n = fresh.count()
-          val h = if (n == 0) 0L else fresh
-            .map { case ((s, v), ps) => (v, (s, ps)) }.partitionBy(part)
-            .join(targets).count()
-          (n, h)
-      }
+      val fresh = held(step(csr, frontier.map { case ((v, s), ps) => (v, (s, ps)) })
+        .map { case (n, (s, ps)) => ((n, s), ps.map(n :: _)) }
+        .reduceByKey(byNode, _ ::: _) // alternative predecessors, all distinct
+        .subtractByKey(sc.union(seen), byNode)) // first reached at this level
+      // one job: materialize the level and count the paths at targets
+      val (freshN, hitN) = fresh.zipPartitions(targets) { (lit, tit) =>
+        val ts = tit.map(_._1).toSet
+        var (n, h) = (0L, 0L)
+        lit.foreach { case ((v, _), ps) => n += 1; if (ts(v)) h += ps.size }
+        Iterator.single((n, h))
+      }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
       if (freshN == 0) done = true
       else {
         if (hitN > 0) {
-          val lvlHits = smallTargets match {
-            case Some(ts) => fresh // lazy filter over the persisted level
-              .flatMap { case ((_, v), ps) =>
-                if (ts(v)) ps.map(p => (p.reverse, d)) else Nil }
-            case None => fresh
-              .map { case ((s, v), ps) => (v, (s, ps)) }.partitionBy(part)
-              .join(targets)
-              .flatMap { case (_, ((_, ps), _)) => ps.map(p => (p.reverse, d)) }
+          hits :+= fresh.zipPartitions(targets) { (lit, tit) =>
+            val ts = tit.map(_._1).toSet
+            lit.flatMap { case ((v, _), ps) => if (ts(v)) ps.map(p => (p.reverse, d)) else Nil }
           }
-          hits :+= lvlHits
           if (stopAtFirstHit) done = true
         }
-        if (!done) {
-          visited = visited.union(fresh.mapValues(_ => ()))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          frontier = fresh
-        }
+        seen :+= fresh
+        frontier = fresh
       }
     }
-
-    pathsToDf(g, c,
-      if (hits.isEmpty) sc.emptyRDD[(List[Long], Int)] else sc.union(hits))
+    held.pin(pathsToDf(g, c,
+      if (hits.isEmpty) sc.emptyRDD[(List[Long], Int)] else sc.union(hits)))
   }
 
   /** Distributed back-translation of (forward-ordered vid path, length)
@@ -165,11 +203,11 @@ object BfsRdd {
     * — `apoc.algo.allSimplePaths`
     * (`/root/reference/pkg/cypher/apoc_algorithms.go:206`: DFS over
     * outgoing edges, path records on reaching `end`, never extending past
-    * it). Here the DFS stack is a distributed frontier of paths; the
-    * simple-path constraint is a per-extension `contains` check on the
-    * path being carried, so each level is one join against the cached pair
-    * adjacency. Combinatorial growth is bounded by `maxDepth` exactly as in
-    * the reference (default 10). Returns (start_id, end_id, path, length).
+    * it). Here the DFS stack is a distributed frontier of paths keyed by
+    * their last node; the simple-path constraint is a per-extension
+    * `contains` check on the path being carried. Combinatorial growth is
+    * bounded by `maxDepth` exactly as in the reference (default 10).
+    * Returns (start_id, end_id, path, length).
     */
   def allSimplePaths(
       g: PropertyGraph,
@@ -178,32 +216,29 @@ object BfsRdd {
       relTypes: Seq[String],
       maxDepth: Int,
       direction: Expand.Direction = Expand.Out): DataFrame = {
-    val sp = g.nodes.sparkSession
-    val sc = sp.sparkContext
+    val sc = g.nodes.sparkSession.sparkContext
     val c = GraphXAlgos.ctxFor(g, relTypes)
-    val adj = c.pairsByDir(dirKey(direction))
-    val part = adj.partitioner.getOrElse(new HashPartitioner(adj.getNumPartitions))
+    val csr = c.csrByDir(dirKey(direction))
+    val part = new HashPartitioner(csr.getNumPartitions)
+    val held = new Held
     val ids = c.dict.filter { case (s, _) => s == startId || s == endId }
       .collect().toMap
     (ids.get(startId), ids.get(endId)) match {
       case (Some(startVid), Some(endVid)) if startVid == endVid =>
         // reference records the trivial [start] path before expanding
-        pathsToDf(g, c, sc.parallelize(Seq((List(startVid), 0))))
+        held.pin(pathsToDf(g, c, sc.parallelize(Seq((List(startVid), 0)))))
       case (Some(startVid), Some(endVid)) =>
         // paths reversed (head = current); frontier excludes finished paths
-        var frontier: RDD[List[Long]] = sc.parallelize(Seq(List(startVid)))
+        var frontier: RDD[(Long, List[Long])] =
+          sc.parallelize(Seq((startVid, List(startVid)))).partitionBy(part)
         var results = Vector.empty[RDD[(List[Long], Int)]]
         var depth = 0
         var done = false
         while (depth < maxDepth && !done) {
           depth += 1
           val d = depth
-          val extended = frontier.map(p => (p.head, p))
-            .partitionBy(part)
-            .join(adj)
-            .flatMap { case (_, (p, dst)) =>
-              if (p.contains(dst)) None else Some(dst :: p) }
-            .persist(StorageLevel.MEMORY_AND_DISK)
+          val extended = held(step(csr, frontier)
+            .flatMap { case (n, p) => if (p.contains(n)) None else Some(n :: p) })
           val (total, hitN) = extended
             .map(p => (1L, if (p.head == endVid) 1L else 0L))
             .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
@@ -211,18 +246,19 @@ object BfsRdd {
             results :+= extended.filter(_.head == endVid).map(p => (p.reverse, d))
           if (total == hitN) done = true // every surviving path finished
           else frontier = extended.filter(_.head != endVid)
+            .map(p => (p.head, p)).partitionBy(part)
         }
-        pathsToDf(g, c,
-          if (results.isEmpty) sc.emptyRDD[(List[Long], Int)] else sc.union(results))
+        held.pin(pathsToDf(g, c,
+          if (results.isEmpty) sc.emptyRDD[(List[Long], Int)] else sc.union(results)))
       case _ => // endpoint has no edges of the requested types → no paths
-        pathsToDf(g, c, sc.emptyRDD[(List[Long], Int)])
+        held.pin(pathsToDf(g, c, sc.emptyRDD[(List[Long], Int)]))
     }
   }
 
-  /** Var-length expand `[*min..max]` — semantics identical to
-    * [[graft.graph.Expand.varLengthExpandDf]]: one (start_id, end_id, depth)
-    * row per depth-distinct pair, revisits allowed across depths (pairs,
-    * not paths), zero-hop self rows when minHops == 0.
+  /** Var-length expand `[*min..max]`: one (start_id, end_id, depth) row
+    * per depth-distinct pair, revisits allowed across depths (pairs, not
+    * paths), and for minHops == 0 the zero-hop self row of every input
+    * start, including starts with no edges of the requested types.
     */
   def varLengthPairs(
       g: PropertyGraph,
@@ -232,59 +268,35 @@ object BfsRdd {
       maxHops: Int,
       direction: Expand.Direction): DataFrame = {
     val sp = g.nodes.sparkSession
-    val sc = sp.sparkContext
     val c = GraphXAlgos.ctxFor(g, relTypes)
-    val adj = c.pairsByDir(dirKey(direction))
-    val part = adj.partitioner.getOrElse(new HashPartitioner(adj.getNumPartitions))
+    val csr = c.csrByDir(dirKey(direction))
+    val byNode = new ByNode(csr.getNumPartitions)
+    val held = new Held
 
-    var frontier: RDD[(Long, Long)] = vids(startIds, c).map(s => (s, s))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var results = Vector.empty[RDD[((Long, Long), Int)]]
+    var frontier = held(seeds(startIds, c, byNode, _ => ()))
+    var results = Vector.empty[RDD[(Long, Long, Int)]]
     var depth = 0
-    var done = frontier.isEmpty()
+    var done = false
     while (depth < maxHops && !done) {
       depth += 1
       val d = depth
-      val next = frontier
-        .map { case (s, v) => (v, s) }
-        .partitionBy(part)
-        .join(adj)
-        .map { case (_, (s, dst)) => ((s, dst), ()) }
-        .reduceByKey((a, _) => a) // per-depth pair dedup
-        .map { case (k, _) => k }
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val next = held(step(csr, frontier.map { case ((v, s), _) => (v, s) })
+        .map { case (n, s) => ((n, s), ()) }
+        .reduceByKey(byNode, (a, _) => a)) // per-depth pair dedup
       if (next.count() == 0) done = true
       else {
-        if (d >= minHops) results :+= next.map(k => (k, d))
+        if (d >= minHops) results :+= next.map { case ((v, s), _) => (s, v, d) }
         frontier = next
       }
     }
-
-    val deep: RDD[Row] =
-      (if (results.isEmpty) sc.emptyRDD[((Long, Long), Int)] else sc.union(results))
-        .map { case ((s, v), d) => (s, (v, d)) }
-        .join(c.rev)
-        .map { case (_, ((v, d), sId)) => (v, (sId, d)) }
-        .join(c.rev)
-        .map { case (_, ((sId, d), vId)) => Row(sId, vId, d) }
-    val schema = StructType(Seq(
-      StructField("start_id", StringType),
-      StructField("end_id", StringType),
-      StructField("depth", IntegerType, nullable = false)))
-    val deepDf = sp.createDataFrame(deep, schema)
-    if (minHops == 0)
-      startIds.select(col("id").as("start_id"), col("id").as("end_id"),
-          lit(0).as("depth"))
-        .unionByName(deepDf)
-    else deepDf
+    val deep = pairsToDf(sp, c, results, "depth")
+    held.pin(
+      if (minHops == 0)
+        startIds.select(col("id").as("start_id"), col("id").as("end_id"),
+          lit(0).as("depth")).unionByName(deep)
+      else deep)
   }
 
-  /** BFS shortest-path LENGTHS from every start to every reachable node
-    * (semantics identical to [[graft.graph.Expand.shortestPathsDf]]: one
-    * (start_id, end_id, length) row per first-reached pair, plus the
-    * depth-0 self rows for every input start — including starts with no
-    * edges of the requested types).
-    */
   /** Point-to-point hop distance with EARLY TERMINATION — the
     * `apoc.paths.distance` engine (`apoc/paths/paths.go:359`): BFS stops
     * at the first level that reaches the target instead of exhausting
@@ -302,29 +314,23 @@ object BfsRdd {
     // types (it would be absent from the GraphX dictionary below)
     if (srcId == dstId) return 0
     val c = GraphXAlgos.ctxFor(g, relTypes)
-    val adj = c.pairsByDir(dirKey(direction))
-    val part = adj.partitioner.getOrElse(new HashPartitioner(adj.getNumPartitions))
+    val csr = c.csrByDir(dirKey(direction))
+    val part = new HashPartitioner(csr.getNumPartitions)
     val ids = c.dict.filter { case (s, _) => s == srcId || s == dstId }
       .collect().toMap
     (ids.get(srcId), ids.get(dstId)) match {
       case (Some(a), Some(b)) if a == b => 0
       case (Some(srcVid), Some(dstVid)) =>
-        val persisted = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-        def done(r: Int): Int = { persisted.foreach(_.unpersist(false)); r }
-        var frontier: RDD[(Long, Unit)] = adj.sparkContext
-          .parallelize(Seq((srcVid, ()))).partitionBy(part)
-        var visited = frontier
+        val held = new Held
+        def done(r: Int): Int = { held.release(); r }
+        var frontier = held(csr.sparkContext.parallelize(Seq((srcVid, ()))).partitionBy(part))
+        var seen = Vector(frontier)
         var depth = 0
         while (depth < maxHops) {
           depth += 1
-          val fresh = frontier
-            .join(adj)
-            .map { case (_, (_, dst)) => (dst, ()) }
-            .reduceByKey((x, _) => x)
-            .subtractByKey(visited)
-            .partitionBy(part)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          persisted += fresh
+          val fresh = held(step(csr, frontier)
+            .reduceByKey(part, (x, _) => x)
+            .subtractByKey(csr.sparkContext.union(seen), part))
           // one action answers both "hit target?" and "frontier empty?"
           val (n, hit) = fresh.keys
             .aggregate((0L, false))(
@@ -332,8 +338,7 @@ object BfsRdd {
               (x, y) => (x._1 + y._1, x._2 || y._2))
           if (hit) return done(depth)
           if (n == 0) return done(-1)
-          visited = visited.union(fresh).persist(StorageLevel.MEMORY_AND_DISK)
-          persisted += visited
+          seen :+= fresh
           frontier = fresh
         }
         done(-1)
@@ -341,6 +346,11 @@ object BfsRdd {
     }
   }
 
+  /** BFS shortest-path LENGTHS from every start to every reachable node:
+    * one (start_id, end_id, length) row per first-reached pair, plus the
+    * depth-0 self row of every distinct input start — including starts
+    * with no edges of the requested types.
+    */
   def shortestPathLengths(
       g: PropertyGraph,
       startIds: DataFrame,
@@ -350,49 +360,30 @@ object BfsRdd {
     val sp = g.nodes.sparkSession
     val sc = sp.sparkContext
     val c = GraphXAlgos.ctxFor(g, relTypes)
-    val adj = c.pairsByDir(dirKey(direction))
-    val part = adj.partitioner.getOrElse(new HashPartitioner(adj.getNumPartitions))
+    val csr = c.csrByDir(dirKey(direction))
+    val byNode = new ByNode(csr.getNumPartitions)
+    val held = new Held
 
-    var frontier: RDD[((Long, Long), Unit)] = vids(startIds, c)
-      .map(s => ((s, s), ())).persist(StorageLevel.MEMORY_AND_DISK)
-    var visited = frontier
-    var results = Vector.empty[RDD[((Long, Long), Int)]]
+    var frontier = held(seeds(startIds, c, byNode, _ => ()))
+    var seen = Vector(frontier)
     var depth = 0
-    var done = frontier.isEmpty()
+    var done = false
     while (depth < maxHops && !done) {
       depth += 1
-      val d = depth
-      val fresh = frontier
-        .map { case ((s, v), _) => (v, s) }
-        .partitionBy(part)
-        .join(adj)
-        .map { case (_, (s, dst)) => ((s, dst), ()) }
-        .reduceByKey((a, _) => a) // distinct pairs
-        .subtractByKey(visited)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val fresh = held(step(csr, frontier.map { case ((v, s), _) => (v, s) })
+        .map { case (n, s) => ((n, s), ()) }
+        .reduceByKey(byNode, (a, _) => a) // distinct pairs
+        .subtractByKey(sc.union(seen), byNode))
       if (fresh.count() == 0) done = true
       else {
-        results :+= fresh.map { case (k, _) => (k, d) }
-        visited = visited.union(fresh).persist(StorageLevel.MEMORY_AND_DISK)
+        seen :+= fresh
         frontier = fresh
       }
     }
-
-    val deep: RDD[Row] =
-      (if (results.isEmpty) sc.emptyRDD[((Long, Long), Int)] else sc.union(results))
-        .map { case ((s, v), d) => (s, (v, d)) }
-        .join(c.rev)
-        .map { case (_, ((v, d), sId)) => (v, (sId, d)) }
-        .join(c.rev)
-        .map { case (_, ((sId, d), vId)) => Row(sId, vId, d) }
-    val schema = StructType(Seq(
-      StructField("start_id", StringType),
-      StructField("end_id", StringType),
-      StructField("length", IntegerType, nullable = false)))
-    // depth-0 self rows come straight from the input (dictionary membership
-    // not required: a start with no edges still reaches itself)
-    startIds.select(col("id").as("start_id"), col("id").as("end_id"),
-        lit(0).as("length"))
-      .unionByName(sp.createDataFrame(deep, schema))
+    val deep = pairsToDf(sp, c, seen.zipWithIndex.drop(1).map { case (lvl, d) =>
+      lvl.map { case ((v, s), _) => (s, v, d) } }, "length")
+    held.pin(startIds.select(col("id").as("start_id"), col("id").as("end_id"),
+        lit(0).as("length")).distinct()
+      .unionByName(deep))
   }
 }

@@ -29,72 +29,44 @@ import graft.graph.PropertyGraph
 object GraphXAlgos {
 
   /** Cached id dictionary + translated distinct directed (src, dst) idx
-    * pairs for one (graph, relType). The SCC loop and [[BfsRdd]] derive
-    * their adjacency views from it.
+    * pairs for one (graph, relType). The SCC loop and [[BfsRdd]] read
+    * them through one adjacency form, [[csrByDir]].
     */
   final case class Ctx(
       dict: RDD[(String, Long)], // string id → dense idx
       rev: RDD[(Long, String)], // dense idx → string id
       edges: RDD[(Long, Long)]) {
-    /** Distinct (from, to) pair adjacency per direction ("out"|"in"|"both"),
-      * hash-partitioned and cached — the BFS loops in [[BfsRdd]] join their
-      * frontier against this without reshuffling the adjacency per level.
-      */
-    private val pairCache = new ConcurrentHashMap[String, RDD[(Long, Long)]]()
-    def pairsByDir(dir: String): RDD[(Long, Long)] =
-      pairCache.computeIfAbsent(dir, { d =>
-        val base = edges
-        val oriented = d match {
-          case "out" => base // contracted: already distinct
-          case "in"  => base.map(_.swap)
-          case _     => base.union(base.map(_.swap)).distinct()
-        }
-        // scale-aware width, NOT the ctx edge width: the BFS loops shuffle
-        // a frontier against this every level, and shuffle-block count
-        // grows as maps × reducers — the round-13 LPA lesson applies to
-        // every per-round shuffle (round-13 verdict item #6). Fine target
-        // = the COARSE 128k/partition: a frontier pass does trivial work
-        // per row (launch-bound, like Pregel supersteps), so the vote
-        // pass's 32k target just multiplied task launches — measured
-        // +35-120% on the sf0.1 BFS rows before this was split out.
-        val part = new org.apache.spark.HashPartitioner(
-          GraphXAlgos.adjWidthFor(
-            (if (d == "both") 2L else 1L) * edges.count(),
-            edges.sparkContext.defaultParallelism,
-            fineTarget = GraphXAlgos.EdgesPerPartition))
-        val rdd = oriented.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.count()
-        rdd
-      })
-
     /** Per-partition CSR index of the pair adjacency per direction
-      * ("out"|"in"; one [[CsrAdj]] per partition, self-loops dropped) —
-      * the SCC trim rounds `zipPartitions` their per-round delta against
-      * this instead of RDD-joining the pair RDD: a co-partitioned RDD join
-      * is a COGROUP that re-materializes the full adjacency partition into
-      * a hash map EVERY round (~2.6 s/round fixed cost at sf1, the
-      * round-12 profile's dominant term), while the CSR lookup costs only
-      * the delta's edges. Same idea as GraphX's indexed vertex/edge
-      * partitions, kept to exactly the two primitives the loop needs.
+      * ("out"|"in"|"both"; one [[CsrAdj]] per partition, hash-partitioned
+      * by source idx), built once and cached. A loop round `zipPartitions`
+      * its frontier or delta against it — GraphX's indexed edge
+      * partitions, kept to the two primitives the loops need — instead of
+      * RDD-joining a pair RDD, which is a COGROUP that re-materializes the
+      * adjacency partition into a hash map EVERY round (~2.6 s/round fixed
+      * cost at sf1, the round-12 profile's dominant term).
+      *
+      * Self-loops are kept (a BFS reaches (v, v) at every depth through
+      * one; [[sccScale]] skips them itself), and "both" lists each
+      * neighbour once per vertex even when u→v and v→u both exist.
       */
     private val csrCache = new ConcurrentHashMap[String, RDD[CsrAdj]]()
     def csrByDir(dir: String): RDD[CsrAdj] =
       csrCache.computeIfAbsent(dir, { d =>
-        val base = edges
-          .filter { case (a, b) => a != b }
         val oriented = d match {
-          case "out" => base
-          case "in"  => base.map(_.swap)
+          case "out" => edges // contracted: already distinct
+          case "in"  => edges.map(_.swap)
+          case "both" => edges.union(edges.map(_.swap)) // CsrAdj.build dedups
         }
-        // scale-aware width (round-13 verdict item #6): the SCC trim/FW-BW
-        // rounds shuffle state at THIS width every round; the flat ctx
-        // edge width put sf10 at ~1000 partitions → ~1M shuffle blocks per
-        // round (maps × reducers), the exact term that dominated the
-        // round-12 sf3 LPA probe. Fine target = the coarse 128k/partition
-        // (delta passes are launch-bound — see pairsByDir); the 4·par cap
-        // and 4M bytes floor do the scale work.
+        // scale-aware width, NOT the ctx edge width: the loops shuffle a
+        // frontier or delta at THIS width every round, and shuffle-block
+        // count grows as maps × reducers (round-13 verdict item #6). Fine
+        // target = the COARSE 128k/partition: a frontier pass does trivial
+        // work per row (launch-bound), so the kernel's 32k target only
+        // multiplied task launches (+35-120% on the sf0.1 BFS rows); the
+        // 4·par cap and 4M bytes floor do the scale work.
         val part = new org.apache.spark.HashPartitioner(
-          GraphXAlgos.adjWidthFor(edges.count(),
+          GraphXAlgos.adjWidthFor(
+            (if (d == "both") 2L else 1L) * edges.count(),
             edges.sparkContext.defaultParallelism,
             fineTarget = GraphXAlgos.EdgesPerPartition))
         val rdd = oriented.partitionBy(part)
@@ -107,16 +79,21 @@ object GraphXAlgos {
   }
 
   /** Compact per-partition adjacency: sorted source array + offsets +
-    * neighbor array (CSR). Built once per ctx direction, looked up by
-    * binary search — primitive arrays, no per-edge boxing, stable under
-    * MEMORY_AND_DISK serialization.
+    * sorted, distinct neighbor runs (CSR). Built once per ctx direction,
+    * looked up by binary search — primitive arrays, no per-edge boxing,
+    * stable under MEMORY_AND_DISK serialization.
     */
   private[graft] final class CsrAdj(
       val keys: Array[Long], val offs: Array[Int], val nbrs: Array[Long])
       extends Serializable {
-    def degree(v: Long): Int = {
+    /** Neighbours of `v` other than `v` itself. */
+    def degreeNoLoop(v: Long): Int = {
       val i = java.util.Arrays.binarySearch(keys, v)
-      if (i >= 0) offs(i + 1) - offs(i) else 0
+      if (i < 0) 0
+      else {
+        val d = offs(i + 1) - offs(i)
+        if (java.util.Arrays.binarySearch(nbrs, offs(i), offs(i + 1), v) >= 0) d - 1 else d
+      }
     }
     /** Iterator of (neighbor, payload) for every neighbor of `v`. */
     def emit[T](v: Long, payload: T): Iterator[(Long, T)] = {
@@ -132,20 +109,22 @@ object GraphXAlgos {
   }
 
   private[graft] object CsrAdj {
+    /** CSR of the (src, dst) pairs; a repeated pair is kept once. */
     def build(it: Iterator[(Long, Long)]): CsrAdj = {
-      val arr = it.toArray.sortBy(_._1)
-      val nbrs = new Array[Long](arr.length)
+      val arr = it.toArray.sorted
+      val nbrsBuf = new scala.collection.mutable.ArrayBuffer[Long](arr.length)
       val keysBuf = new scala.collection.mutable.ArrayBuffer[Long]()
       val offsBuf = new scala.collection.mutable.ArrayBuffer[Int]()
       var i = 0
       while (i < arr.length) {
-        val k = arr(i)._1
-        if (keysBuf.isEmpty || keysBuf.last != k) { keysBuf += k; offsBuf += i }
-        nbrs(i) = arr(i)._2
+        val (k, n) = arr(i)
+        if (keysBuf.isEmpty || keysBuf.last != k) {
+          keysBuf += k; offsBuf += nbrsBuf.length; nbrsBuf += n
+        } else if (nbrsBuf.last != n) nbrsBuf += n
         i += 1
       }
-      offsBuf += arr.length
-      new CsrAdj(keysBuf.toArray, offsBuf.toArray, nbrs)
+      offsBuf += nbrsBuf.length
+      new CsrAdj(keysBuf.toArray, offsBuf.toArray, nbrsBuf.toArray)
     }
   }
 
@@ -354,14 +333,14 @@ object GraphXAlgos {
   private def toDf(g: PropertyGraph, rows: RDD[Row], schema: StructType): DataFrame =
     g.nodes.sparkSession.createDataFrame(rows, schema)
 
-  /** Pre-build the full-graph context and its out/both pair adjacency,
-    * which the BFS family reads, so benchmarks measure the traversals
-    * rather than the one-time dictionary build (the reference's benchmarks
-    * likewise run against loaded storage).
+  /** Pre-build the full-graph context and its out/both CSRs, which the
+    * BFS family reads, so benchmarks measure the traversals rather than
+    * the one-time dictionary build (the reference's benchmarks likewise
+    * run against loaded storage).
     */
   def warm(g: PropertyGraph): Unit = {
     val full = ctxFor(g, Nil)
-    full.pairsByDir("out"); full.pairsByDir("both")
+    full.csrByDir("out"); full.csrByDir("both")
   }
 
   /** The kernel input for `g`'s edges of `relType`: the full graph keys
@@ -560,9 +539,11 @@ object GraphXAlgos {
     */
   private[graft] def sccScale(g: PropertyGraph, c: Ctx): DataFrame = {
     val sc = c.edges.sparkContext
-    // per-partition CSR adjacency in both orientations, built once per ctx
-    // (self-loops dropped there — a self-loop never merges components and
-    // every vertex is in its own SCC anyway). NO id translation: the loop
+    // per-partition CSR adjacency in both orientations, built once per ctx.
+    // The CSR keeps self-loops for BFS; every read below skips them — a
+    // self-loop never merges components, and counted as a degree it would
+    // keep its vertex out of trim and in the color/sweep loop. NO id
+    // translation: the loop
     // iterates on the ctx's dense idx directly (trim singletons label
     // themselves; sweep SCCs get their min-string label at decode).
     val outCsr = c.csrByDir("out")
@@ -591,8 +572,8 @@ object GraphXAlgos {
           val o = if (oit.hasNext) oit.next() else null
           val in = if (iit.hasNext) iit.next() else null
           vit.map { case (v, _) =>
-            (v, ((if (o != null) o.degree(v) else 0).toLong,
-              (if (in != null) in.degree(v) else 0).toLong))
+            (v, ((if (o != null) o.degreeNoLoop(v) else 0).toLong,
+              (if (in != null) in.degreeNoLoop(v) else 0).toLong))
           }
       })
     var trimRound = 0
@@ -609,12 +590,12 @@ object GraphXAlgos {
         // the dying layer's incident edges; combiners absorb hubs.
         val dOut = outCsr.zipPartitions(dead, preservesPartitioning = false) {
           (cit, dit) =>
-            if (cit.hasNext) { val adj = cit.next(); dit.flatMap { case (u, _) => adj.emit(u, 1L) } }
+            if (cit.hasNext) { val adj = cit.next(); dit.flatMap { case (u, _) => adj.emit(u, 1L).filter(_._1 != u) } }
             else Iterator.empty
         }.reduceByKey(part, _ + _)
         val dIn = inCsr.zipPartitions(dead, preservesPartitioning = false) {
           (cit, dit) =>
-            if (cit.hasNext) { val adj = cit.next(); dit.flatMap { case (v, _) => adj.emit(v, 1L) } }
+            if (cit.hasNext) { val adj = cit.next(); dit.flatMap { case (v, _) => adj.emit(v, 1L).filter(_._1 != v) } }
             else Iterator.empty
         }.reduceByKey(part, _ + _)
         val next = pin(deg.zipPartitions(dead, dOut, dIn,
@@ -651,7 +632,7 @@ object GraphXAlgos {
     val liveKeys = deg.mapValues(_ => ())
     var edges = pin(outCsr.zipPartitions(liveKeys,
       preservesPartitioning = false) { (cit, lit) =>
-        if (cit.hasNext) { val adj = cit.next(); lit.flatMap { case (u, _) => adj.emit(u, u) } }
+        if (cit.hasNext) { val adj = cit.next(); lit.flatMap { case (u, _) => adj.emit(u, u).filter(_._1 != u) } }
         else Iterator.empty
       } // (dst, liveSrc) for every live-src edge
       .join(liveKeys, part) // keep only live dst

@@ -763,6 +763,13 @@ object Planner {
     expandHops(g, cur, v0, path.hops, params, path.pathVar)
   }
 
+  /** At most 128 anchors: a var-length pattern with a bound path variable
+    * enumerates full paths for these and per-depth rows for more. The
+    * `limit(129).count()` probe is one cheap job.
+    */
+  private def isPointQuery(anchorIds: DataFrame): Boolean =
+    anchorIds.limit(129).count() <= 128
+
   private def expandHops(g: PropertyGraph, start: Frame, startVar: String,
       hops: Seq[(RelPat, NodePat)], params: Map[String, Any],
       pathVar: Option[String] = None): Frame = {
@@ -787,7 +794,7 @@ object Planner {
           // sequence + rel types), so nodes(p)/relationships(p) resolve —
           // one row per simple path, the reference's per-seed enumeration.
           // Bulk anchors keep pair-level rows with the hop count only.
-          val fullPaths = keepLen && Expand.isPointQuery(anchorIds)
+          val fullPaths = keepLen && isPointQuery(anchorIds)
           val expanded =
             if (fullPaths) Expand.varLengthPathsExpand(g, anchorIds, rel.relType,
               minH, maxH, dir, rel.altTypes)

@@ -239,7 +239,10 @@ object SearchCallProcs {
         () => nodeTextDf(g, labels, SearchableProps), "id", "text", "NODE",
         labels, SearchableProps),
       query, 2 * k, "node", lbl.map(_.withColumnRenamed("_lid", "doc_id")))
-    def enrich(hits: DataFrame): DataFrame = {
+    /** `hits` with the columns of their node rows among `nodes`, in
+      * score order (at most `k` rows: one sorted partition).
+      */
+    def enrich(hits: DataFrame, nodes: DataFrame): DataFrame = {
       // hoisted key/name columns fold back into the property map (the
       // same overlay the GraphQL node renderer applies)
       val props = coalesce(col("properties"),
@@ -248,14 +251,14 @@ object SearchCallProcs {
         map_from_arrays(array(lit("key"), lit("name")),
           array(col("key").cast("string"), col("name").cast("string"))),
         (k, v) => v.isNotNull && !array_contains(map_keys(props), k))
-      hits.join(g.nodes.select(col("id").as("node"), col("labels"),
+      hits.join(nodes.select(col("id").as("node"), col("labels"),
           col("properties"), col("key"), col("name")),
           Seq("node"), "left_outer")
         .select(col("node"),
           coalesce(col("labels"), array().cast("array<string>")).as("labels"),
           map_concat(props, hoisted).as("properties"), col("score"),
           col("rrf_score"), col("vector_rank"), col("bm25_rank"))
-        .orderBy(col("score").desc, col("node").asc)
+        .coalesce(1).sortWithinPartitions(col("score").desc, col("node").asc)
     }
     def textOnly: DataFrame = {
       import org.apache.spark.sql.expressions.Window
@@ -263,7 +266,7 @@ object SearchCallProcs {
         .withColumn("rrf_score", lit(0.0))
         .withColumn("vector_rank", lit(0))
         .withColumn("bm25_rank", row_number().over(
-          Window.orderBy(col("score").desc, col("node").asc))))
+          Window.orderBy(col("score").desc, col("node").asc))), g.nodes)
     }
     if (searchStore.embeddedNodeCount() == 0)
       (textOnly, "fulltext", true,
@@ -283,7 +286,13 @@ object SearchCallProcs {
       if (fused.isEmpty)
         (textOnly, "fulltext", true,
           "RRF search returned no results, fell back to full-text")
-      else (enrich(fused), "rrf_hybrid", false, "")
+      else {
+        // the fused ids are on the driver: probe only their node rows,
+        // broadcast, instead of shuffling the whole node table
+        val ids = fused.select("node").collect().map(_.get(0))
+        (enrich(fused, broadcast(g.nodes.filter(col("id").isin(ids: _*)))),
+          "rrf_hybrid", false, "")
+      }
     }
   }
 

@@ -88,12 +88,10 @@ object Expand {
       "_rsrc", "_rdst")
   }
 
-  /** Var-length expand `[*min..max]` as an iterative frontier loop.
-    *
-    * Returns (start_id, end_id, depth) with per-depth dedup — the frontier
-    * dedup is what keeps the 100 TB case from exploding combinatorially
-    * (SURVEY §7 "hard parts"); each iteration is one self-contained shuffle
-    * and intermediate frontiers are cached + unpersisted.
+  /** Var-length expand `[*min..max]`: (start_id, end_id, depth) with
+    * per-depth dedup — the frontier dedup is what keeps the 100 TB case
+    * from exploding combinatorially (SURVEY §7 "hard parts"). Runs on
+    * [[graft.algos.BfsRdd.varLengthPairs]] for any number of starts.
     */
   def varLengthExpand(
       g: PropertyGraph,
@@ -103,57 +101,8 @@ object Expand {
       maxHops: Int,
       direction: Direction = Out,
       altRelTypes: Seq[String] = Seq.empty): DataFrame =
-    if (isPointQuery(startIds))
-      graft.algos.BfsRdd.varLengthPairs(g, startIds,
-        relType.toSeq ++ altRelTypes, minHops, maxHops, direction)
-    else
-      varLengthExpandDf(g, startIds, relType, minHops, maxHops, direction,
-        altRelTypes)
-
-  /** DataFrame-join reference implementation of [[varLengthExpand]] (kept
-    * for cross-checking and bulk start sets).
-    */
-  def varLengthExpandDf(
-      g: PropertyGraph,
-      startIds: DataFrame, // single column `id`
-      relType: Option[String],
-      minHops: Int,
-      maxHops: Int,
-      direction: Direction = Out,
-      altRelTypes: Seq[String] = Seq.empty): DataFrame = {
-
-    val es0 = g.edgesByTypes(relType.toSeq ++ altRelTypes)
-    val adj = (direction match {
-      case Out  => es0.select(col("src").as("_from"), col("dst").as("_to"))
-      case In   => es0.select(col("dst").as("_from"), col("src").as("_to"))
-      case Both => es0.select(col("src").as("_from"), col("dst").as("_to"))
-        .union(es0.select(col("dst").as("_from"), col("src").as("_to")))
-    }).cache()
-
-    var frontier = startIds.select(col("id").as("start_id"), col("id").as("end_id")).cache()
-    // [*0..n]: the zero-hop pair (start, start, 0) is part of the result
-    var results: Vector[DataFrame] =
-      if (minHops == 0)
-        Vector(startIds.select(col("id").as("start_id"), col("id").as("end_id"),
-          lit(0).as("depth")))
-      else Vector.empty
-    var depth = 0
-    while (depth < maxHops) {
-      depth += 1
-      val next = frontier
-        .join(adj, col("end_id") === col("_from"))
-        .select(col("start_id"), col("_to").as("end_id"))
-        .distinct() // per-depth dedup: pairs, not paths
-        .cache()
-      next.count() // materialize before unpersisting parent
-      frontier.unpersist()
-      frontier = next
-      if (depth >= minHops) results = results :+ next.withColumn("depth", lit(depth))
-    }
-    adj.unpersist()
-    if (results.isEmpty) startIds.sparkSession.emptyDataFrame
-    else results.reduce(_.unionByName(_))
-  }
+    graft.algos.BfsRdd.varLengthPairs(g, startIds,
+      relType.toSeq ++ altRelTypes, minHops, maxHops, direction)
 
   /** ALL shortest paths between two bound endpoints (SURVEY §2.3
     * allShortestPaths, reference `pkg/cypher/traversal.go:1435`):
@@ -178,68 +127,8 @@ object Expand {
       .select("path", "length")
   }
 
-  /** DataFrame-join reference implementation of [[allShortestPaths]] (kept
-    * for cross-checking; the production path runs on the cached RDD
-    * adjacency, [[graft.algos.BfsRdd]], whose per-level constant is ~10×
-    * smaller).
-    */
-  def allShortestPathsDf(
-      g: PropertyGraph,
-      srcId: String,
-      dstId: String,
-      relType: Option[String],
-      maxHops: Int,
-      direction: Direction = Out): DataFrame = {
-
-    val es0 = relType.map(g.edgesByType).getOrElse(g.edges)
-    val adj = (direction match {
-      case Out  => es0.select(col("src").as("_from"), col("dst").as("_to"))
-      case In   => es0.select(col("dst").as("_from"), col("src").as("_to"))
-      case Both => es0.select(col("src").as("_from"), col("dst").as("_to"))
-        .union(es0.select(col("dst").as("_from"), col("src").as("_to")))
-    }).distinct().cache()
-
-    var frontier = g.nodes.filter(col("id") === srcId)
-      .select(col("id").as("end_id"), array(col("id")).as("path")).cache()
-    var visited = frontier.select("end_id")
-    var found: Option[DataFrame] = None
-    var depth = 0
-    while (depth < maxHops && found.isEmpty) {
-      depth += 1
-      val next = frontier
-        .join(adj, col("end_id") === col("_from"))
-        .select(col("_to").as("end_id"), concat(col("path"), array(col("_to"))).as("path"))
-        .join(visited, Seq("end_id"), "left_anti") // only first-reached-here nodes
-        .distinct()
-        .cache()
-      val hits = next.filter(col("end_id") === dstId)
-      if (hits.limit(1).count() > 0) found = Some(hits)
-      else if (next.limit(1).count() == 0) { found = Some(next.limit(0)) } // disconnected
-      else {
-        visited = visited.union(next.select("end_id").distinct()).distinct()
-        frontier = next
-      }
-    }
-    adj.unpersist()
-    found.getOrElse(frontier.limit(0))
-      .select(col("path"), (size(col("path")) - 1).as("length"))
-  }
-
-  /** All shortest paths from EVERY start to EVERY target in one
-    * level-synchronous BFS (the distributed form of [[allShortestPaths]] —
-    * one frontier covers all pairs, so `MATCH p = shortestPath((a)-[*]->(b))`
-    * with multi-node endpoint patterns costs maxHops shuffles total, not
-    * per pair). Per (start, end) pair the first depth that reaches `end`
-    * wins; paths may pass THROUGH other targets. Returns
-    * (start_id, end_id, path ARRAY<STRING>, length INT).
-    */
-  /** Threshold routing bulk vs point BFS: below it the RDD loop over the
-    * cached ctx wins (per-level constant ~10× smaller); above it Tungsten
-    * codegen on the DataFrame loop wins (bulk shuffle throughput). The
-    * `limit(n+1).count()` probe costs one cheap job on the cached graph.
-    */
-  /** Path-carrying var-length expansion for POINT anchors (≤128 start
-    * ids): one row per simple path with the node-id sequence and the rel
+  /** Path-carrying var-length expansion for point anchors (the Planner
+    * takes it for at most 128 start ids): one row per simple path with the node-id sequence and the rel
     * types traversed, so `nodes(p)`/`relationships(p)` resolve. Bulk
     * anchors keep the pair-level expansion — carrying full paths across a
     * large frontier is the exponential blow-up the pair dedup exists to
@@ -264,8 +153,7 @@ object Expand {
         .union(es0.select(col("dst").as("_from"), col("src").as("_to"), col("rel_type").as("_rt")))
     }).cache()
 
-    // cache + unpersist-parent per level (the [[varLengthExpandDf]]
-    // pattern) instead of eager localCheckpoint: checkpointed blocks pin
+    // cache + unpersist-parent per level instead of eager localCheckpoint: checkpointed blocks pin
     // BlockManager memory for the whole session, while cache blocks are
     // freed here and the final union recomputes the (point-anchored,
     // small) levels from lineage at consume time
@@ -299,11 +187,14 @@ object Expand {
     else results.reduce(_.unionByName(_))
   }
 
-  private val PointBfsMaxStarts = 128L
-
-  private[graft] def isPointQuery(startIds: DataFrame): Boolean =
-    startIds.limit((PointBfsMaxStarts + 1).toInt).count() <= PointBfsMaxStarts
-
+  /** All shortest paths from EVERY start to EVERY target in one
+    * level-synchronous BFS (the distributed form of [[allShortestPaths]] —
+    * one frontier covers all pairs, so `MATCH p = shortestPath((a)-[*]->(b))`
+    * with multi-node endpoint patterns costs maxHops levels total, not
+    * per pair). Per (start, end) pair the first depth that reaches `end`
+    * wins; paths may pass THROUGH other targets. Returns
+    * (start_id, end_id, path ARRAY<STRING>, length INT).
+    */
   def allShortestPathsMulti(
       g: PropertyGraph,
       startIds: DataFrame, // single column `id`
@@ -312,64 +203,8 @@ object Expand {
       maxHops: Int,
       direction: Direction = Out,
       altRelTypes: Seq[String] = Seq.empty): DataFrame =
-    if (isPointQuery(startIds))
-      graft.algos.BfsRdd.allShortestPaths(g, startIds, targetIds,
-        relType.toSeq ++ altRelTypes, maxHops, direction, stopAtFirstHit = false)
-    else
-      allShortestPathsMultiDf(g, startIds, targetIds, relType, maxHops,
-        direction, altRelTypes)
-
-  /** DataFrame-join reference implementation of [[allShortestPathsMulti]]
-    * (kept for cross-checking).
-    */
-  def allShortestPathsMultiDf(
-      g: PropertyGraph,
-      startIds: DataFrame, // single column `id`
-      targetIds: DataFrame, // single column `id`
-      relType: Option[String],
-      maxHops: Int,
-      direction: Direction = Out,
-      altRelTypes: Seq[String] = Seq.empty): DataFrame = {
-
-    val es0 = g.edgesByTypes(relType.toSeq ++ altRelTypes)
-    val adj = (direction match {
-      case Out  => es0.select(col("src").as("_from"), col("dst").as("_to"))
-      case In   => es0.select(col("dst").as("_from"), col("src").as("_to"))
-      case Both => es0.select(col("src").as("_from"), col("dst").as("_to"))
-        .union(es0.select(col("dst").as("_from"), col("src").as("_to")))
-    }).distinct().cache()
-
-    val targets = targetIds.select(col("id").as("end_id")).distinct().cache()
-    var frontier = startIds.select(col("id").as("start_id"), col("id").as("end_id"),
-      array(col("id")).as("path")).localCheckpoint(true)
-    var visited = frontier.select("start_id", "end_id")
-    var results = Vector.empty[DataFrame]
-    var depth = 0
-    var done = false
-    while (depth < maxHops && !done) {
-      depth += 1
-      val next = frontier
-        .join(adj, col("end_id") === col("_from"))
-        .select(col("start_id"), col("_to").as("end_id"),
-          concat(col("path"), array(col("_to"))).as("path"))
-        .join(visited, Seq("start_id", "end_id"), "left_anti")
-        .distinct()
-        .localCheckpoint(true)
-      if (next.limit(1).count() == 0) done = true
-      else {
-        results :+= next.join(targets, Seq("end_id"), "left_semi")
-          .select(col("start_id"), col("end_id"), col("path"),
-            lit(depth).as("length"))
-        visited = visited.union(next.select("start_id", "end_id")).distinct()
-          .localCheckpoint(true)
-        frontier = next
-      }
-    }
-    adj.unpersist(); targets.unpersist()
-    if (results.isEmpty)
-      frontier.select(col("start_id"), col("end_id"), col("path"), lit(0).as("length")).limit(0)
-    else results.reduce(_.unionByName(_))
-  }
+    graft.algos.BfsRdd.allShortestPaths(g, startIds, targetIds,
+      relType.toSeq ++ altRelTypes, maxHops, direction, stopAtFirstHit = false)
 
   /** BFS shortest path length from every node in `srcIds` to every reachable
     * node, capped at `maxHops`. Returns (start_id, end_id, length) keeping
@@ -381,88 +216,6 @@ object Expand {
       relType: Option[String],
       maxHops: Int,
       direction: Direction = Out): DataFrame =
-    if (isPointQuery(srcIds))
-      graft.algos.BfsRdd.shortestPathLengths(g, srcIds, relType.toSeq, maxHops,
-        direction)
-    else
-      shortestPathsDf(g, srcIds, relType, maxHops, direction)
-
-  /** DataFrame-join reference implementation of [[shortestPaths]] (kept for
-    * cross-checking).
-    */
-  def shortestPathsDf(
-      g: PropertyGraph,
-      srcIds: DataFrame,
-      relType: Option[String],
-      maxHops: Int,
-      direction: Direction = Out): DataFrame = {
-
-    val es0 = relType.map(g.edgesByType).getOrElse(g.edges)
-    val adjPlan = direction match {
-      case Out  => es0.select(col("src").as("_from"), col("dst").as("_to"))
-      case In   => es0.select(col("dst").as("_from"), col("src").as("_to"))
-      case Both => es0.select(col("src").as("_from"), col("dst").as("_to"))
-        .union(es0.select(col("dst").as("_from"), col("src").as("_to")))
-    }
-
-    // Bounded-hop fast path: unroll the levels into ONE lazy DAG —
-    // union of per-depth distinct frontiers, min(depth) per pair — instead
-    // of the eager per-level cache/count barriers below. Catalyst's
-    // ReuseExchange dedupes the shared level-k subplan between the union
-    // branch and the level-k+1 join input, so each level is still computed
-    // once, but there is no driver round-trip between levels and AQE plans
-    // the whole traversal at once. Early termination doesn't matter at
-    // <=3 hops; the iterative loop below keeps it for deep traversals.
-    if (maxHops <= 3) {
-      var cur = srcIds.select(col("id").as("start_id"), col("id").as("end_id"))
-      var levels = List(cur.withColumn("length", lit(0)))
-      for (d <- 1 to maxHops) {
-        cur = cur.join(adjPlan, col("end_id") === col("_from"))
-          .select(col("start_id"), col("_to").as("end_id")).distinct()
-        levels ::= cur.withColumn("length", lit(d))
-      }
-      return levels.reduce(_.unionByName(_))
-        .groupBy("start_id", "end_id").agg(min("length").as("length"))
-    }
-
-    val adj = adjPlan.cache()
-
-    // visited: best-known (start,end,length); frontier: newly reached pairs
-    var visited = srcIds.select(col("id").as("start_id"), col("id").as("end_id"),
-      lit(0).as("length")).cache()
-    var frontier = visited
-    var depth = 0
-    var done = false
-    while (depth < maxHops && !done) {
-      depth += 1
-      val expanded = frontier
-        .join(adj, col("end_id") === col("_from"))
-        .select(col("start_id"), col("_to").as("end_id"))
-        .distinct()
-      val fresh = expanded
-        .join(visited.select("start_id", "end_id"), Seq("start_id", "end_id"), "left_anti")
-        .withColumn("length", lit(depth))
-        .cache()
-      val n = fresh.count()
-      if (n == 0) { done = true; fresh.unpersist() }
-      else {
-        val nv = visited.unionByName(fresh).cache()
-        nv.count()
-        visited.unpersist()
-        // the superseded round frontier too (round 1's frontier IS the
-        // initial visited, already released above): without this every
-        // round's fresh-pair cache outlived the loop — at 100 TB each
-        // round pins a frontier-sized frame for the session's lifetime
-        if (frontier ne visited) frontier.unpersist()
-        frontier = fresh
-        visited = nv
-      }
-    }
-    adj.unpersist()
-    // both loop exits (converged with n==0, and depth==maxHops with fresh
-    // rows) leave the last round's frontier cached — release it here; the
-    // returned `visited` is independently cached and materialized
-    if (frontier ne visited) frontier.unpersist()
-    visited
-  }
+    graft.algos.BfsRdd.shortestPathLengths(g, srcIds, relType.toSeq, maxHops,
+      direction)
 }

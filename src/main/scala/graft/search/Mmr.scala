@@ -40,11 +40,6 @@ object Mmr {
   private def cosine(a: Array[Double], b: Array[Double]): Double =
     decSum(a, b) / (math.sqrt(decSum(a, a)) * math.sqrt(decSum(b, b)))
 
-  /** Select `limit` diversified results from `candidates`
-    * (id: long, rel: double, embedding: array<float|double>), ranked by
-    * (rel desc, id asc) like the RRF stage emits them. λ ≥ 1 → no
-    * diversification (reference early-return).
-    */
   /** Hard cap on the MMR candidate set: the greedy selection is
     * inherently sequential, so candidates materialize on the driver —
     * callers must bound their RRF top-N to this (validated EARLY on the
@@ -52,6 +47,12 @@ object Mmr {
     */
   val MaxCandidates = 10000
 
+  /** Select `limit` diversified results from `candidates`
+    * (id, rel: double, embedding: array<float|double>), ranked by
+    * (rel desc, id asc) like the RRF stage emits them; the result's `id`
+    * keeps the candidates' id type (a long vector id or a string node id).
+    * λ ≥ 1 → no diversification (reference early-return).
+    */
   def select(candidates: DataFrame, limit: Int, lambda: Double,
       maxCandidates: Int = MaxCandidates): DataFrame = {
     val spark = candidates.sparkSession
@@ -63,7 +64,7 @@ object Mmr {
         .select("mmr_rank", "id", "rel")
 
     val rows = candidates
-      .select(col("id").cast("long"), col("rel").cast("double"),
+      .select(col("id"), col("rel").cast("double"),
         col("embedding").cast(ArrayType(DoubleType)))
       .orderBy(col("rel").desc, col("id").asc)
       .limit(maxCandidates + 1)
@@ -71,8 +72,8 @@ object Mmr {
     require(rows.length <= maxCandidates,
       s"MMR candidate set exceeds cap $maxCandidates — narrow the RRF top-N")
 
-    final case class Cand(id: Long, rel: Double, emb: Array[Double])
-    val cands = rows.map(r => Cand(r.getLong(0), r.getDouble(1),
+    final case class Cand(id: Any, rel: Double, emb: Array[Double])
+    val cands = rows.map(r => Cand(r.get(0), r.getDouble(1),
       Option(r.getSeq[Double](2)).map(_.toArray).orNull)).toBuffer
 
     val selected = scala.collection.mutable.ArrayBuffer.empty[Cand]
@@ -110,7 +111,7 @@ object Mmr {
     spark.createDataFrame(
       spark.sparkContext.parallelize(out.toSeq, 1),
       StructType(Seq(StructField("mmr_rank", IntegerType, false),
-        StructField("id", LongType, false),
+        StructField("id", candidates.schema("id").dataType, false),
         StructField("rel", DoubleType, false))))
   }
 

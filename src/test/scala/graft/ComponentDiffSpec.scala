@@ -236,14 +236,17 @@ class ComponentDiffSpec extends AnyFunSuite {
     // 14,000 ten-node rings (140,000 ring arcs) put the contracted edge
     // count past EdgesPerPartition, so the ctx and the CSR adjacency span
     // ≥ 2 partitions; every ring feeds a two-node DAG tail, and every
-    // even ring has one arc into the next ring (an SCC-DAG of depth 2)
+    // even ring has one arc into the next ring (an SCC-DAG of depth 2).
+    // Self-loops on every ring's node 0 and every tail end: the CSR keeps
+    // them for BFS, and SCC must read past them
     val rings = 14000
     val nodes = (0 until rings).flatMap { r =>
       (0 until 10).map(i => s"r$r.$i") ++ Seq(s"t$r.a", s"t$r.b")
     }
     val edges = (0 until rings).flatMap { r =>
       (0 until 10).map(i => (s"r$r.$i", s"r$r.${(i + 1) % 10}")) ++
-        Seq((s"r$r.3", s"t$r.a"), (s"t$r.a", s"t$r.b"), (s"r$r.7", s"t$r.b")) ++
+        Seq((s"r$r.3", s"t$r.a"), (s"t$r.a", s"t$r.b"), (s"r$r.7", s"t$r.b"),
+          (s"r$r.0", s"r$r.0"), (s"t$r.b", s"t$r.b")) ++
         (if (r % 2 == 0) Seq((s"r$r.5", s"r${r + 1}.2")) else Nil)
     }
     val g = graph(nodes, edges)

@@ -13,7 +13,7 @@ object ExplainCheck {
     println("== clusters BNLJ: " + "BroadcastNestedLoop".r.findAllIn(p2).size)
     println("== clusters cartesian: " + "CartesianProduct".r.findAllIn(p2).size)
     val g = GraphQueries.graph(spark, d)
-    val sp = graft.graph.Expand.shortestPathsDf(g, g.nodesByLabel("Customer").select("id"), None, 2)
+    val sp = TraversalReference.shortestPaths(g, g.nodesByLabel("Customer").select("id"), None, 2)
     val p3 = sp.queryExecution.executedPlan.toString
     println("== bfs BNLJ: " + "BroadcastNestedLoop".r.findAllIn(p3).size)
     println("== bfs exchanges: " + "Exchange hash".r.findAllIn(p3).size)

@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cypher.Cypher
-import graft.graph.PropertyGraph
+import graft.graph.{Expand, PropertyGraph}
 
-/** The CALL surface of the CSR kernel keeps nothing persisted but its
-  * result: while a call's result is held, the only RDD the call added is
-  * its pinned rows, so the CSR and the round state were released when the
-  * call returned. The fixture spans several kernel partitions.
+/** The CALL surface of the CSR kernel and the BFS traversals keep nothing
+  * persisted but their result: while a call's result is held, the only RDD
+  * the call added is its pinned rows, so the CSR (kernel) or the per-level
+  * frontiers (BFS, once the ctx CSR is built) were released when the call
+  * returned. The fixture spans several kernel partitions.
   */
 class KernelLeakSpec extends AnyFunSuite {
   import TestSpark._
@@ -70,6 +71,31 @@ class KernelLeakSpec extends AnyFunSuite {
       val before = settled()
       val (held, rows) = call(q, before)
       assert(rows == 30000L)
+      assert(held.size == 1, "persisted while the result is held: " +
+        held.map(i => spark.sparkContext.getPersistentRDDs(i).toDebugString))
+    }
+  }
+
+  /** `n` fixture ids `step` apart. */
+  private def ids(n: Int, step: Int = 97) = {
+    val sp = spark
+    import sp.implicits._
+    (0 until n).map(i => f"n${i * step}%06d").toDF("id")
+  }
+
+  for ((name, run) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "shortestPaths" -> (s => Expand.shortestPaths(g, s, None, 3)),
+      "varLengthExpand" -> (s => Expand.varLengthExpand(g, s, None, 1, 3)),
+      "allShortestPathsMulti" -> (s => Expand.allShortestPathsMulti(g, s, ids(20000, 1), None, 3,
+        Expand.Both)));
+      n <- Seq(5, 200)) {
+    test(s"$name from $n starts keeps only its pinned result persisted") {
+      val starts = ids(n)
+      run(starts).count() // builds the ctx and its CSR, which stay cached
+      val before = settled()
+      val res = run(starts)
+      val held = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      assert(res.count() > 0)
       assert(held.size == 1, "persisted while the result is held: " +
         held.map(i => spark.sparkContext.getPersistentRDDs(i).toDebugString))
     }

@@ -84,12 +84,11 @@ class Round14ScaleSpec extends AnyFunSuite {
     assert(GraphXAlgos.labelPropagation(g, 0).rdd.getNumPartitions == wVote)
     assert(GraphXAlgos.wcc(g).rdd.getNumPartitions == wVote)
     assert(GraphXAlgos.pageRank(g, 0).rdd.getNumPartitions == GraphXAlgos.adjWidthFor(e, par))
-    // SCC trim/coloring substrate
+    // ctx CSR: the SCC trim/coloring and BFS substrate (var-length
+    // expand, shortest paths, simple paths)
     assert(c.csrByDir("out").getNumPartitions == wOne)
     assert(c.csrByDir("in").getNumPartitions == wOne)
-    // BFS pair adjacency (var-length expand, shortest paths, simple paths)
-    assert(c.pairsByDir("both").getNumPartitions == wBoth)
-    assert(c.pairsByDir("out").getNumPartitions == wOne)
+    assert(c.csrByDir("both").getNumPartitions == wBoth)
   }
 
   test("chunked vote-tally flush is exact (forced tiny cap, weighted + unweighted)") {

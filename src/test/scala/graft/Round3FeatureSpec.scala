@@ -82,8 +82,12 @@ class Round3FeatureSpec extends AnyFunSuite {
     assert(r == Seq(Seq(1L, "A"), Seq(2L, "o"), Seq(3L, "r")))
   }
 
-  // --- RDD BFS (BfsRdd over the cached GraphX ctx) vs the DataFrame
-  // reference implementations: identical row sets on the TPC-H graph ---
+  // --- RDD BFS (BfsRdd over the ctx CSR) vs the DataFrame reference
+  // (TraversalReference): identical row sets on the TPC-H graph, for point
+  // start sets and for more than 128 starts ---
+
+  private def bulkCustomers(g: graft.graph.PropertyGraph) =
+    g.nodesByLabel("Customer").select("id").orderBy("id").limit(200)
 
   private def sorted(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq.map {
@@ -96,12 +100,15 @@ class Round3FeatureSpec extends AnyFunSuite {
     val g = GraphQueries.graph(spark, sf)
     val regions = g.nodesByLabel("Region").select("id")
     assert(sorted(Expand.shortestPaths(g, regions, None, 2, Expand.In))
-      == sorted(Expand.shortestPathsDf(g, regions, None, 2, Expand.In)))
+      == sorted(TraversalReference.shortestPaths(g, regions, None, 2, Expand.In)))
     val cust = g.nodesByLabel("Customer").select("id").limit(40)
     assert(sorted(Expand.shortestPaths(g, cust, None, 2, Expand.Out))
-      == sorted(Expand.shortestPathsDf(g, cust, None, 2, Expand.Out)))
+      == sorted(TraversalReference.shortestPaths(g, cust, None, 2, Expand.Out)))
     assert(sorted(Expand.shortestPaths(g, cust, Some("PLACED"), 2, Expand.Out))
-      == sorted(Expand.shortestPathsDf(g, cust, Some("PLACED"), 2, Expand.Out)))
+      == sorted(TraversalReference.shortestPaths(g, cust, Some("PLACED"), 2, Expand.Out)))
+    val bulk = bulkCustomers(g)
+    assert(sorted(Expand.shortestPaths(g, bulk, None, 2, Expand.Out))
+      == sorted(TraversalReference.shortestPaths(g, bulk, None, 2, Expand.Out)))
   }
 
   test("BfsRdd varLengthPairs matches the DataFrame var-length expand") {
@@ -110,11 +117,14 @@ class Round3FeatureSpec extends AnyFunSuite {
     val regions = g.nodesByLabel("Region").select("id")
     for ((mn, mx) <- Seq((1, 2), (0, 2), (2, 3)))
       assert(sorted(Expand.varLengthExpand(g, regions, None, mn, mx, Expand.In))
-        == sorted(Expand.varLengthExpandDf(g, regions, None, mn, mx, Expand.In)),
+        == sorted(TraversalReference.varLengthExpand(g, regions, None, mn, mx, Expand.In)),
         s"[*$mn..$mx]")
     val cust = g.nodesByLabel("Customer").select("id").limit(20)
     assert(sorted(Expand.varLengthExpand(g, cust, Some("PLACED"), 1, 1))
-      == sorted(Expand.varLengthExpandDf(g, cust, Some("PLACED"), 1, 1)))
+      == sorted(TraversalReference.varLengthExpand(g, cust, Some("PLACED"), 1, 1)))
+    val bulk = bulkCustomers(g)
+    assert(sorted(Expand.varLengthExpand(g, bulk, None, 1, 2))
+      == sorted(TraversalReference.varLengthExpand(g, bulk, None, 1, 2)))
   }
 
   test("BfsRdd allShortestPaths (single + multi) matches the DataFrame BFS") {
@@ -124,16 +134,19 @@ class Round3FeatureSpec extends AnyFunSuite {
     val g = GraphQueries.graph(spark, sf)
     // single pair, stop at first hit
     assert(sorted(Expand.allShortestPaths(g, "Customer:102", "Part:1784", None, 4))
-      == sorted(Expand.allShortestPathsDf(g, "Customer:102", "Part:1784", None, 4)))
+      == sorted(TraversalReference.allShortestPaths(g, "Customer:102", "Part:1784", None, 4)))
     // multi: one start, many targets (the q_cypher_shortest_single shape)
     val starts = Seq("Customer:1").toDF("id")
     val targets = g.nodesByLabel("Region").select("id")
     assert(sorted(Expand.allShortestPathsMulti(g, starts, targets, None, 4))
-      == sorted(Expand.allShortestPathsMultiDf(g, starts, targets, None, 4)))
+      == sorted(TraversalReference.allShortestPathsMulti(g, starts, targets, None, 4)))
     // Both direction exercises the union-orientation pair adjacency
     val t2 = Seq("Nation:3").toDF("id")
     assert(sorted(Expand.allShortestPathsMulti(g, starts, t2, None, 3, Expand.Both))
-      == sorted(Expand.allShortestPathsMultiDf(g, starts, t2, None, 3, Expand.Both)))
+      == sorted(TraversalReference.allShortestPathsMulti(g, starts, t2, None, 3, Expand.Both)))
+    val bulk = bulkCustomers(g)
+    assert(sorted(Expand.allShortestPathsMulti(g, bulk, targets, None, 4))
+      == sorted(TraversalReference.allShortestPathsMulti(g, bulk, targets, None, 4)))
     // unreachable endpoints → empty
     assert(Expand.allShortestPaths(g, "Part:1", "Customer:1", None, 3).count() == 0)
   }

@@ -315,4 +315,31 @@ class SearchCallSpec extends AnyFunSuite {
          YIELD node, score RETURN node, score""", Map("qv" -> qv)).collect()
     assert(plain.length == 5)
   }
+
+  test("hybrid mmrLambda over string node ids keeps the ids and their type") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(8L)
+    val mem = (0 until 30).map(i =>
+      (s"Memory:$i", Seq.fill(3)(rnd.nextDouble()), s"memory graph note $i"))
+    val df = mem.toDF("id", "embedding", "text")
+    SearchIndexes.registerVector(SearchIndexes.VectorIdx(
+      "mmr_str_emb", () => df.select("id", "embedding"), "id", "embedding", "DATASET"))
+    SearchIndexes.registerFulltext(SearchIndexes.FulltextIdx(
+      "mmr_str_ft", () => df.select("id", "text"), "id", "text", "DATASET"))
+    val rows = Cypher.run(g,
+      """CALL db.index.hybrid.queryNodes('mmr_str_emb', 'mmr_str_ft', 5, 'memory graph', $qv,
+           {mmrLambda: 0.5, candidateLimit: 30})
+         YIELD node, score RETURN node, score""", Map("qv" -> mem.head._2)).collect()
+    assert(rows.length == 5 && rows.forall(_.getString(0).startsWith("Memory:")))
+    // the same candidates under their numeric ids select the same nodes
+    val cands = mem.zipWithIndex.map { case ((id, e, _), i) => (id, i.toLong, 1.0 / (61 + i), e) }
+    val byStr = graft.search.Mmr.select(
+      cands.map(c => (c._1, c._3, c._4)).toDF("id", "rel", "embedding"), 5, 0.5)
+    val byLong = graft.search.Mmr.select(
+      cands.map(c => (c._2, c._3, c._4)).toDF("id", "rel", "embedding"), 5, 0.5)
+    assert(byStr.schema("id").dataType == org.apache.spark.sql.types.StringType)
+    assert(byLong.schema("id").dataType == org.apache.spark.sql.types.LongType)
+    assert(byStr.collect().map(_.getString(1)).toSeq ==
+      byLong.collect().map(r => s"Memory:${r.getLong(1)}").toSeq)
+  }
 }

@@ -118,6 +118,9 @@ class SearchJobsSpec extends AnyFunSuite {
     info(s"searchTextDetailed: $callJobs jobs, its legs alone $legJobs, reading the hits $hitJobs")
     assert(callJobs <= legJobs, s"searchTextDetailed took $callJobs jobs, its legs $legJobs")
     assert(rows.length == 5)
+    // the node rows of the fused ids are probed and broadcast, not joined
+    // by a shuffle with the whole node table
+    assert(hitJobs < 4, s"reading the hits took $hitJobs jobs")
     rows.foreach(r => assert(r.getDouble(3) == r.getDouble(4) && r.getInt(5) + r.getInt(6) > 0))
     assert(rows.map(_.getDouble(3)).toSeq == rows.map(_.getDouble(3)).toSeq.sorted.reverse)
   }

@@ -4,8 +4,13 @@
 # drift hits both arms equally. Usage:
 #   tools/run_ab.sh <classesA> <classesB> <runsPerArm> <outPrefix>
 # Emits <outPrefix>_{a,b}_<i>.json ; compare with tools/ab_compare.py.
+# Cores: SPARK_GRAFT_CPUS if set, else nproc. Jars: $SPARK_HOME/jars.
+# SPARK_GRAFT_BENCH_ONLY (a comma-separated row list) and SPARK_GRAFT_SF_DIR
+# (graft.Bench's default: sf0.1) pass through.
 set -e
 A="$1"; B="$2"; N="${3:-3}"; OUT="${4:-/tmp/ab}"
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+JARS="${SPARK_HOME:?SPARK_HOME must name the Spark install}/jars"
 JOPTS="--add-opens=java.base/java.lang=ALL-UNNAMED \
 --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
 --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
@@ -21,10 +26,10 @@ JOPTS="--add-opens=java.base/java.lang=ALL-UNNAMED \
 --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
 -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx8g"
 run() { # $1 classes, $2 out
-  SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
+  SPARK_GRAFT_CPUS="$CPUS" \
   SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_BENCH_WARMUP=0 \
   SPARK_GRAFT_BENCH_OUT="$2" \
-  java $JOPTS -cp "$1:/opt/spark/jars/*" graft.Bench > /dev/null 2>"$2.err" || \
+  java $JOPTS -cp "$1:$JARS/*" graft.Bench > /dev/null 2>"$2.err" || \
     echo "run $2 exited nonzero (see $2.err)"
 }
 for i in $(seq 1 "$N"); do
